@@ -1,12 +1,16 @@
 """Timing, CPU accounting and host-window probes for the ingest benchmark.
 
 CPU cost is read next to every wall time because on a shared host the wall
-time of one poll swings far more than the CPU it burns: the JVM's CPU comes
-from ``/proc/<jvm pid>/stat`` (all threads, exited ones included) and the
-benchmark's own from ``os.times()``. The JIT compiler and GC threads'
-shares are split off and reported on their own: for minutes after start
-the compilers work in bursts, and a concurrent GC cycle runs when the heap
-says so, both landing on whichever operation happens to be running.
+time of one poll swings far more than the CPU it burns. CPU comes in
+nanoseconds from the kernel: the JVM's from its process CPU clock
+(``clock_gettime`` on the clock id of another process, which keeps the time
+of exited threads), single JVM threads' from
+``/proc/<pid>/task/<tid>/schedstat`` and the benchmark's own from
+``time.process_time()``. ``/proc/<pid>/stat`` counts 10 ms ticks, in which
+a 150 ms scan would read in steps of 7%. The JIT compiler and GC threads'
+shares are split off and reported on their own: for minutes after start the
+compilers work in bursts, and a concurrent GC cycle runs when the heap says
+so, both landing on whichever operation happens to be running.
 """
 
 from __future__ import annotations
@@ -17,6 +21,8 @@ import time
 from dataclasses import dataclass, field
 
 CLK_TCK = os.sysconf("SC_CLK_TCK")
+# Linux encodes a process CPU clock id as (~pid << 3) | 2 (CPUCLOCK_SCHED)
+_CPUCLOCK_SCHED = 2
 
 
 def median(xs: list[float]) -> float:
@@ -34,12 +40,18 @@ def tail_percentile(xs: list[float], beyond: int = 10) -> tuple[float, float] | 
     return 100.0 * (n - beyond) / n, ordered[n - beyond - 1]
 
 
-def stat_cpu_s(path: str) -> float:
-    """user+system CPU seconds from a ``/proc/.../stat`` file."""
-    with open(path) as f:
-        s = f.read()
-    rest = s[s.rfind(")") + 2:].split()
-    return (int(rest[11]) + int(rest[12])) / CLK_TCK
+def process_cpu_s(pid: int) -> float:
+    """CPU seconds of every thread process ``pid`` ever ran (the kernel's
+    process CPU clock, as ``clock_getcpuclockid`` would name it)."""
+    return time.clock_gettime(((~pid) << 3) | _CPUCLOCK_SCHED)
+
+
+def thread_cpu_s(pid: int, tid: int) -> float:
+    """CPU seconds of thread ``tid`` of process ``pid`` (the kernel lets a
+    process read only its own threads' CPU clocks, so this reads the run
+    time ``schedstat`` reports); FileNotFoundError once it has exited."""
+    with open(f"/proc/{pid}/task/{tid}/schedstat") as f:
+        return int(f.read().split()[0]) / 1e9
 
 
 def _background(comm: str) -> str | None:
@@ -58,20 +70,20 @@ class JvmCpu:
     def __init__(self, pid: int) -> None:
         self.pid = pid
         self.task = f"/proc/{pid}/task"
-        self.kind: dict[str, str | None] = {}
-        self.last: dict[str, tuple[str, float]] = {}
+        self.kind: dict[int, str | None] = {}
+        self.last: dict[int, tuple[str, float]] = {}
 
     def read(self) -> tuple[float, float, float]:
         """(CPU of all threads but JIT and GC, JIT compiler CPU, GC CPU)"""
-        total = stat_cpu_s(f"/proc/{self.pid}/stat")
-        for tid in os.listdir(self.task):
+        total = process_cpu_s(self.pid)
+        for tid in map(int, os.listdir(self.task)):
             try:
                 if tid not in self.kind:
                     with open(f"{self.task}/{tid}/comm") as f:
                         self.kind[tid] = _background(f.read())
                 if self.kind[tid]:
-                    self.last[tid] = (self.kind[tid], stat_cpu_s(f"{self.task}/{tid}/stat"))
-            except FileNotFoundError:  # the thread exited meanwhile
+                    self.last[tid] = (self.kind[tid], thread_cpu_s(self.pid, tid))
+            except (FileNotFoundError, ProcessLookupError):  # the thread exited meanwhile
                 continue
         jit = sum(c for k, c in self.last.values() if k == "jit")
         gc = sum(c for k, c in self.last.values() if k == "gc")
@@ -79,8 +91,8 @@ class JvmCpu:
 
 
 def driver_cpu_s() -> float:
-    t = os.times()
-    return t.user + t.system
+    """CPU seconds of this process, all threads."""
+    return time.process_time()
 
 
 def process_age_s() -> float:

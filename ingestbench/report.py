@@ -9,21 +9,29 @@ from __future__ import annotations
 from ingestbench.measure import Recorder, median, tail_percentile
 from ingestbench.trace import LAYERS, Span, inclusive_jobs, self_ms
 
-# name, unit, better, bound. On a shared 4-vCPU host the run-to-run
-# quartile spread of the timings reached 0.05-0.19 across ten seeds, so
-# they get the widest bound; write_amp is a byte ratio and barely moves.
+# name, unit, better, bound. Only costs that a busy neighbour on a shared
+# host barely moves are bounded: the CPU each operation burns, bytes
+# written, and set-up time (the largest bound). Wall times swing with the
+# host: on a 4-vCPU VM, back-to-back poll_cow runs read a median poll of
+# 1.3 s with 0.6 s of steal time and 3.5 s with 60 s of it, the slowdown
+# lasting whole runs, so no in-run median evens it out. They are
+# printed and kept in the artifact (``WALL``) and, per layer, as
+# ``bench.*.ms``.
 E2E = [
     ("setup_s", "s", "lower", 0.25),
-    ("full_load_events_per_s", "1/s", "higher", 0.25),
     ("full_load_cpu_us_per_event", "us", "lower", 0.25),
-    ("apply_events_per_s", "1/s", "higher", 0.25),
     ("apply_cpu_us_per_event", "us", "lower", 0.25),
-    ("apply_p50_ms", "ms", "lower", 0.25),
-    ("scan_p50_ms", "ms", "lower", 0.25),
     ("scan_cpu_ms", "ms", "lower", 0.25),
-    ("lookup_p50_ms", "ms", "lower", 0.25),
     ("lookup_cpu_ms", "ms", "lower", 0.25),
     ("write_amp", "ratio", "lower", 0.1),
+]
+# name, unit: wall-time results, reported without a bound
+WALL = [
+    ("full_load_events_per_s", "1/s"),
+    ("apply_events_per_s", "1/s"),
+    ("apply_p50_ms", "ms"),
+    ("scan_p50_ms", "ms"),
+    ("lookup_p50_ms", "ms"),
 ]
 
 BENCH_SPANS = ["bench.full_load", "bench.apply", "bench.drain", "bench.scan", "bench.lookup"]
@@ -52,26 +60,27 @@ PER_LAYER = (
 
 
 def e2e(rec: Recorder, setup_s: float, write_amp: list[tuple[int, int]]) -> dict:
-    """Every E2E metric, plus the tail percentile the apply sample supports."""
+    """Every E2E metric; the WALL results, apply count, tail percentile and
+    failed share go to ``extra``. Per-operation costs are medians over the
+    run's operations of that kind."""
     full, apply = rec.get("full_load"), rec.get("apply")
     scan, lookup = rec.get("scan"), rec.get("lookup")
-    events = sum(s.events for s in apply)
     wall = [s.wall_s * 1000 for s in apply]
     tail = tail_percentile(wall)
     vals = {
         "setup_s": setup_s,
-        "full_load_events_per_s": median([s.events / s.wall_s for s in full]),
         "full_load_cpu_us_per_event": median([s.cpu_s / s.events * 1e6 for s in full]),
-        "apply_events_per_s": events / sum(s.wall_s for s in apply),
-        "apply_cpu_us_per_event": sum(s.cpu_s for s in apply) / events * 1e6,
-        "apply_p50_ms": median(wall),
-        "scan_p50_ms": median([s.wall_s * 1000 for s in scan]),
+        "apply_cpu_us_per_event": median([s.cpu_s / s.events * 1e6 for s in apply]),
         "scan_cpu_ms": median([s.cpu_s * 1000 for s in scan]),
-        "lookup_p50_ms": median([s.wall_s * 1000 for s in lookup]),
         "lookup_cpu_ms": median([s.cpu_s * 1000 for s in lookup]),
         "write_amp": sum(b for b, _ in write_amp) / sum(l for _, l in write_amp),
     }
     extra = {
+        "full_load_events_per_s": median([s.events / s.wall_s for s in full]),
+        "apply_events_per_s": sum(s.events for s in apply) / sum(s.wall_s for s in apply),
+        "apply_p50_ms": median(wall),
+        "scan_p50_ms": median([s.wall_s * 1000 for s in scan]),
+        "lookup_p50_ms": median([s.wall_s * 1000 for s in lookup]),
         "apply_n": len(wall),
         "apply_tail_ms": None if tail is None else {"percentile": round(tail[0], 1),
                                                     "value": tail[1], "n": len(wall)},

@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """rdl-spark ingest benchmark: one workload, one seed, one run.
 
-    python3 ingestbench/run.py --workload poll_cow --seed 1 --seconds 15 --trace 0
+    python3 ingestbench/run.py --workload poll_cow --seed 1 --seconds 8 --trace 0
 
 Run from the repository root. Set-up starts a ``local[n]`` session
-(n = min(4, usable cpus)), generates the seeded change log and runs one untimed
+(n = min(2, usable cpus)), generates the seeded change log and runs one untimed
 warm-up; then whole cycles of the workload run until ``--seconds`` have
 passed, and the last cycle's table is checked against the DuckDB LWW
 oracle. ``--trace 0`` prints the end-to-end metrics,
@@ -35,6 +35,11 @@ HEAD_EVENTS = 100_000
 SEG_EVENTS = 5_000
 N_SEGS = 40  # more than a stream run delivers in 60 s
 DRIVER_MEM = "2g"
+# Spark task threads. On a 4-vCPU host this leaves CPUs to the JIT compiler
+# threads (busy for minutes after start), GC and the Python driver; with
+# local[4] they all compete, and CPU per operation read higher and spread
+# twice as wide across seeds.
+CORES = 2
 # fixed JIT compiler threads: a dynamically started one that exits between
 # two readings would take its CPU out of the JIT share (measure.JvmCpu)
 JVM_OPTS = "-XX:-UsePerfData -XX:-UseDynamicNumberOfCompilerThreads"
@@ -51,7 +56,7 @@ def start_session(work: str) -> tuple[object, dict]:
     os.environ["TMPDIR"] = tmp
     from relational_data_loader_spark.session import get_spark
 
-    cores = min(4, len(os.sched_getaffinity(0)))
+    cores = min(CORES, len(os.sched_getaffinity(0)))
     extra = {
         "spark.ui.showConsoleProgress": "false",
         # job groups of every span must survive until they are counted
@@ -130,7 +135,9 @@ def main(argv: list[str] | None = None) -> int:
             install(tracer)
         ctx = workloads.Context(spark, Recorder(jvm, tracer), work,
                                 workloads.lookup_keys(args.seed, n_convs), tracer)
+        t1 = time.perf_counter()
         workloads.warm_up(ctx, wl, head, segs)
+        warm_up_s = time.perf_counter() - t1
         rec = Recorder(jvm, tracer)
         ctx.rec, ctx.cycles, ctx.write_amp = rec, 0, []
 
@@ -175,9 +182,12 @@ def main(argv: list[str] | None = None) -> int:
     artifact = {
         "workload": wl.name, "why": wl.why, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "cycles": ctx.cycles, "session": session_conf,
+        "setup_parts_s": {"get_spark": get_spark_ms / 1000, "warm_up": warm_up_s},
         "window": window.close(), "oracle": verdict,
         "attempted": rec.attempted, "failed": rec.failed,
         "e2e": result["metrics"], "e2e_extra": result["extra"],
+        "samples": {k: [[v.wall_s, v.jvm_s, v.driver_s, v.events] for v in vs]
+                    for k, vs in rec.samples.items()},
         "sizes": {"head_events": HEAD_EVENTS, "seg_events": SEG_EVENTS,
                   "segs_per_poll": workloads.SEGS_PER_POLL,
                   "polls_per_cycle": workloads.POLLS_PER_CYCLE,
@@ -189,9 +199,12 @@ def main(argv: list[str] | None = None) -> int:
         untraced = os.path.join(out_dir, f"{wl.name}-seed{args.seed}-trace0.json")
         if os.path.exists(untraced):
             with open(untraced) as f:
-                base = json.load(f)["e2e"]
+                base = json.load(f)
+            ours = {**result["metrics"], **result["extra"]}
+            base = {**base["e2e"], **base["e2e_extra"]}
             artifact["tracing_overhead"] = {
-                k: result["metrics"][k] - base[k] for k in base if k in result["metrics"]}
+                k: ours[k] - base[k] for k in [n for n, *_ in report.E2E + report.WALL]
+                if finite(ours.get(k)) is not None and finite(base.get(k)) is not None}
         with open(os.path.join(out_dir, f"layers-{tag}.md"), "w") as f:
             f.write(f"# {wl.name} seed {args.seed}: per-layer table (traced run)\n\n")
             f.write(report.layer_table(layer_vals))
@@ -219,6 +232,9 @@ def main(argv: list[str] | None = None) -> int:
         print("tracing overhead (traced - untraced): " + json.dumps(artifact["tracing_overhead"]))
     for n, m in metrics.items():
         print(f"  {n} = {m['value']} {m['unit']}")
+    if not args.trace:
+        for n, u in report.WALL:
+            print(f"  {n} = {result['extra'].get(n)} {u} (wall time, no bound)")
     print(json.dumps({"correct": bool(verdict["ok"]) and rec.failed == 0,
                       "attempted": rec.attempted, "failed": rec.failed, "metrics": metrics}))
     return 0

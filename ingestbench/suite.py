@@ -18,6 +18,9 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from ingestbench import report  # noqa: E402
 
 
 def run(workload: str, seed: int, seconds: int, trace: int) -> dict:
@@ -57,6 +60,10 @@ def main() -> int:
         for m, v in plain["metrics"].items():
             over = traced.get("tracing_overhead", {}).get(m)
             lines.append(f"| {m} | {v['value']:.6g} | {v['unit']} | "
+                         f"{'' if over is None else f'{over:+.4g}'} |")
+        for m, unit in report.WALL:
+            over = traced.get("tracing_overhead", {}).get(m)
+            lines.append(f"| {m} (wall, no bound) | {untraced['e2e_extra'][m]:.6g} | {unit} | "
                          f"{'' if over is None else f'{over:+.4g}'} |")
         lines += ["", f"apply tail: {untraced['e2e_extra'].get('apply_tail_ms')} "
                   f"({untraced['e2e_extra'].get('apply_n')} applies)",

@@ -7,7 +7,9 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
+import threading
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -17,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ingestbench import oracle, report, workloads  # noqa: E402
 from ingestbench.changelog import change_log, split  # noqa: E402
-from ingestbench.measure import tail_percentile  # noqa: E402
+from ingestbench.measure import process_cpu_s, tail_percentile, thread_cpu_s  # noqa: E402
 from ingestbench.trace import GROUP_PROPS, Span, Tracer, inclusive_jobs, job_group, self_ms  # noqa: E402
 
 
@@ -38,6 +40,37 @@ def test_tail_is_highest_percentile_with_ten_samples_beyond(n, percentile, value
 
 def test_tail_needs_more_than_ten_samples():
     assert tail_percentile(list(range(10))) is None
+
+
+# ---- CPU clocks -----------------------------------------------------------------
+
+
+def test_process_cpu_clock_keeps_the_time_of_exited_threads():
+    # the child burns CPU in a thread that has exited by the time it is read
+    code = ("import threading, time\n"
+            "def burn():\n"
+            "    t = time.thread_time()\n"
+            "    while time.thread_time() - t < 0.3: pass\n"
+            "th = threading.Thread(target=burn); th.start(); th.join()\n"
+            "print(th.native_id, flush=True); time.sleep(30)\n")
+    child = subprocess.Popen([sys.executable, "-c", code], stdout=subprocess.PIPE, text=True)
+    try:
+        int(child.stdout.readline())
+        assert 0.3 <= process_cpu_s(child.pid) < 5
+    finally:
+        child.kill()
+        child.wait()
+
+
+def test_thread_cpu_reads_one_thread_only():
+    tid = threading.get_native_id()
+    t0 = thread_cpu_s(os.getpid(), tid)
+    other = threading.Thread(target=lambda: sum(range(3_000_000)))
+    other.start()
+    other.join()
+    mine = thread_cpu_s(os.getpid(), tid) - t0
+    sum(range(3_000_000))
+    assert thread_cpu_s(os.getpid(), tid) - t0 - mine > 5 * mine
 
 
 # ---- span arithmetic ----------------------------------------------------------

@@ -34,6 +34,7 @@ STREAM_WARM_STEPS = 6      # warm-up deliveries: one compaction, two reads;
 HOT_KEYS = 4               # lookup batch: the first 4 (hot) conv ids ...
 COLD_KEYS = 4              # ... and 4 seeded ones from the cold range
 WARM_HEAD_EVENTS = 10_000  # the poll warm-up cycle's smaller head
+WARM_CYCLES = 2            # whole poll cycles after it, untimed
 
 
 @dataclass
@@ -326,13 +327,15 @@ def run_cycle(ctx: Context, wl: Workload, head: pa.Table, segs: list[pa.Table]) 
 def warm_up(ctx: Context, wl: Workload, head: pa.Table, segs: list[pa.Table]) -> None:
     """Untimed: the workload's plan shapes, compaction and reads included.
     A cold JVM runs the first full refresh several times slower than a warm
-    one, and the cycle after that is still a quarter slower than later
-    ones, so the poll warm-up runs a small-head cycle and then a whole one;
-    the stream's first deliveries are its warm-up."""
+    one, and each of the next poll cycles still costs about a tenth more CPU
+    than the one after it, so the poll warm-up runs a small-head cycle and
+    then WARM_CYCLES whole ones; the stream's first deliveries are its
+    warm-up."""
     if wl.stream:
         ctx.stream = StreamRun(ctx, wl.merge_mode, segs)
         for _ in range(STREAM_WARM_STEPS):
             ctx.stream.deliver()
     else:
         poll_cycle(ctx, wl.merge_mode, head.slice(0, WARM_HEAD_EVENTS), segs)
-        poll_cycle(ctx, wl.merge_mode, head, segs)
+        for _ in range(WARM_CYCLES):
+            poll_cycle(ctx, wl.merge_mode, head, segs)
