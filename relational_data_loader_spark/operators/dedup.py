@@ -587,7 +587,7 @@ def dedup_clusters(
     # pairs feeds BOTH union branches: without its own cache the entire
     # upstream pipeline (for near-dup input: LSH + Jaccard verification)
     # materializes twice — measured 2× the pipeline cost at sf0.1. Cache
-    # it only until the symmetric edge set is itself cached, then drop.
+    # it only until the first action has filled the edge cache, then drop.
     pairs = pairs.persist()
     src = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     # hash-partition the cached edge set by the join key ONCE (r6): every
@@ -617,7 +617,6 @@ def dedup_clusters(
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=False)
     )
-    pairs.unpersist()  # edges materialized by the labels checkpoint above
     # convergence probe, dispatched on the label TYPE (ADVICE r4: the sum
     # probe assumed numeric ids — string ids crashed under ANSI casts or,
     # worse, NULL-summed into a one-round early exit and silently wrong
@@ -639,7 +638,7 @@ def dedup_clusters(
     prev_sum = (
         labels.agg(F.sum("label")).collect()[0][0] if numeric_ids else None
     )
-    for _ in range(max_iterations):
+    for round_no in range(max_iterations):
         prop = edges.join(labels, edges.src == labels.node).select(
             F.col("dst").alias("node"), "label"
         )
@@ -665,10 +664,15 @@ def dedup_clusters(
                 .count()
                 == 0
             )
+        if round_no == 0:
+            # the lazy checkpoints above are filled by the first probe (the
+            # prev_sum probe, or this round's), and with them edges
+            pairs.unpersist()
         _release_checkpoint(labels)  # superseded round: free its blocks now
         labels = new
         if converged:
             break
+    pairs.unpersist()  # no-op unless the loop never ran
     edges.unpersist()  # labels are checkpointed: no lineage back to edges
     return (
         docs.select(F.col(id_col).alias("doc_id"))

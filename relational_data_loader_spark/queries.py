@@ -219,7 +219,8 @@ WHERE rn = 1 AND event_type = '{DELETE_OP}'
 
 
 def q_cdc_ct_probe(spark, sf):
-    """Change-tracking probe (S3): current + min-valid version, footer-only."""
+    """Change-tracking probe (S3): current + min-valid version (a full
+    scan of the lsn column; DSv1 parquet reads skip aggregate pushdown)."""
     ev = _t(spark, sf, "events")
     return ev.agg(
         F.min("event_id").alias("min_valid_lsn"),

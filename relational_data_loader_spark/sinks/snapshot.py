@@ -86,7 +86,7 @@ from glob import glob
 from typing import Any
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -549,31 +549,54 @@ class SnapshotTable:
 
     # ---- write paths ---------------------------------------------------------
 
-    def _write_buckets(
-        self, df: DataFrame, n_buckets: int | None = None,
-        pre_clustered: bool = False,
-    ) -> dict[str, list[str]]:
-        """Write df grouped into per-bucket parquet files under a fresh commit dir.
+    def _clustered(
+        self, df: DataFrame, layout: int, lww: list[Column] | None = None
+    ) -> DataFrame:
+        """Cluster ``df`` by storage bucket for a bucketed write — the one
+        exchange every write path shares.
 
-        Hash-repartitioning on ``_bucket`` before ``partitionBy`` is the
-        Iceberg "hash write distribution" pattern: each task holds whole
-        buckets, so a commit produces ~1 file per touched bucket instead of
-        (upstream partitions × buckets) small files. The extra shuffle is
-        strictly cheaper than the file-open storm it prevents — measured
+        Adds ``_bucket`` (``bucket_expr`` under ``layout``) and
+        hash-partitions on it with NO fixed partition count: the session's
+        ``spark.sql.shuffle.partitions`` applies and AQE coalesces the
+        exchange by its measured bytes, so write width follows data volume,
+        not the bucket count (a 5k-row delta into 16 buckets runs a couple
+        of write tasks, not 16 mostly-idle ones). Files stay one per
+        touched bucket: a bucket id hashes to exactly one shuffle partition,
+        and coalescing only merges whole partitions.
+
+        ``lww`` (the site's ordering) keeps the top-1 row per primary key on
+        the same exchange: the window's ClusteredDistribution([_bucket,
+        pk...]) is satisfied by HashPartitioning([_bucket]) (subset rule;
+        ``_bucket`` is a function of the bucket key, so it doesn't change
+        the groups), and its sort leads with ``_bucket``, so the write
+        needs no exchange or sort of its own.
+        """
+        clustered = df.withColumn(
+            _BUCKET_COL, bucket_expr(self.bucket_key, layout)
+        ).repartition(F.col(_BUCKET_COL))
+        if lww is None:
+            return clustered
+        w = Window.partitionBy(_BUCKET_COL, *self.spec.primary_keys).orderBy(*lww)
+        return (
+            clustered.withColumn("_rdl_rn", F.row_number().over(w))
+            .filter(F.col("_rdl_rn") == 1)
+            .drop("_rdl_rn")
+        )
+
+    def _write_buckets(self, clustered: DataFrame) -> dict[str, list[str]]:
+        """Write ``_clustered`` output as per-bucket parquet files under a
+        fresh commit dir.
+
+        Clustering on ``_bucket`` before ``partitionBy`` is the Iceberg
+        "hash write distribution" pattern: every bucket lands in exactly
+        one write task, so a commit produces ~1 file per touched bucket
+        instead of (upstream partitions × buckets) small files. The shuffle
+        is strictly cheaper than the file-open storm it prevents — measured
         here: 1024 files → 64 files per commit, and every later MERGE reads
         the touched buckets back, so file count compounds per epoch.
-
-        ``pre_clustered``: the caller vouches the input already carries
-        ``_bucket`` AND is hash-partitioned on it (merge's single-shuffle
-        plan) — the write then adds NO exchange at all.
         """
-        n = self.n_buckets if n_buckets is None else n_buckets
         commit_dir = os.path.join(self.path, "data", uuid.uuid4().hex)
-        if not pre_clustered:
-            df = df.withColumn(
-                _BUCKET_COL, bucket_expr(self.bucket_key, n)
-            ).repartition(n, F.col(_BUCKET_COL))
-        df.write.partitionBy(_BUCKET_COL).parquet(commit_dir)
+        clustered.write.partitionBy(_BUCKET_COL).parquet(commit_dir)
         buckets: dict[str, list[str]] = {}
         for f in glob(os.path.join(commit_dir, f"{_BUCKET_COL}=*", "*.parquet")):
             b = os.path.basename(os.path.dirname(f)).split("=", 1)[1]
@@ -597,7 +620,7 @@ class SnapshotTable:
             .withColumn(LSN_COL, F.lit(int(watermark)).cast("long"))
             .withColumn(DELETED_COL, F.lit(False))
         )
-        buckets = self._write_buckets(stamped)
+        buckets = self._write_buckets(self._clustered(stamped, self.n_buckets))
         return self._commit_full_manifest(buckets, epoch_id, watermark, namespace)
 
     def full_refresh_from_envelopes(
@@ -618,23 +641,19 @@ class SnapshotTable:
 
         Returns the survivor row count, observed during the write itself
         (no second scan). Width note: both this and the unfused path write
-        through ``n_buckets`` partitions — at 10^10 rows ``target_buckets``
-        is the initial-load parallelism knob, set it accordingly.
+        through ``_clustered``'s exchange, sized by the session's shuffle
+        partitions and AQE's byte-based coalescing; ``target_buckets`` only
+        caps it (a bucket never splits across tasks), so at 10^10 rows set
+        both ``target_buckets`` and ``spark.sql.shuffle.partitions`` to at
+        least the cluster's task slots.
         """
         from pyspark.sql import Observation
 
         spec = self.spec
         lsn_col, op_col = spec.lsn_column, spec.op_column
-        env = envelopes.withColumn(
-            _BUCKET_COL, bucket_expr(self.bucket_key, self.n_buckets)
+        survivors = self._clustered(
+            envelopes, self.n_buckets, lww=[F.desc(lsn_col)]
         )
-        clustered = env.repartition(self.n_buckets, F.col(_BUCKET_COL))
-        w = Window.partitionBy(_BUCKET_COL, *spec.primary_keys).orderBy(
-            F.desc(lsn_col)
-        )
-        survivors = clustered.withColumn(
-            "_rdl_rn", F.row_number().over(w)
-        ).filter(F.col("_rdl_rn") == 1)
         # Quarantine mode breaks the baseline premise "this snapshot
         # subsumes every event ≤ watermark": the dead-lettered events are
         # excluded by construction, and replay_dlq must later be able to
@@ -675,7 +694,7 @@ class SnapshotTable:
                 ).alias("n"),
             )
         )
-        buckets = self._write_buckets(stamped, pre_clustered=True)
+        buckets = self._write_buckets(stamped)
         self._commit_full_manifest(buckets, epoch_id, watermark, namespace)
         return int(obs.get["n"] or 0)
 
@@ -811,9 +830,11 @@ class SnapshotTable:
         """Point reads by bucket key: visible rows whose ``bucket_key`` is in
         ``values``, reading ONLY the buckets those keys hash into — the
         O(keys) lookup path, never a table scan. The bucket ids come from
-        one tiny control-plane job (the hash must be the JVM's xxhash64,
-        bit-identical to the layout's ``bucket_expr``; re-implementing it
-        driver-side would be a silent-desync trap)."""
+        ``bucket_expr`` over the keys as a parameterized ``VALUES`` relation
+        cast to the key type: the hash must be the JVM's xxhash64 of that
+        type (re-implementing it driver-side would be a silent-desync
+        trap), and a local relation evaluates on the driver with no Spark
+        job."""
         m = self.current_manifest()
         if m is None:
             return self.spark.createDataFrame([], self.spec.destination_schema())
@@ -823,13 +844,18 @@ class SnapshotTable:
             for f in self.spec.destination_schema().fields
             if f.name == self.bucket_key
         )
-        kdf = self.spark.createDataFrame(
-            [(v,) for v in values], T.StructType([T.StructField(self.bucket_key, key_type)])
-        )
-        buckets = {
-            str(r["b"])
-            for r in kdf.select(bucket_expr(self.bucket_key, layout).alias("b")).collect()
-        }
+        buckets: set[str] = set()
+        if values:
+            keys = self.spark.sql(
+                f"SELECT CAST(k AS {key_type.simpleString()}) AS k FROM VALUES "
+                + ", ".join(f"(:k{i})" for i in range(len(values)))
+                + " AS v(k)",
+                args={f"k{i}": v for i, v in enumerate(values)},
+            )
+            buckets = {
+                str(r["b"])
+                for r in keys.select(bucket_expr("k", layout).alias("b")).collect()
+            }
         deltas: dict[str, list[str]] = m.get("deltas") or {}
         # bucket-scoped sub-manifest: the fold (if the bucket has pending
         # deltas) runs over just the selected buckets' files — point lookups
@@ -1429,17 +1455,8 @@ class SnapshotTable:
     ) -> DataFrame:
         """SINGLE-SHUFFLE merged winners over target ∪ batch (round 3).
 
-        Cluster the union by the storage bucket ONCE, and let both the LWW
-        window and the bucketed write ride that one exchange:
-        - the window's required ClusteredDistribution([_bucket, pk...]) is
-          satisfied by HashPartitioning([_bucket]) (subset rule), so it
-          plans as a sort with NO second shuffle; prefixing _bucket to the
-          partition spec doesn't change groups (_bucket is a function of
-          the first PK column);
-        - the write (``_write_buckets(pre_clustered=True)``) sees data
-          already clustered AND sorted by _bucket (the window sort's
-          leading key), so ``partitionBy`` streams one file at a time with
-          no exchange.
+        The union is clustered by the storage bucket ONCE (``_clustered``),
+        and both the LWW window and the bucketed write ride that exchange.
         Round 2 shipped two shuffles here (PK window with map-side
         WindowGroupLimit Partial → bucket-write repartition). Measured
         same-window A/B at 8M events, local[16], RAM-backed: fused 656k
@@ -1459,21 +1476,13 @@ class SnapshotTable:
         pre-nets a pathological hot-PK flood before this plan sees it
         (plans/manager.py routes it).
         """
-        pks = self.spec.primary_keys
-        unioned = t_env.unionByName(b_env).withColumn(
-            _BUCKET_COL, bucket_expr(self.bucket_key, layout)
-        )
-        clustered = unioned.repartition(layout, F.col(_BUCKET_COL))
         # tie-break on _rdl_src: equal lsns can only mean the batch
         # re-carries what a baseline stamped — batch wins, idempotently
-        w = Window.partitionBy(_BUCKET_COL, *pks).orderBy(
-            F.desc(LSN_COL), F.desc("_rdl_src")
-        )
-        return (
-            clustered.withColumn("_rdl_rn", F.row_number().over(w))
-            .filter(F.col("_rdl_rn") == 1)
-            .drop("_rdl_rn", "_rdl_src")
-        )
+        return self._clustered(
+            t_env.unionByName(b_env),
+            layout,
+            lww=[F.desc(LSN_COL), F.desc("_rdl_src")],
+        ).drop("_rdl_src")
 
     def merge(
         self, batch: DataFrame, epoch_id: int, namespace: str = "batch",
@@ -1664,9 +1673,7 @@ class SnapshotTable:
             )
             merged = self._lww_merge_plan(t_env, b_env, layout)
 
-            new_buckets = self._write_buckets(
-                merged, n_buckets=layout, pre_clustered=True
-            )
+            new_buckets = self._write_buckets(merged)
 
             buckets = {
                 b: files
@@ -1755,21 +1762,12 @@ class SnapshotTable:
         (lsn DESC, seq DESC), which reproduces the CoW window's
         batch-beats-target tie rule exactly."""
         spec = self.spec
-        env = b_env.withColumn(
-            SEQ_COL, F.lit(next_seq).cast("long")
-        ).withColumn(_BUCKET_COL, bucket_expr(self.bucket_key, layout))
-        clustered = env.repartition(layout, F.col(_BUCKET_COL))
-        w = Window.partitionBy(_BUCKET_COL, *spec.primary_keys).orderBy(
-            F.desc(F.coalesce(F.col(LSN_COL), F.lit(-1)))
+        netted = self._clustered(
+            b_env.withColumn(SEQ_COL, F.lit(next_seq).cast("long")),
+            layout,
+            lww=[F.desc(F.coalesce(F.col(LSN_COL), F.lit(-1)))],
         )
-        netted = (
-            clustered.withColumn("_rdl_rn", F.row_number().over(w))
-            .filter(F.col("_rdl_rn") == 1)
-            .drop("_rdl_rn")
-        )
-        new_files = self._write_buckets(
-            netted, n_buckets=layout, pre_clustered=True
-        )
+        new_files = self._write_buckets(netted)
         for b, files in new_files.items():
             deltas_prev.setdefault(b, []).extend(files)
         manifest = {
@@ -1863,22 +1861,15 @@ class SnapshotTable:
         unioned = self._read_files(base_rels).withColumn(
             SEQ_COL, F.lit(0).cast("long")
         ).unionByName(self._read_delta_files(delta_rels))
-        unioned = unioned.withColumn(
-            _BUCKET_COL, bucket_expr(self.bucket_key, layout)
-        )
-        clustered = unioned.repartition(layout, F.col(_BUCKET_COL))
-        w = Window.partitionBy(_BUCKET_COL, *self.spec.primary_keys).orderBy(
-            F.desc(F.coalesce(F.col(LSN_COL), F.lit(-1))),
-            F.desc(F.coalesce(F.col(SEQ_COL), F.lit(0))),
-        )
-        folded = (
-            clustered.withColumn("_rdl_rn", F.row_number().over(w))
-            .filter(F.col("_rdl_rn") == 1)
-            .drop("_rdl_rn", SEQ_COL)
-        )
-        new_buckets = self._write_buckets(
-            folded, n_buckets=layout, pre_clustered=True
-        )
+        folded = self._clustered(
+            unioned,
+            layout,
+            lww=[
+                F.desc(F.coalesce(F.col(LSN_COL), F.lit(-1))),
+                F.desc(F.coalesce(F.col(SEQ_COL), F.lit(0))),
+            ],
+        ).drop(SEQ_COL)
+        new_buckets = self._write_buckets(folded)
         buckets = {
             b: fs for b, fs in m["buckets"].items() if b not in deltas
         }
@@ -2178,15 +2169,13 @@ class SnapshotTable:
             sort_keys = ["zcode"]
         else:
             sort_keys = list(sort_cols) if sort_cols else self.spec.primary_keys
-        bucketed = df.withColumn(
-            _BUCKET_COL, bucket_expr(self.bucket_key, layout)
-        )
         if files_per_bucket > 1:
             wb = Window.partitionBy(_BUCKET_COL).orderBy(
                 *[F.col(c) for c in sort_keys]
             )
             clustered = (
-                bucketed.withColumn(
+                df.withColumn(_BUCKET_COL, bucket_expr(self.bucket_key, layout))
+                .withColumn(
                     "_chunk", F.ntile(files_per_bucket).over(wb)
                 )
                 .repartitionByRange(
@@ -2198,14 +2187,12 @@ class SnapshotTable:
                 .drop("_chunk")
             )
         else:
-            clustered = bucketed.repartition(
-                layout, F.col(_BUCKET_COL)
-            ).sortWithinPartitions(_BUCKET_COL, *sort_keys)
+            clustered = self._clustered(df, layout).sortWithinPartitions(
+                _BUCKET_COL, *sort_keys
+            )
         if zorder_cols:
             clustered = clustered.drop("zcode", "file_id")
-        new_buckets = self._write_buckets(
-            clustered, n_buckets=layout, pre_clustered=True
-        )
+        new_buckets = self._write_buckets(clustered)
         manifest = dict(m)
         manifest["buckets"] = new_buckets
         manifest["kind"] = "optimize"
@@ -2248,14 +2235,10 @@ class SnapshotTable:
         df = self._read_files(
             [p for files in m["buckets"].values() for p in files]
         )
-        clustered = (
-            df.withColumn(_BUCKET_COL, bucket_expr(self.bucket_key, n_buckets))
-            .repartition(n_buckets, F.col(_BUCKET_COL))
-            .sortWithinPartitions(_BUCKET_COL, *self.spec.primary_keys)
+        clustered = self._clustered(df, n_buckets).sortWithinPartitions(
+            _BUCKET_COL, *self.spec.primary_keys
         )
-        new_buckets = self._write_buckets(
-            clustered, n_buckets=n_buckets, pre_clustered=True
-        )
+        new_buckets = self._write_buckets(clustered)
         manifest = dict(m)
         manifest["buckets"] = new_buckets
         manifest["n_buckets"] = n_buckets
@@ -2461,7 +2444,7 @@ class SnapshotTable:
         keep_df = self._read_files(
             [p for b in touched for p in m["buckets"].get(str(b), [])]
         ).filter(~expirable)
-        new_buckets = self._write_buckets(keep_df, n_buckets=layout)
+        new_buckets = self._write_buckets(self._clustered(keep_df, layout))
         buckets = {
             b: files for b, files in m["buckets"].items() if int(b) not in touched
         }
@@ -2542,7 +2525,7 @@ class SnapshotTable:
                 + [f.name for f in new_spec.audit_fields if f.name in df.columns]
                 + [LSN_COL, DELETED_COL]
             )
-            buckets = self._write_buckets(df.select(*keep), n_buckets=layout)
+            buckets = self._write_buckets(self._clustered(df.select(*keep), layout))
             self._commit(
                 {
                     "buckets": buckets,

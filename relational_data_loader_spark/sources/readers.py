@@ -11,8 +11,9 @@ Reference mapping (SURVEY.md §2.1):
   comes from the commit manifest, not a cursor.
 - S3 change-tracking probe: ``CHANGE_TRACKING_CURRENT_VERSION()`` /
   ``CHANGE_TRACKING_MIN_VALID_VERSION()`` become a min/max aggregate over the
-  change log's lsn column. The min is parquet-footer-only (statistics), so
-  the probe never scans data.
+  change log's lsn column. The aggregate scans every log row: parquet is
+  read through DSv1, and ``spark.sql.parquet.aggregatePushdown`` (which
+  would answer min/max from footer statistics) applies only to DSv2 scans.
 """
 
 from __future__ import annotations

@@ -77,6 +77,38 @@ def test_dedup_clusters_merging_components(spark):
     assert sum(r["keep"] for r in got.collect()) == 1
 
 
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_dedup_clusters_evaluates_pairs_upstream_once(spark, id_type):
+    """ADVICE r6 #1: ``pairs`` feeds both branches of the symmetric edge
+    union, so its cache must outlive the first action that fills the edge
+    cache; dropping it earlier re-ran the whole upstream (LSH + Jaccard on
+    the near-dup path) once per branch. A Python UDF in the upstream counts
+    its row evaluations into an accumulator: one per pair means the
+    upstream ran once. Both convergence probes (numeric sum, string
+    join-back) are covered, since each fills the cache with a different
+    first action."""
+    raw = [(1, 2), (2, 3), (3, 4), (5, 6)]
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def seen(a):
+        evaluated.add(1)
+        return a
+
+    cast = int if id_type == "bigint" else str
+    docs = spark.createDataFrame(
+        [(cast(i),) for i in range(1, 8)], f"doc_id: {id_type}"
+    )
+    pairs = spark.createDataFrame(
+        [(cast(a), cast(b)) for a, b in raw], f"doc_a: {id_type}, doc_b: {id_type}"
+    ).select(F.udf(seen, id_type)("doc_a").alias("doc_a"), "doc_b")
+    got = dedup_clusters(docs, pairs, "doc_id").collect()
+    assert {r["doc_id"]: r["cluster_id"] for r in got} == {
+        cast(d): cast(c) for d, c in
+        [(1, 1), (2, 1), (3, 1), (4, 1), (5, 5), (6, 5), (7, 7)]
+    }
+    assert evaluated.value == len(raw)
+
+
 def test_rolling_stats_tie_order_is_event_id(spark):
     # two events share a timestamp: the frame order must break the tie on
     # event_id, or the rolling sums are nondeterministic across engines
