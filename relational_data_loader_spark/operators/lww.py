@@ -53,11 +53,14 @@ def net_changes(
     survivors per PK. The salt is a deterministic hash of the lsn (no
     ``rand()``: retries and the exactly-once replay must re-derive identical
     plans). Max-lsn commutes through the phases, so the result is identical
-    to the unsalted plan. Two shuffles instead of one — and on Spark ≥3.5
-    usually unnecessary: the unsalted plan compiles to WindowGroupLimit
-    Partial/Final, whose MAP-SIDE top-1 per PK already caps a hot key's
-    contribution to its reducer at n_map_partitions rows. Pin
-    spec.salt_buckets only on engines without that optimization
+    to the unsalted plan. Two shuffles instead of one. Standing alone, the
+    unsalted plan compiles to WindowGroupLimit Partial/Final, whose MAP-SIDE
+    top-1 per PK caps a hot key's contribution to its reducer at
+    n_map_partitions rows — but the engine's default epoch apply does not
+    run this plan: the sinks' merge window rides the bucket repartition,
+    where Spark plans the limit in Final mode only, so there a hot PK is
+    bounded by spec.batch_size chunking plus a spec.salt_buckets pin, which
+    makes the sinks run this salted plan ahead of their window
     (plans/manager.py documents the engine policy).
     """
     if salt_buckets and salt_buckets > 1:

@@ -23,7 +23,7 @@ from relational_data_loader_spark.operators.lww import net_changes
 from relational_data_loader_spark.operators.project import project_cast
 from relational_data_loader_spark.plans.decision import LoadDecision, decide
 from relational_data_loader_spark.sinks.iceberg import IcebergTable
-from relational_data_loader_spark.sinks.snapshot import SnapshotTable
+from relational_data_loader_spark.sinks.snapshot import MergeStats, SnapshotTable
 from relational_data_loader_spark.sources.readers import (
     change_tracking_info,
     read_change_log,
@@ -66,11 +66,11 @@ class DataLoadManager:
         is the production Iceberg sink — its constructor fails loudly when
         the runtime jars are absent rather than silently writing to a
         different physical table. Both implement the same surface
-        (exists/watermark/stored_*/merge→MergeStats/full_refresh/evolve);
-        the one declared difference is ``needs_unique_source``, which
-        ``run``/``apply_chunk`` honor by feeding Iceberg the netted
-        ``prepare_batch`` (MERGE INTO rejects duplicate source keys) and the
-        snapshot sink the cheaper fused ``merge_batch``.
+        (exists/watermark/stored_*/full_refresh_from_envelopes/
+        merge→MergeStats/evolve) and both take projected, un-netted
+        envelopes: each sink nets its own — the snapshot sink inside the LWW
+        window of its bucketed write, Iceberg ahead of its MERGE INTO / RTAS
+        (which reject duplicate source keys).
         """
         if spec.sink.startswith("iceberg://"):
             identifier = spec.sink[len("iceberg://"):]
@@ -90,45 +90,26 @@ class DataLoadManager:
         """envelope scan → column mapping/cast/transform (no netting)."""
         return project_cast(changes, spec, include_envelope=True)
 
-    def prepare_batch(
-        self, spec: IngestSpec, changes: DataFrame, salt_buckets: int | None = None
-    ) -> DataFrame:
+    def prepare_batch(self, spec: IngestSpec, changes: DataFrame) -> DataFrame:
         """project + explicit LWW netting — one row per PK.
 
-        Needed where the consumer REQUIRES a unique source key (Iceberg
-        MERGE INTO; final_state). The SnapshotTable path skips this: its
-        version-guarded merge window nets as a side effect, and pre-netting
-        would add a redundant shuffle of every batch (see merge_batch).
+        The epoch-apply path does not use this: every sink nets its own
+        envelopes (``merge``/``full_refresh_from_envelopes``). It serves
+        callers that need the netted frame itself — ``final_state`` and
+        ``replay_dlq``, whose dead-letter dirs may hold one event twice.
 
-        ``salt_buckets`` defaults to the spec's declared value — a pin-only
-        policy: the engine never auto-salts, because the unsalted plan's
-        WindowGroupLimit partial already bounds hot-PK reducer load
-        (plan-property-tested); ``detect_hot_keys`` (operators/skew.py) is
-        the sampled observability probe an operator uses to decide a pin.
+        The net is salted only under a ``spec.salt_buckets`` pin — the
+        engine never auto-salts. The default merge plans its
+        WindowGroupLimit in Final mode only (below the bucket repartition
+        there is no map-side Partial), so a hot PK is bounded by
+        ``spec.batch_size`` chunking plus this pin; ``detect_hot_keys``
+        (operators/skew.py) is the sampled observability probe an operator
+        uses to decide a pin.
         """
-        mapped = self.project(spec, changes)
-        salt = spec.salt_buckets if salt_buckets is None else salt_buckets
         return net_changes(
-            mapped, spec.primary_keys, spec.lsn_column, spec.op_column,
-            salt_buckets=salt,
+            self.project(spec, changes), spec.primary_keys, spec.lsn_column,
+            spec.op_column, salt_buckets=spec.salt_buckets,
         )
-
-    def merge_batch(self, spec: IngestSpec, changes: DataFrame, salt: int = 0):
-        """The shuffle-minimal batch plan for the snapshot sink: project only
-        — the merge's own window is the netting (fused: one shuffle instead
-        of two per epoch). Spark 4 plans the row_number()≤1 window with
-        WindowGroupLimit Partial (map-side top-1 per PK before the
-        shuffle), which also bounds what a hot PK can contribute to any
-        reducer; an explicitly salted pre-net is only worth its extra
-        shuffle when that partial limit is unavailable or the spec pins it.
-        """
-        mapped = self.project(spec, changes)
-        if salt and salt > 1:
-            return net_changes(
-                mapped, spec.primary_keys, spec.lsn_column, spec.op_column,
-                salt_buckets=salt,
-            )
-        return mapped
 
     def final_state(self, spec: IngestSpec, log: DataFrame) -> DataFrame:
         """Replay a whole log to its final table state (full-refresh source)."""
@@ -136,6 +117,33 @@ class DataLoadManager:
         return netted.filter(F.col(spec.op_column) != spec.delete_op).select(
             *[c.destination for c in spec.columns]
         )
+
+    def apply_epoch(
+        self,
+        table,
+        spec: IngestSpec,
+        envelopes: DataFrame,
+        epoch_id: int,
+        namespace: str,
+        kind: str,
+    ) -> MergeStats:
+        """Merge one epoch's projected envelopes into ``table`` and, unless
+        the sink skipped it as already applied, append its ``_rdl_state``
+        rows under ``kind`` — the one merge-plus-lineage site of the chunk
+        loop (``merge``), ``replay_dlq`` (``dlq_replay``) and the streaming
+        micro-batch (``stream_merge``). The sink nets the envelopes;
+        replay_dlq's ``prepare_batch`` output and the sparse densify carry
+        one row per key already, and say so (``netted``)."""
+        stats = table.merge(
+            envelopes, epoch_id, namespace,
+            netted=kind == "dlq_replay" or spec.envelope == "sparse",
+        )
+        if not stats.skipped:
+            self.state.append(
+                spec.name, epoch_id, stats.bucket_stats or [], stats.wall_ms,
+                kind=kind,
+            )
+        return stats
 
     # -- entry point -----------------------------------------------------------
 
@@ -290,19 +298,13 @@ class DataLoadManager:
         prepared = self.prepare_batch(
             spec, self._null_delete_payloads(spec, good)
         )
-        stats = table.merge(prepared, seq, namespace="dlq", netted=True)
+        stats = self.apply_epoch(table, spec, prepared, seq, "dlq", "dlq_replay")
 
         retained = os.path.join(dlq, f"r{seq}")
         still_bad.write.mode("overwrite").parquet(retained)
         for d in dirs:
             if d != retained:
                 shutil.rmtree(d, ignore_errors=True)
-
-        wall = int((time.time() - t0) * 1000)
-        if not stats.skipped:
-            self.state.append(
-                spec.name, seq, stats.bucket_stats or [], wall, kind="dlq_replay"
-            )
         return RunResult(
             decision,
             stats.rows_upserted,
@@ -310,7 +312,7 @@ class DataLoadManager:
             table.watermark(),
             seq,
             stats.skipped,
-            wall,
+            int((time.time() - t0) * 1000),
         )
 
     def _dq_gate(self, spec: IngestSpec, changes) -> dict[str, int] | None:
@@ -452,61 +454,28 @@ class DataLoadManager:
             wm = max(cti.current_version, 0)
             log, n_quar = self._quarantine_split(spec, log, epoch_id)
             dq = self._dq_gate(spec, log)
+            envelopes = self.project(spec, log)
             if spec.envelope == "sparse":
                 # sparse wire format: fold column-wise (operators/sparse.py)
-                # — LWW netting would stamp every untouched column NULL
-                from pyspark.sql import Observation
-
+                # — LWW netting would stamp every untouched column NULL. The
+                # fold leaves one live row per key at its max lsn; an upsert
+                # op tag makes that row an envelope the sink keeps.
                 from relational_data_loader_spark.operators.sparse import (
                     fold_sparse_envelopes,
                 )
 
-                payload = [
-                    c.destination for c in spec.columns if not c.primary_key
-                ]
-                folded = fold_sparse_envelopes(
-                    self.project(spec, log),
+                envelopes = fold_sparse_envelopes(
+                    envelopes,
                     spec.primary_keys,
                     spec.lsn_column,
                     spec.op_column,
-                    payload,
-                )
-                obs = Observation()
-                df = folded.select(
-                    *[c.destination for c in spec.columns]
-                ).observe(obs, F.count(F.lit(1)).alias("n"))
-                table.full_refresh(df, epoch_id=epoch_id, watermark=wm)
-                n = int(obs.get["n"])
-            elif hasattr(table, "full_refresh_from_envelopes") and (
-                not spec.salt_buckets or spec.on_cast_error == "quarantine"
-            ):
-                # fused initial load: net + drop-deletes + bucketed write on
-                # one exchange, survivor count observed during the write
-                # (sinks/snapshot.py). A salt_buckets pin falls through to
-                # the unfused path so the salted pre-net is honored — except
-                # in quarantine mode, which REQUIRES the envelope path (the
-                # snapshot must keep per-row lsns + tombstones or replay_dlq
-                # cannot LWW against it); there the salted pre-net runs
-                # first and feeds the envelope write.
-                env = self.project(spec, log)
-                if spec.salt_buckets:
-                    env = net_changes(
-                        env, spec.primary_keys, spec.lsn_column,
-                        spec.op_column, salt_buckets=spec.salt_buckets,
-                    )
-                n = table.full_refresh_from_envelopes(
-                    env, epoch_id=epoch_id, watermark=wm
-                )
-            else:
-                # row count observed during the write itself — no second pass
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                df = self.final_state(spec, log).observe(
-                    obs, F.count(F.lit(1)).alias("n")
-                )
-                table.full_refresh(df, epoch_id=epoch_id, watermark=wm)
-                n = int(obs.get["n"])
+                    [c.destination for c in spec.columns if not c.primary_key],
+                ).withColumn(spec.op_column, F.lit(spec.upsert_ops[0]))
+            # the sink nets, drops deletes and writes, counting survivors
+            # during the write
+            n = table.full_refresh_from_envelopes(
+                envelopes, epoch_id=epoch_id, watermark=wm
+            )
             wall = int((time.time() - t0) * 1000)
             self.state.append(
                 spec.name,
@@ -514,7 +483,7 @@ class DataLoadManager:
                 [
                     {
                         "partition_id": -1,
-                        "max_applied_lsn": max(cti.current_version, 0),
+                        "max_applied_lsn": wm,
                         "rows_upserted": n,
                         "rows_deleted": 0,
                     }
@@ -536,14 +505,14 @@ class DataLoadManager:
         # to every incremental epoch; measured as a scaling dilutant)
         lsn_range = max(cti.current_version - last, 0)
 
-        # skew: spec.salt_buckets > 1 pins an explicit salted pre-net
-        # (operators/lww.py — insurance for engines without window group
-        # limits); the default fused plan needs none: Spark 4 plans the
-        # merge's row_number()≤1 window with WindowGroupLimit Partial, which
-        # top-1-limits every PK per MAP partition before the shuffle, so a
-        # hot PK contributes at most n_map_partitions rows to its reducer at
-        # any batch size. detect_hot_keys (operators/skew.py) remains the
-        # sampled observability probe for coarse-key aggregations.
+        # skew: the default merge window rides the bucket repartition, where
+        # Spark plans its WindowGroupLimit in Final mode only — no map-side
+        # Partial — so every raw envelope of a chunk reaches its bucket's
+        # reducer. A hot PK is bounded by the batch_size chunking below
+        # (≤ batch_size envelopes per epoch) and, when pinned,
+        # spec.salt_buckets > 1, whose two-phase salted pre-net the sink
+        # runs before its window (operators/lww.py). detect_hot_keys
+        # (operators/skew.py) is the sampled probe for deciding a pin.
         salt = spec.salt_buckets
 
         # chunked apply (reference C2's batch loop, spec.batch_size): a large
@@ -571,10 +540,6 @@ class DataLoadManager:
         chunks_run = 0
         lo = last
         dq_total: dict[str, int] | None = None
-        # the Iceberg sink needs unique source keys (MERGE INTO cardinality):
-        # feed it the explicitly netted prepare_batch; the snapshot sink gets
-        # the shuffle-minimal fused path (netting inside its merge window)
-        needs_unique = getattr(table, "needs_unique_source", False)
         for hi in bounds:
             if hi <= lo:
                 continue
@@ -605,19 +570,10 @@ class DataLoadManager:
                     spec.op_column,
                     [c.destination for c in spec.columns if not c.primary_key],
                 )
-                stats = table.merge(prepared, hi, netted=True)
             else:
-                prepared = (
-                    self.prepare_batch(spec, chunk, salt)
-                    if needs_unique
-                    else self.merge_batch(spec, chunk, salt)
-                )
-                stats = table.merge(prepared, hi, netted=needs_unique)
-            if not stats.skipped:
-                applied_any = True
-                self.state.append(
-                    spec.name, hi, stats.bucket_stats or [], stats.wall_ms, "merge"
-                )
+                prepared = self.project(spec, chunk)
+            stats = self.apply_epoch(table, spec, prepared, hi, "batch", "merge")
+            applied_any = applied_any or not stats.skipped
             total_up += stats.rows_upserted
             total_del += stats.rows_deleted
             lo = hi

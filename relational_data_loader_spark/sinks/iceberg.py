@@ -266,18 +266,14 @@ class IcebergTable:
 
     Interface parity (what DataLoadManager/StreamingIngest rely on):
     ``exists/watermark/baseline_watermark/stored_checksum/stored_spec_json/
-    applied_epochs/full_refresh/merge→MergeStats/evolve/expire_tombstones``.
-    The ONE contract difference is declared by ``needs_unique_source``:
+    applied_epochs/full_refresh_from_envelopes/merge→MergeStats/evolve/
+    expire_tombstones``. Like SnapshotTable, the sink owns its netting:
     Iceberg ``MERGE INTO`` rejects multiple source rows per target row, so
-    the manager feeds this sink through ``prepare_batch`` (netted) — and
-    ``merge`` nets internally whenever the caller doesn't vouch for
-    uniqueness (``netted=False``), so a raw-envelope batch can never hit the
-    MERGE cardinality error.
+    ``merge`` and ``full_refresh_from_envelopes`` LWW-net raw envelopes
+    themselves and a raw-envelope batch can never hit the MERGE cardinality
+    error.
     """
 
-    # Iceberg MERGE INTO requires a unique source key per target row; the
-    # manager routes netted batches here (plans/manager.py).
-    needs_unique_source = True
     # Iceberg's bucket transform hashes integer types through their long
     # representation, so int→bigint widening of the bucket column is
     # layout-stable — the decision layer skips its re-bucket rule here
@@ -550,8 +546,8 @@ class IcebergTable:
         multi-row-per-PK) envelopes and returns MergeStats. Because Iceberg
         MERGE INTO rejects duplicate source keys, a batch not vouched unique
         (``netted=False``) is LWW-netted here first (operators/lww.py) —
-        callers that already netted (the manager's prepare_batch path) pass
-        ``netted=True`` to skip the redundant shuffle.
+        callers that already netted (replay_dlq's prepare_batch, the sparse
+        densify) pass ``netted=True`` to skip the redundant shuffle.
 
         Out-of-order safety (same contract as SnapshotTable): every UPDATE is
         guarded by ``s.lsn > t._rdl_lsn`` so a stale permuted segment can
@@ -716,6 +712,33 @@ class IcebergTable:
             f"SELECT {visible} FROM {self.identifier} WHERE NOT {DELETED_COL}"
         )
         return view
+
+    def full_refresh_from_envelopes(
+        self,
+        envelopes: DataFrame,
+        epoch_id: int,
+        watermark: int,
+        namespace: str = "batch",
+    ) -> int:
+        """The SnapshotTable entry's twin: LWW-net projected change rows
+        ``(dest cols..., lsn, op)`` (``spec.salt_buckets`` honored), drop
+        delete winners and load the survivors through ``full_refresh``'s
+        RTAS. Returns the survivor count, observed while the RTAS reads
+        them (no second pass)."""
+        from pyspark.sql import Observation
+
+        spec = self.spec
+        obs = Observation()
+        survivors = (
+            net_changes(
+                envelopes, spec.primary_keys, spec.lsn_column, spec.op_column,
+                salt_buckets=spec.salt_buckets,
+            )
+            .filter(F.col(spec.op_column) != spec.delete_op)
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+        )
+        self.full_refresh(survivors, epoch_id, watermark, namespace)
+        return int(obs.get["n"])
 
     def full_refresh(
         self,

@@ -91,6 +91,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from relational_data_loader_spark.operators.lww import net_changes
 from relational_data_loader_spark.operators.watermark import bucket_expr
 from relational_data_loader_spark.spec import AUDIT_EXEC_ID, AUDIT_LOADED_AT, IngestSpec
 
@@ -155,10 +156,6 @@ class MergeStats:
 class SnapshotTable:
     """A versioned parquet table addressed by manifest, bucketed on the first PK."""
 
-    # the fused merge window nets internally, so raw multi-row-per-PK batches
-    # are welcome (the Iceberg sink declares the opposite — MERGE INTO
-    # cardinality; plans/manager.py routes on this attribute)
-    needs_unique_source = False
     # the parquet layout buckets by xxhash64, which is width-sensitive —
     # widening the bucket key re-buckets (plans/decision.py)
     width_stable_bucket_hash = False
@@ -377,24 +374,34 @@ class SnapshotTable:
         manifest["file_stats"] = self._file_stats(manifest)
         manifest["version"] = version
         manifest["committed_at"] = time.time()
-        tmp = os.path.join(self.path, "_manifests", f".tmp-{uuid.uuid4().hex}")
         final = os.path.join(self.path, "_manifests", f"v{version:08d}.json")
+        return self._link_manifest(
+            manifest,
+            final,
+            f"concurrent commit detected: {final} already exists "
+            f"(another writer won version {version} for {self.path})",
+        )
+
+    @staticmethod
+    def _link_manifest(
+        manifest: dict[str, Any], final: str, conflict: str
+    ) -> dict[str, Any]:
+        """Write ``manifest`` to a temp file beside ``final``, fsync it, and
+        link(2) it to ``final`` — the atomic commit point. link fails with
+        EEXIST if the version was already committed, so a second writer
+        loses LOUDLY (``conflict`` names it) instead of silently replacing
+        a committed manifest (rename would overwrite)."""
+        tmp = os.path.join(os.path.dirname(final), f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
             f.flush()
             os.fsync(f.fileno())
-        # atomic commit point. link(2) fails with EEXIST if the version was
-        # already committed — a second writer loses LOUDLY instead of
-        # silently replacing a committed manifest (rename would overwrite).
         try:
             os.link(tmp, final)
         except FileExistsError:
+            raise ConcurrentCommitError(conflict)
+        finally:
             os.unlink(tmp)
-            raise ConcurrentCommitError(
-                f"concurrent commit detected: {final} already exists "
-                f"(another writer won version {version} for {self.path})"
-            )
-        os.unlink(tmp)
         return manifest
 
     # ---- branches (write-audit-publish) ------------------------------------
@@ -462,22 +469,13 @@ class SnapshotTable:
         manifest["branch"] = self._branch
         manifest["base_version"] = base
         manifest["committed_at"] = time.time()
-        tmp = os.path.join(bdir, f".tmp-{uuid.uuid4().hex}")
         final = os.path.join(bdir, f"v{seq:08d}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            os.unlink(tmp)
-            raise ConcurrentCommitError(
-                f"concurrent commit detected on branch {self._branch!r}: "
-                f"{final} already exists"
-            )
-        os.unlink(tmp)
-        return manifest
+        return self._link_manifest(
+            manifest,
+            final,
+            f"concurrent commit detected on branch {self._branch!r}: "
+            f"{final} already exists",
+        )
 
     def publish_branch(
         self, name: str, require_fast_forward: bool = True
@@ -603,26 +601,6 @@ class SnapshotTable:
             buckets.setdefault(b, []).append(os.path.relpath(f, self.path))
         return buckets
 
-    def full_refresh(
-        self, df: DataFrame, epoch_id: int = 0, watermark: int = 0,
-        namespace: str = "batch",
-    ) -> dict[str, Any]:
-        """Atomic whole-table (re)load — the reference's stage + rename swap (W4).
-
-        This is also the only point where the bucket layout may change: the
-        whole table is rewritten, so the live spec's ``target_buckets``
-        becomes the committed layout. The rewrite subsumes every event up to
-        ``watermark``, which therefore becomes the table's baseline: rows are
-        stamped with it and later arrivals at/below it are dropped, not
-        merged."""
-        stamped = (
-            self._with_audit(df.select(*self._dest_cols()), epoch_id)
-            .withColumn(LSN_COL, F.lit(int(watermark)).cast("long"))
-            .withColumn(DELETED_COL, F.lit(False))
-        )
-        buckets = self._write_buckets(self._clustered(stamped, self.n_buckets))
-        return self._commit_full_manifest(buckets, epoch_id, watermark, namespace)
-
     def full_refresh_from_envelopes(
         self,
         envelopes: DataFrame,
@@ -630,29 +608,34 @@ class SnapshotTable:
         watermark: int,
         namespace: str = "batch",
     ) -> int:
-        """Initial-load fusion: net + drop-deletes + stamp + bucketed write
-        on ONE exchange — the ``_lww_merge_plan`` argument applied to the
-        refresh path. ``envelopes`` are projected change rows
-        ``(dest cols..., lsn, op)``; the plain ``full_refresh`` path (which
-        takes pre-netted final state and pays a second shuffle) remains for
-        callers that net elsewhere — the manager uses it when a
-        ``salt_buckets`` pin demands the salted pre-net, and the Iceberg
-        sink always nets upstream (its writer owns distribution).
+        """Atomic whole-table (re)load — the reference's stage + rename swap
+        (W4) — and the sink's only full-refresh entry: net + drop-deletes +
+        stamp + bucketed write on ONE exchange (the ``_lww_merge_plan``
+        argument applied to the refresh path). ``envelopes`` are projected
+        change rows ``(dest cols..., lsn, op)``, one or more per key; a
+        ``spec.salt_buckets`` pin pre-nets them first (``_salted_prenet``).
+
+        This is also the only point where the bucket layout may change: the
+        whole table is rewritten, so the live spec's ``target_buckets``
+        becomes the committed layout. The rewrite subsumes every event up to
+        ``watermark``, which therefore becomes the table's baseline: rows are
+        stamped with it and later arrivals at/below it are dropped, not
+        merged (quarantine mode excepted, below).
 
         Returns the survivor row count, observed during the write itself
-        (no second scan). Width note: both this and the unfused path write
-        through ``_clustered``'s exchange, sized by the session's shuffle
-        partitions and AQE's byte-based coalescing; ``target_buckets`` only
-        caps it (a bucket never splits across tasks), so at 10^10 rows set
-        both ``target_buckets`` and ``spark.sql.shuffle.partitions`` to at
-        least the cluster's task slots.
+        (no second scan). Width note: the write rides ``_clustered``'s
+        exchange, sized by the session's shuffle partitions and AQE's
+        byte-based coalescing; ``target_buckets`` only caps it (a bucket
+        never splits across tasks), so at 10^10 rows set both
+        ``target_buckets`` and ``spark.sql.shuffle.partitions`` to at least
+        the cluster's task slots.
         """
         from pyspark.sql import Observation
 
         spec = self.spec
         lsn_col, op_col = spec.lsn_column, spec.op_column
         survivors = self._clustered(
-            envelopes, self.n_buckets, lww=[F.desc(lsn_col)]
+            self._salted_prenet(envelopes), self.n_buckets, lww=[F.desc(lsn_col)]
         )
         # Quarantine mode breaks the baseline premise "this snapshot
         # subsumes every event ≤ watermark": the dead-lettered events are
@@ -695,26 +678,66 @@ class SnapshotTable:
             )
         )
         buckets = self._write_buckets(stamped)
-        self._commit_full_manifest(buckets, epoch_id, watermark, namespace)
+        self._commit_epoch(
+            None, epoch_key(epoch_id, namespace), "full_refresh", buckets, watermark
+        )
         return int(obs.get["n"] or 0)
 
-    def _commit_full_manifest(
-        self, buckets: dict[str, list[str]], epoch_id: int, watermark: int,
-        namespace: str,
-    ) -> dict[str, Any]:
-        return self._commit(
-            {
-                "buckets": buckets,
-                "n_buckets": self.n_buckets,
-                "applied_epochs": [epoch_key(epoch_id, namespace)],
-                "watermark": watermark,
-                "baseline_watermark": watermark,
-                "spec_checksum": self.spec.checksum(),
-                "spec_json": self.spec.to_json(),
-                "schema": self._storage_schema().json(),
-                "kind": "full_refresh",
-            }
+    def _salted_prenet(self, envelopes: DataFrame) -> DataFrame:
+        """The ``spec.salt_buckets`` pin (> 1): a two-phase salted LWW net
+        (operators/lww.py) ahead of the sink's own LWW window, so a flood of
+        events on one hot PK spreads over ``salt_buckets`` reducers before
+        the bucket exchange, which then carries one row per key. Unpinned,
+        the sink's window is the only net."""
+        spec = self.spec
+        if spec.salt_buckets <= 1:
+            return envelopes
+        return net_changes(
+            envelopes, spec.primary_keys, spec.lsn_column, spec.op_column,
+            salt_buckets=spec.salt_buckets,
         )
+
+    def _commit_epoch(
+        self,
+        m: dict[str, Any] | None,
+        key: str,
+        kind: str,
+        buckets: dict[str, list[str]],
+        watermark: int,
+        epoch_id: int | None = None,
+        deltas: dict[str, list[str]] | None = None,
+        next_seq: int | None = None,
+    ) -> dict[str, Any]:
+        """Build and commit one epoch apply's manifest: a full refresh
+        (``m`` None — the rewrite is the new baseline, laid out under the
+        live spec) or a merge into head ``m`` (``merge``, ``merge_mor``,
+        ``merge_empty`` — the committed layout and schema carry over)."""
+        manifest: dict[str, Any] = {
+            "buckets": buckets,
+            "n_buckets": self.n_buckets
+            if m is None
+            else int(m.get("n_buckets", self.n_buckets)),
+            "applied_epochs": [key]
+            if m is None
+            else sorted(_normalize_epoch_keys(m["applied_epochs"]) | {key}),
+            "watermark": watermark,
+            # merges never raise the baseline: they only cover the lsns they
+            # actually carried, not the whole range below their max
+            "baseline_watermark": watermark
+            if m is None
+            else int(m.get("baseline_watermark", m.get("watermark", -1))),
+            "spec_checksum": self.spec.checksum(),
+            "spec_json": self.spec.to_json(),
+            "schema": self._storage_schema().json() if m is None else m["schema"],
+            "kind": kind,
+        }
+        if m is not None:
+            manifest["epoch_id"] = epoch_id
+        if deltas:
+            manifest["deltas"] = deltas
+        if next_seq is not None:
+            manifest["next_delta_seq"] = next_seq
+        return self._commit(manifest)
 
     # ---- read path -----------------------------------------------------------
 
@@ -1474,7 +1497,7 @@ class SnapshotTable:
         epoch by the lsn-range bound, so a reducer sorts at most
         chunk ∪ bucket rows — and (b) the spec.salt_buckets pin, which
         pre-nets a pathological hot-PK flood before this plan sees it
-        (plans/manager.py routes it).
+        (``_salted_prenet``, run by ``merge`` itself).
         """
         # tie-break on _rdl_src: equal lsns can only mean the batch
         # re-carries what a baseline stamped — batch wins, idempotently
@@ -1490,17 +1513,17 @@ class SnapshotTable:
     ) -> MergeStats:
         """Apply a change batch: version-guarded LWW merge into the table.
 
-        ``netted`` exists for sink-interface parity (the Iceberg sink needs
-        the distinction — MERGE INTO cardinality); here it is ignored: the
-        fused merge window below nets as a side effect either way.
-
         Contract of ``batch``: change envelopes (lsn, op, pk..., payload...).
-        One OR MORE rows per primary key — netting is FUSED into the merge
-        window (max-lsn row per PK wins across target ∪ batch), so callers
-        need not pre-net; doing so only adds a redundant shuffle. Envelope
+        One OR MORE rows per primary key — the sink owns the netting, fused
+        into the LWW window of its bucketed write. ``netted`` says the
+        caller already reduced the batch to one row per key (replay_dlq's
+        ``prepare_batch``, the sparse densify), which skips the
+        ``spec.salt_buckets`` pre-net (``_salted_prenet``). Envelope
         semantics mirror the reference's staged upsert+delete
         (``modules/DestinationTableManager.py::upsert_table_from_stage`` W1 +
-        delete builder W2), generalized to out-of-order delivery:
+        delete builder W2), generalized to out-of-order delivery.
+
+        Copy-on-write (default):
 
           winners = LWW by (lsn, batch-over-target tie) per PK over
                     touched_target ∪ batch          (ONE bucket-clustered
@@ -1509,13 +1532,22 @@ class SnapshotTable:
                     can never resurrect a newer delete)
           bucket data = winners                      (rewrite touched buckets
                     only; untouched buckets carried by reference)
+
+        Merge-on-read (``spec.merge_mode="mor"``): ONE bucketed write of the
+        batch's per-key winners as delta files — the base table is never
+        read (the module docstring's O(batch)-vs-O(table) argument). The
+        per-epoch net rides the write's exchange (window top-1 per PK within
+        this batch, tombstones kept as rows); cross-epoch and against-base
+        resolution happens at read time (``_fold``) ordered by
+        (lsn DESC, seq DESC), which reproduces the CoW window's
+        batch-beats-target tie rule exactly.
         """
         t0 = time.time()
         spec = self.spec
         m = self.current_manifest()
         if m is None:
             raise RuntimeError(
-                f"target {spec.name!r} has no committed snapshot; run full_refresh first"
+                f"target {spec.name!r} has no committed snapshot; run a full refresh first"
             )
         key = epoch_key(epoch_id, namespace)
         if key in _normalize_epoch_keys(m.get("applied_epochs", [])):
@@ -1523,8 +1555,10 @@ class SnapshotTable:
         # prune and rewrite against the layout the files were COMMITTED with,
         # never the live spec — a target_buckets edit must not desync bucket
         # lookups from file placement (that would leave stale duplicates);
-        # re-bucketing is full_refresh's job (decision.py forces it).
+        # re-bucketing is a full refresh's job (decision.py forces it).
         layout = int(m.get("n_buckets", self.n_buckets))
+        if not netted:
+            batch = self._salted_prenet(batch)
 
         # The batch feeds two consumers (stats pass, merge window). Small
         # batches cache in memory; replay-scale batches STAGE to scratch
@@ -1572,13 +1606,14 @@ class SnapshotTable:
                 )
                 .collect()
             )
+            deltas: dict[str, list[str]] = {
+                b: list(fs) for b, fs in (m.get("deltas") or {}).items()
+            }
             if not stat_rows:
-                manifest = dict(m)
-                manifest["applied_epochs"] = sorted(
-                    _normalize_epoch_keys(m["applied_epochs"]) | {key}
+                self._commit_epoch(
+                    m, key, "merge_empty", m["buckets"], int(m["watermark"]),
+                    epoch_id, deltas, m.get("next_delta_seq"),
                 )
-                manifest["kind"] = "merge_empty"
-                self._commit(manifest)
                 return MergeStats(
                     epoch_id, False, 0, 0, 0, int(m["watermark"]),
                     int((time.time() - t0) * 1000),
@@ -1587,7 +1622,9 @@ class SnapshotTable:
             touched = sorted(int(r["b"]) for r in stat_rows)
             ups = int(sum(r["ups"] for r in stat_rows))
             dels = int(sum(r["dels"] for r in stat_rows))
-            batch_max_lsn = int(max(r["max_lsn"] for r in stat_rows))
+            watermark = max(
+                int(m["watermark"]), int(max(r["max_lsn"] for r in stat_rows))
+            )
 
             if ups + dels > stage_threshold:
                 # stage the batch once (from the cache the stats pass just
@@ -1599,9 +1636,6 @@ class SnapshotTable:
                 persisted = False
                 batch = self.spark.read.parquet(stage_dir)
 
-            deltas_prev: dict[str, list[str]] = {
-                b: list(fs) for b, fs in (m.get("deltas") or {}).items()
-            }
             next_seq = int(m.get("next_delta_seq", 1))
 
             # shared envelope normalization: destination rows + change
@@ -1618,104 +1652,75 @@ class SnapshotTable:
             )
 
             if spec.merge_mode == "mor":
-                return self._merge_mor(
-                    b_env, m, layout, key, epoch_id, deltas_prev, next_seq,
-                    touched, ups, dels, batch_max_lsn, stat_rows, t0,
+                netted_deltas = self._clustered(
+                    b_env.withColumn(SEQ_COL, F.lit(next_seq).cast("long")),
+                    layout,
+                    lww=[F.desc(F.coalesce(F.col(LSN_COL), F.lit(-1)))],
                 )
-
-            touched_rels = [
-                p for b in touched for p in m["buckets"].get(str(b), [])
-            ]
-            target = self._read_files(touched_rels).withColumn(
-                SEQ_COL, F.lit(0).cast("long")
+                for b, files in self._write_buckets(netted_deltas).items():
+                    deltas.setdefault(b, []).extend(files)
+                buckets = m["buckets"]
+                kind, seq_after = "merge_mor", next_seq + 1
+            else:
+                target = self._read_files(
+                    [p for b in touched for p in m["buckets"].get(str(b), [])]
+                ).withColumn(SEQ_COL, F.lit(0).cast("long"))
+                # pending MoR deltas for the touched buckets fold into this
+                # rewrite (mode interleave safety): their rows join the
+                # target side carrying their commit seq, so equal-lsn
+                # redeliveries still resolve toward the later epoch, and the
+                # new manifest drops the absorbed delta references.
+                delta_rels_touched = [
+                    p for b in touched for p in deltas.get(str(b), [])
+                ]
+                if delta_rels_touched:
+                    target = target.unionByName(
+                        self._read_delta_files(delta_rels_touched)
+                    )
+                # version-guarded LWW against the target (module docstring):
+                # stored rows and batch rows become one envelope stream and
+                # the max-lsn row per PK wins; deletes win as tombstone rows.
+                # No broadcast anywhere: driver-side build cost would cap
+                # scaling at replay batch sizes. _rdl_src is the equal-lsn
+                # tie rank: base rows 0, delta rows their commit seq, this
+                # batch next_seq (> every stored seq).
+                t_env = (
+                    target.withColumn(
+                        LSN_COL, F.coalesce(F.col(LSN_COL), F.lit(-1)).cast("long")
+                    )
+                    .withColumn(
+                        DELETED_COL, F.coalesce(F.col(DELETED_COL), F.lit(False))
+                    )
+                    .withColumn(
+                        "_rdl_src",
+                        F.coalesce(F.col(SEQ_COL), F.lit(0)).cast("long"),
+                    )
+                    .drop(SEQ_COL)
+                )
+                merged = self._lww_merge_plan(
+                    t_env,
+                    b_env.withColumn("_rdl_src", F.lit(next_seq).cast("long")),
+                    layout,
+                )
+                buckets = {
+                    b: files
+                    for b, files in m["buckets"].items()
+                    if int(b) not in touched
+                }
+                buckets.update(self._write_buckets(merged))
+                deltas = {b: fs for b, fs in deltas.items() if int(b) not in touched}
+                kind = "merge"
+                seq_after = next_seq if "next_delta_seq" in m else None
+            self._commit_epoch(
+                m, key, kind, buckets, watermark, epoch_id, deltas, seq_after
             )
-            # pending MoR deltas for the touched buckets fold into this
-            # rewrite (mode interleave safety): their rows join the target
-            # side carrying their commit seq, so equal-lsn redeliveries
-            # still resolve toward the later epoch, and the new manifest
-            # drops the absorbed delta references.
-            delta_rels_touched = [
-                p
-                for b in touched
-                if str(b) in deltas_prev
-                for p in deltas_prev[str(b)]
-            ]
-            if delta_rels_touched:
-                target = target.unionByName(
-                    self._read_delta_files(delta_rels_touched)
-                )
-
-            # version-guarded LWW against the target (module docstring):
-            # stored rows and batch rows become one envelope stream and the
-            # max-lsn row per PK wins; deletes win as tombstone rows. One
-            # shuffle on the FULL primary key (fine-grained — hot convs
-            # spread over turns, same argument as netting) + per-group sort
-            # of 2-3 rows. No broadcast anywhere: driver-side build cost
-            # would cap scaling at replay batch sizes.
-            # _rdl_src is the equal-lsn tie rank: base rows 0, delta rows
-            # their commit seq, this batch next_seq (> every stored seq) —
-            # the CoW generalization of the old 0/1 batch-beats-target flag.
-            t_env = (
-                target.withColumn(
-                    LSN_COL, F.coalesce(F.col(LSN_COL), F.lit(-1)).cast("long")
-                )
-                .withColumn(
-                    DELETED_COL, F.coalesce(F.col(DELETED_COL), F.lit(False))
-                )
-                .withColumn(
-                    "_rdl_src",
-                    F.coalesce(F.col(SEQ_COL), F.lit(0)).cast("long"),
-                )
-                .drop(SEQ_COL)
-            )
-            b_env = b_env.withColumn(
-                "_rdl_src", F.lit(next_seq).cast("long")
-            )
-            merged = self._lww_merge_plan(t_env, b_env, layout)
-
-            new_buckets = self._write_buckets(merged)
-
-            buckets = {
-                b: files
-                for b, files in m["buckets"].items()
-                if int(b) not in set(touched)
-            }
-            buckets.update(new_buckets)
-            manifest = {
-                "buckets": buckets,
-                "n_buckets": layout,
-                "applied_epochs": sorted(
-                    _normalize_epoch_keys(m["applied_epochs"]) | {key}
-                ),
-                "watermark": max(int(m["watermark"]), batch_max_lsn),
-                # merges never raise the baseline: they only cover the lsns
-                # they actually carried, not the whole range below their max
-                "baseline_watermark": int(
-                    m.get("baseline_watermark", m.get("watermark", -1))
-                ),
-                "spec_checksum": spec.checksum(),
-                "spec_json": spec.to_json(),
-                "schema": m["schema"],
-                "kind": "merge",
-                "epoch_id": epoch_id,
-            }
-            remaining = {
-                b: fs
-                for b, fs in deltas_prev.items()
-                if int(b) not in set(touched)
-            }
-            if remaining:
-                manifest["deltas"] = remaining
-            if "next_delta_seq" in m:
-                manifest["next_delta_seq"] = next_seq
-            self._commit(manifest)
-            return MergeStats(
+            stats = MergeStats(
                 epoch_id,
                 False,
                 len(touched),
                 ups,
                 dels,
-                manifest["watermark"],
+                watermark,
                 int((time.time() - t0) * 1000),
                 bucket_stats=[
                     {
@@ -1727,6 +1732,16 @@ class SnapshotTable:
                     for r in stat_rows
                 ],
             )
+            # MoR read-amplification guard: when any bucket's delta pile
+            # crosses the spec threshold, fold it back into base before
+            # returning. Crash between the merge commit above and this
+            # compaction is safe — the epoch is already durable, the debt
+            # just compacts one epoch later.
+            if kind == "merge_mor" and spec.mor_compact_files and any(
+                len(fs) >= spec.mor_compact_files for fs in deltas.values()
+            ):
+                self.compact_deltas()
+            return stats
         finally:
             if persisted:
                 batch.unpersist()
@@ -1734,88 +1749,6 @@ class SnapshotTable:
                 import shutil
 
                 shutil.rmtree(stage_dir, ignore_errors=True)
-
-    def _merge_mor(
-        self,
-        b_env: DataFrame,
-        m: dict[str, Any],
-        layout: int,
-        key: str,
-        epoch_id: int,
-        deltas_prev: dict[str, list[str]],
-        next_seq: int,
-        touched: list[int],
-        ups: int,
-        dels: int,
-        batch_max_lsn: int,
-        stat_rows: list,
-        t0: float,
-    ) -> MergeStats:
-        """Merge-on-read epoch apply: ONE bucketed write of the batch's
-        netted envelopes as delta files — the base table is never read (the
-        module docstring's O(batch)-vs-O(table) argument; a plan gate pins
-        the no-base-read property). The per-epoch net rides the same single
-        exchange the bucketed write needs (the ``_lww_merge_plan`` fusion
-        argument applied to the delta write): window top-1 per PK within
-        this batch, tombstones kept as rows. Cross-epoch and against-base
-        resolution happens at read time (``_fold``) ordered by
-        (lsn DESC, seq DESC), which reproduces the CoW window's
-        batch-beats-target tie rule exactly."""
-        spec = self.spec
-        netted = self._clustered(
-            b_env.withColumn(SEQ_COL, F.lit(next_seq).cast("long")),
-            layout,
-            lww=[F.desc(F.coalesce(F.col(LSN_COL), F.lit(-1)))],
-        )
-        new_files = self._write_buckets(netted)
-        for b, files in new_files.items():
-            deltas_prev.setdefault(b, []).extend(files)
-        manifest = {
-            "buckets": m["buckets"],
-            "deltas": deltas_prev,
-            "next_delta_seq": next_seq + 1,
-            "n_buckets": layout,
-            "applied_epochs": sorted(
-                _normalize_epoch_keys(m["applied_epochs"]) | {key}
-            ),
-            "watermark": max(int(m["watermark"]), batch_max_lsn),
-            "baseline_watermark": int(
-                m.get("baseline_watermark", m.get("watermark", -1))
-            ),
-            "spec_checksum": spec.checksum(),
-            "spec_json": spec.to_json(),
-            "schema": m["schema"],
-            "kind": "merge_mor",
-            "epoch_id": epoch_id,
-        }
-        self._commit(manifest)
-        stats = MergeStats(
-            epoch_id,
-            False,
-            len(touched),
-            ups,
-            dels,
-            manifest["watermark"],
-            int((time.time() - t0) * 1000),
-            bucket_stats=[
-                {
-                    "partition_id": int(r["b"]),
-                    "max_applied_lsn": int(r["max_lsn"]),
-                    "rows_upserted": int(r["ups"]),
-                    "rows_deleted": int(r["dels"]),
-                }
-                for r in stat_rows
-            ],
-        )
-        # read-amplification guard: when any bucket's delta pile crosses the
-        # spec threshold, fold it back into base before returning. Crash
-        # between the merge commit above and this compaction is safe — the
-        # epoch is already durable, the debt just compacts one epoch later.
-        if spec.mor_compact_files and any(
-            len(fs) >= spec.mor_compact_files for fs in deltas_prev.values()
-        ):
-            self.compact_deltas()
-        return stats
 
     def compact_deltas(self, max_buckets: int | None = None) -> int:
         """Fold pending MoR delta files back into their buckets' base files

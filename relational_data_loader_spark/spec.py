@@ -108,11 +108,12 @@ class IngestSpec:
     delete_op: str = "D"
     upsert_ops: tuple[str, ...] = ("I", "U")
     target_buckets: int = 16                # hash buckets on first PK col for the snapshot sink
-    # Skew salt for LWW netting (operators/lww.py): >1 forces the two-phase
-    # salted pre-net. 0 (default) = rely on the fused merge window, whose
-    # WindowGroupLimit partial top-1 already bounds hot-PK reducer load on
-    # Spark ≥3.5 (plans/manager.py) — pin a factor only on engines without
-    # that optimization.
+    # Skew salt for LWW netting (operators/lww.py): >1 makes the sinks run
+    # the two-phase salted pre-net before their merge window. 0 (default) =
+    # the fused merge window is the only net; it rides the bucket
+    # repartition, where WindowGroupLimit plans in Final mode only, so a hot
+    # PK is bounded by batch_size chunking — pin a factor when one PK floods
+    # a chunk (plans/manager.py).
     salt_buckets: int = 0
     # MERGE strategy for the snapshot sink (Hudi's table-type choice,
     # Iceberg's write.merge.mode):

@@ -5,8 +5,9 @@ since the tracker's last version and applies them (SURVEY.md §3.2). This
 module is that loop made resident: a Structured Streaming file source tails
 the LSN-ordered change-log directory (micro-batch = ``maxFilesPerTrigger``
 log segments, the reference's batch_size analog), and ``foreachBatch``
-applies each micro-batch through exactly the same netting+merge path the
-batch manager uses.
+applies each micro-batch through the same epoch-apply path the batch
+manager uses (``DataLoadManager.apply_epoch``: the sink's netting merge plus
+the ``_rdl_state`` append).
 
 Exactly-once story (north_star):
 - Spark's streaming checkpoint makes source progress durable and replays a
@@ -27,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from relational_data_loader_spark.plans.manager import DataLoadManager
@@ -90,27 +92,17 @@ class StreamingIngest:
     # -- micro-batch apply (also unit-testable without a running stream) ----
 
     def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-
-        table = self.mgr.table(self.spec)
-        if os.environ.get("RDL_DEBUG_STREAM"):
-            from pyspark.sql import functions as _F
-
-            r = batch_df.agg(
-                _F.min(self.spec.lsn_column), _F.max(self.spec.lsn_column),
-                _F.count(_F.lit(1)),
-            ).collect()[0]
-            wm = table.watermark() if table.exists() else None
-            print(
-                f"[rdl-stream] {self.spec.name} epoch={epoch_id} "
-                f"lsn=[{r[0]},{r[1]}] n={r[2]} wm_before={wm}",
-                flush=True,
-            )
+        spec = self.spec
+        table = self.mgr.table(spec)
         if not table.exists():
             # bootstrap an empty snapshot so merge has a base (the reference
             # creates the destination table before its first batch — W5)
-            table.full_refresh(
-                self.mgr.spark.createDataFrame([], self.spec.destination_schema()),
+            envelope = T.StructType(
+                [T.StructField(c.destination, c.spark_type) for c in spec.columns]
+                + spec.change_schema().fields[:2]  # lsn, op
+            )
+            table.full_refresh_from_envelopes(
+                self.mgr.spark.createDataFrame([], envelope),
                 epoch_id=-1,
                 watermark=-1,
                 namespace="stream",
@@ -123,41 +115,24 @@ class StreamingIngest:
         # applies permuted segments correctly in any order. (Round-2 fix: a
         # global max-watermark drop here silently lost permuted segments.)
         batch_df = batch_df.filter(
-            F.col(self.spec.lsn_column) > F.lit(table.baseline_watermark())
+            F.col(spec.lsn_column) > F.lit(table.baseline_watermark())
         )
         # dead-letter split per micro-batch ("s<batchId>" DLQ dirs): the
         # foreachBatch epoch_id is Structured Streaming's batchId, which is
         # stable across a checkpoint-replayed micro-batch — the overwrite
         # is idempotent exactly like the batch path's lsn-keyed dirs
-        n_quar = 0
-        if self.spec.on_cast_error == "quarantine":
-            batch_df, n_quar = self.mgr._quarantine_split(
-                self.spec, batch_df, int(epoch_id), prefix="s"
+        if spec.on_cast_error == "quarantine":
+            batch_df, _ = self.mgr._quarantine_split(
+                spec, batch_df, int(epoch_id), prefix="s"
             )
-        batch = self.mgr.merge_batch(self.spec, batch_df, self.spec.salt_buckets)
         # "stream" namespace: Structured Streaming batchIds count 0,1,2,…
         # while batch-manager epochs are log positions — an un-namespaced
         # shared set would let a long-lived stream's batchId hit a committed
         # batch LSN and silently drop that micro-batch
-        stats = table.merge(batch, int(epoch_id), namespace="stream")
-        if os.environ.get("RDL_DEBUG_STREAM"):
-            m = getattr(table, "current_manifest", dict)() or {}
-            print(
-                f"[rdl-stream] {self.spec.name} epoch={epoch_id} merged: "
-                f"skipped={stats.skipped} ups={stats.rows_upserted} "
-                f"dels={stats.rows_deleted} touched={stats.touched_buckets} "
-                f"wm_after={stats.watermark} manifest_v={m.get('version')} "
-                f"buckets={sorted(m.get('buckets', {}))}",
-                flush=True,
-            )
-        if not stats.skipped:
-            self.mgr.state.append(
-                self.spec.name,
-                int(epoch_id),
-                stats.bucket_stats or [],
-                stats.wall_ms,
-                kind="stream_merge",
-            )
+        self.mgr.apply_epoch(
+            table, spec, self.mgr.project(spec, batch_df), int(epoch_id),
+            "stream", "stream_merge",
+        )
 
     # -- stream lifecycle ------------------------------------------------------
 

@@ -145,16 +145,17 @@ def test_read_keys_bucket_ids_match_the_layout(spark, tmp_path, keyed):
     misses a key with probability 15/16, and five keys are looked up)."""
     if keyed == "string":
         spec = transcripts_spec(source="parquet:///dev/null", target_buckets=N_BUCKETS)
-        df = _envelopes(spark, 400, 0, n_convs=80).filter("op <> 'D'").drop("lsn", "op")
+        df = _envelopes(spark, 400, 0, n_convs=80).filter("op <> 'D'")
         key, keys = "conv_id", ["c3", "c17", "c42", "c61", "c79", "nope"]
     else:
         spec = _int_keyed_spec(N_BUCKETS)
         df = spark.range(300).selectExpr(
-            "CAST(id * 7919 AS INT) AS account_id", "md5(CAST(id AS STRING)) AS name"
+            "id AS lsn", "'I' AS op",
+            "CAST(id * 7919 AS INT) AS account_id", "md5(CAST(id AS STRING)) AS name",
         )
         key, keys = "account_id", [0, 7919, 7919 * 40, 7919 * 123, 7919 * 299, -5]
     t = SnapshotTable(spark, str(tmp_path / keyed), spec)
-    t.full_refresh(df, epoch_id=1, watermark=1)
+    t.full_refresh_from_envelopes(df, epoch_id=1, watermark=1)
 
     got = sorted(r[key] for r in t.read_keys(keys).collect())
     want = sorted(r[key] for r in t.read().filter(F.col(key).isin(keys)).collect())

@@ -266,7 +266,14 @@ def test_spec_salt_buckets_drives_engine_path(spark, warehouse, tmp_path):
         source=f"parquet://{logdir}", target_buckets=8, salt_buckets=8
     )
     mgr = DataLoadManager(spark, warehouse)
-    mgr.run(spec)
+    first = mgr.run(spec)
+    # the pinned full refresh takes the sink's fused entry, which runs the
+    # salted pre-net itself
+    assert first.decision.kind == "full_refresh"
+    assert_tables_equal(
+        spark_sorted_pdf(mgr.table(spec).read()),
+        duck_final_state(f"{logdir}/*.parquet"),
+    )
     write_log(tbl, logdir, lsn_from=cut)
     res = mgr.run(spec)
     assert res.decision.kind == "incremental"
@@ -278,11 +285,14 @@ def test_spec_salt_buckets_drives_engine_path(spark, warehouse, tmp_path):
 
 
 def test_hot_pk_unsalted_uses_window_group_limit(spark, tmp_path, warehouse):
-    """salt_buckets=0 (default): a hot PK needs NO salted pre-net — the fused
-    merge window plans with WindowGroupLimit Partial (map-side top-1 per PK
-    before the shuffle), which bounds what any PK can send to a reducer.
-    Asserts both the plan property and final-state correctness on the skewed
-    fixture (40% of events on one PK)."""
+    """salt_buckets=0 (default): the engine runs no salted pre-net. The plan
+    assertion covers ``net_changes`` standing alone, which plans
+    WindowGroupLimit Partial (map-side top-1 per PK before the shuffle);
+    the default merge does not run that plan — its window rides the bucket
+    repartition with the limit in Final mode only (test_plans.py), so its
+    hot-PK bound is batch_size chunking plus the salt pin. Also asserts
+    final-state correctness of the unsalted run on the skewed fixture (40%
+    of events on one PK)."""
     from relational_data_loader_spark.spec import transcripts_spec as _ts
 
     tbl = _hot_pk_log()

@@ -40,7 +40,7 @@ def test_default_sink_is_snapshot(spark, warehouse):
         transcripts_spec(source="parquet:///x")
     )
     assert isinstance(t, SnapshotTable)
-    assert t.needs_unique_source is False
+    assert callable(t.full_refresh_from_envelopes)
 
 
 def test_iceberg_sink_routes_when_runtime_present(spark, warehouse, monkeypatch):
@@ -51,7 +51,7 @@ def test_iceberg_sink_routes_when_runtime_present(spark, warehouse, monkeypatch)
     t = DataLoadManager(spark, warehouse).table(spec)
     assert isinstance(t, IcebergTable)
     assert t.identifier == "lake.db.transcripts"
-    assert t.needs_unique_source is True
+    assert callable(t.full_refresh_from_envelopes)
 
 
 def test_iceberg_sink_fails_loudly_without_runtime(spark, warehouse):
@@ -157,8 +157,8 @@ def test_manager_runs_end_to_end_against_iceberg(iceberg_rig):
     assert fake.snapshots[-1][0] == _encode_stamp(f"batch:{max_lsn}", max_lsn)
 
     # the MERGE source was netted: no multi-row PKs in _rdl_batch (Iceberg
-    # MERGE INTO cardinality requirement — the reason the manager routes
-    # this sink through prepare_batch)
+    # MERGE INTO cardinality requirement — the reason the sink nets raw
+    # envelopes before its MERGE)
     view = mgr.spark.table("_rdl_batch")
     dup = (
         view.groupBy("conv_id", "turn_idx").count().filter("count > 1").count()
