@@ -115,41 +115,27 @@ def fold_sparse_envelopes(
     return folded.filter(alive).drop("_anchor", "_dead")
 
 
-def _stored_rows(table, live: DataFrame, spark) -> DataFrame:
-    """Current visible rows for the densify join. SnapshotTable gets the
-    bucket-pruned path (distinct bucket ids of the live keys — at most
-    n_buckets ints collected — select a sub-manifest exactly like
-    ``read_keys``); sinks without manifest internals (Iceberg — its MERGE
-    reads the table anyway) fall back to ``table.read()``, whose scan the
-    join's key predicate still prunes at the source."""
-    if not hasattr(table, "_assembled"):
-        return table.read()
-    from relational_data_loader_spark.sinks.snapshot import (
-        DELETED_COL,
-        bucket_expr,
-    )
-
-    m = table.current_manifest()
+def _stored_rows(table, live: DataFrame) -> DataFrame:
+    """Current visible rows for the densify join. SnapshotTable reads only
+    the buckets the live keys hash into (their distinct bucket ids — at
+    most n_buckets ints collected) through its one file-selection rule,
+    ``_assembled(m, buckets)``, so a selected bucket with pending deltas
+    folds and the rest scan directly. Sinks without manifest internals
+    (Iceberg — its MERGE reads the table anyway), and a table with no
+    commit yet, fall back to ``table.read()``, whose scan the join's key
+    predicate still prunes at the source."""
+    m = table.current_manifest() if hasattr(table, "_assembled") else None
     if m is None:
-        return spark.createDataFrame([], table.spec.destination_schema())
-    layout = int(m.get("n_buckets", table.n_buckets))
+        return table.read()
+    from relational_data_loader_spark.operators.watermark import bucket_expr
+
     bucket_ids = {
         str(r["b"])
         for r in live.select(
-            bucket_expr(table.bucket_key, layout).alias("b")
+            bucket_expr(table.bucket_key, table._layout(m)).alias("b")
         ).distinct().collect()
     }
-    deltas = m.get("deltas") or {}
-    sub = {
-        "buckets": {b: m["buckets"].get(b, []) for b in sorted(bucket_ids)},
-        "deltas": {b: deltas[b] for b in sorted(bucket_ids) if b in deltas},
-    }
-    visible = [f.name for f in table.spec.destination_schema().fields]
-    return (
-        table._assembled(sub)
-        .filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        .select(*visible)
-    )
+    return table._visible(table._assembled(m, sorted(bucket_ids)))
 
 
 def densify_sparse_batch(
@@ -179,9 +165,9 @@ def densify_sparse_batch(
        image legitimately NULLed.
 
     The stored-row read is bucket-pruned: the batch's distinct bucket ids
-    (≤ n_buckets values, one control-plane collect of ints) select a
-    sub-manifest exactly like ``SnapshotTable.read_keys``, so the join
-    reads O(touched buckets), never the table. The output is one envelope
+    (≤ n_buckets values, one control-plane collect of ints) select the
+    buckets the table reads (``_stored_rows``), so the join reads
+    O(touched buckets), never the table. The output is one envelope
     per key (op 'U' or 'D', lsn = key's max) — ``netted`` by construction.
 
     Convention: null-means-unchanged only. The mask convention folds to
@@ -212,7 +198,7 @@ def densify_sparse_batch(
         *[F.lit(None).cast(batch.schema[c].dataType).alias(c) for c in payload_cols],
     )
     live = folded.filter(~F.col("_is_dead"))
-    stored = _stored_rows(table, live, batch.sparkSession)
+    stored = _stored_rows(table, live)
     s = stored.select(
         *[F.col(c) for c in pk_cols],
         *[F.col(c).alias(f"_st_{c}") for c in payload_cols],

@@ -83,7 +83,7 @@ import time
 import uuid
 from dataclasses import dataclass
 from glob import glob
-from typing import Any
+from typing import Any, Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -105,6 +105,9 @@ DELETED_COL = "_rdl_deleted"
 # batch-beats-target rule the CoW merge window applies via _rdl_src. Base
 # rows fold at seq 0; the manifest's next_delta_seq hands out 1, 2, ...
 SEQ_COL = "_rdl_seq"
+
+# a file-pruning predicate over one file's manifest ``file_stats`` record
+Keep = Callable[[dict[str, Any]], bool]
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -215,6 +218,15 @@ class SnapshotTable:
             )
         with open(path) as f:
             return json.load(f)
+
+    def _manifest(self, version: int | None) -> dict[str, Any] | None:
+        """The head (``version`` None) or a time-travel manifest."""
+        return self.current_manifest() if version is None else self.manifest_at(version)
+
+    def _layout(self, m: dict[str, Any]) -> int:
+        """Bucket count ``m``'s files were laid out with (pre-pinning
+        manifests fall back to the live spec)."""
+        return int(m.get("n_buckets", self.n_buckets))
 
     def _file_stats(self, manifest: dict[str, Any]) -> dict[str, Any]:
         """Per-file integrity facts for every data file the manifest
@@ -574,9 +586,14 @@ class SnapshotTable:
         ).repartition(F.col(_BUCKET_COL))
         if lww is None:
             return clustered
-        w = Window.partitionBy(_BUCKET_COL, *self.spec.primary_keys).orderBy(*lww)
+        return self._top1(clustered, [_BUCKET_COL, *self.spec.primary_keys], lww)
+
+    @staticmethod
+    def _top1(df: DataFrame, keys: list[str], order: list[Column]) -> DataFrame:
+        """The first row per ``keys`` under ``order`` (the LWW winner)."""
+        w = Window.partitionBy(*keys).orderBy(*order)
         return (
-            clustered.withColumn("_rdl_rn", F.row_number().over(w))
+            df.withColumn("_rdl_rn", F.row_number().over(w))
             .filter(F.col("_rdl_rn") == 1)
             .drop("_rdl_rn")
         )
@@ -714,9 +731,7 @@ class SnapshotTable:
         ``merge_empty`` — the committed layout and schema carry over)."""
         manifest: dict[str, Any] = {
             "buckets": buckets,
-            "n_buckets": self.n_buckets
-            if m is None
-            else int(m.get("n_buckets", self.n_buckets)),
+            "n_buckets": self._layout(m or {}),
             "applied_epochs": [key]
             if m is None
             else sorted(_normalize_epoch_keys(m["applied_epochs"]) | {key}),
@@ -784,41 +799,112 @@ class SnapshotTable:
         paths = [os.path.join(self.path, p) for p in relpaths]
         return self.spark.read.schema(schema).parquet(*paths)
 
-    def _fold(self, base_rels: list[str], delta_rels: list[str]) -> DataFrame:
-        """Merge-on-read fold: LWW winners (tombstones INCLUDED) over base
-        files ∪ delta files, ordered by (lsn DESC, seq DESC) per PK — the
-        exact ordering the CoW merge window applies, so both modes resolve
-        out-of-order arrivals and equal-lsn redeliveries identically. Cost
-        is one shuffle of the rows read; callers route only DELTA-BEARING
-        buckets through here (``_assembled``), so a compacted table pays
-        nothing."""
+    def _with_deltas(self, base_rels: list[str], delta_rels: list[str]) -> DataFrame:
+        """Base files at fold ordinal 0 ∪ delta files at their commit seq —
+        the one input of every LWW fold: the read path's ``_fold``,
+        ``compact_deltas`` and the CoW merge's target side. With no delta
+        files there is no union, so no plan carries an empty relation."""
+        base = self._read_files(base_rels).withColumn(SEQ_COL, F.lit(0).cast("long"))
         if not delta_rels:
-            return self._read_files(base_rels)
-        unioned = self._read_files(base_rels).withColumn(
-            SEQ_COL, F.lit(0).cast("long")
-        ).unionByName(self._read_delta_files(delta_rels))
-        w = Window.partitionBy(*self.spec.primary_keys).orderBy(
+            return base
+        return base.unionByName(self._read_delta_files(delta_rels))
+
+    @staticmethod
+    def _fold_order() -> list[Column]:
+        """(lsn DESC, seq DESC): the CoW merge window's ordering, with the
+        fold ordinal as its batch-beats-target tie rank, so both modes
+        resolve out-of-order arrivals and equal-lsn redeliveries alike."""
+        return [
             F.desc(F.coalesce(F.col(LSN_COL), F.lit(-1))),
             F.desc(F.coalesce(F.col(SEQ_COL), F.lit(0))),
-        )
+        ]
+
+    def _fold(self, base_rels: list[str], delta_rels: list[str]) -> DataFrame:
+        """Merge-on-read fold: LWW winners (tombstones INCLUDED) per PK over
+        base files ∪ delta files under ``_fold_order``. Cost is one shuffle
+        of the rows read; ``_assembled`` routes only DELTA-BEARING buckets
+        through here, so a compacted table pays nothing."""
+        return self._top1(
+            self._with_deltas(base_rels, delta_rels),
+            self.spec.primary_keys,
+            self._fold_order(),
+        ).drop(SEQ_COL)
+
+    @staticmethod
+    def _select(
+        m: dict[str, Any],
+        buckets: list[str] | None = None,
+        keep: Keep | None = None,
+    ) -> tuple[list[str], list[str], list[str], list[str]]:
+        """The file-selection rule of every read: ``(hot base files, hot
+        delta files, cold files read, cold files total)`` of manifest ``m``
+        over ``buckets`` (default: every bucket).
+
+        A hot bucket holds pending MoR deltas and is read in full, never
+        pruned: the fold needs every base row present so that a stale
+        in-range delta row loses to its newer out-of-range base version
+        (prune that base file and the stale row would win the fold and leak
+        into the result). Only cold buckets' files are pruned, by ``keep``,
+        a predicate over each file's ``file_stats`` record (``_zone_keep``,
+        ``_bloom_keep``). Correctness never depends on the pruning, only on
+        the read's residual filter."""
+        base: dict[str, list[str]] = m.get("buckets", {})
+        deltas: dict[str, list[str]] = m.get("deltas") or {}
+        if buckets is None:
+            buckets = list(base) + [b for b in deltas if b not in base]
+        hot = [b for b in buckets if deltas.get(b)]
+        cold = [p for b in buckets if not deltas.get(b) for p in base.get(b, [])]
+        stats = m.get("file_stats", {})
+        read = cold if keep is None else [p for p in cold if keep(stats.get(p, {}))]
         return (
-            unioned.withColumn("_rdl_rn", F.row_number().over(w))
-            .filter(F.col("_rdl_rn") == 1)
-            .drop("_rdl_rn", SEQ_COL)
+            [p for b in hot for p in base.get(b, [])],
+            [p for b in hot for p in deltas[b]],
+            read,
+            cold,
         )
 
-    def _assembled(self, m: dict[str, Any]) -> DataFrame:
-        """Storage-schema state (tombstones included) for a manifest: buckets
-        with pending deltas fold, buckets without scan directly — the fold's
+    def _assembled(
+        self,
+        m: dict[str, Any],
+        buckets: list[str] | None = None,
+        keep: Keep | None = None,
+    ) -> DataFrame:
+        """Storage-schema state (tombstones included) of ``m``'s ``buckets``
+        (default: all) as ``_select`` picks the files: hot buckets fold,
+        cold buckets scan their ``keep``-pruned files directly — the fold's
         shuffle is paid only on the delta-bearing fraction of the table."""
-        deltas: dict[str, list[str]] = m.get("deltas") or {}
-        base: dict[str, list[str]] = m.get("buckets", {})
-        if not deltas:
-            return self._read_files([p for fs in base.values() for p in fs])
-        cold = [p for b, fs in base.items() if b not in deltas for p in fs]
-        hot_base = [p for b in deltas for p in base.get(b, [])]
-        hot_delta = [p for fs in deltas.values() for p in fs]
-        return self._fold(hot_base, hot_delta).unionByName(self._read_files(cold))
+        hot_base, hot_delta, cold, _ = self._select(m, buckets, keep)
+        if not hot_delta:
+            return self._read_files(cold)
+        folded = self._fold(hot_base, hot_delta)
+        return folded.unionByName(self._read_files(cold)) if cold else folded
+
+    def _visible(self, df: DataFrame, *extra: str) -> DataFrame:
+        """User-visible rows of a storage-schema frame: tombstones filtered,
+        internal columns dropped (``extra`` ones kept after the visible)."""
+        visible = [f.name for f in self.spec.destination_schema().fields]
+        return df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).select(
+            *visible, *[c for c in extra if c not in visible]
+        )
+
+    def _prune_report(self, m: dict[str, Any] | None, keep: Keep) -> dict[str, Any]:
+        """What the read pruned by ``keep`` opens, from manifest metadata
+        alone (zero file opens): the read's own ``_select``, so hot buckets
+        count in full and the skip ratio is the real one (a low ratio on a
+        hot predicate column is also the compact_deltas signal). A table
+        with no commit reports zeros in the same shape."""
+        m = m or {}
+        hot_base, hot_delta, read, cold = self._select(m, keep=keep)
+        hot = hot_base + hot_delta
+        stats = m.get("file_stats", {})
+        b = lambda ps: sum(int(stats.get(p, {}).get("bytes", 0)) for p in ps)  # noqa: E731
+        return {
+            "files_total": len(cold) + len(hot),
+            "files_read": len(read) + len(hot),
+            "files_skipped": len(cold) - len(read),
+            "bytes_total": b(cold) + b(hot),
+            "bytes_read": b(read) + b(hot),
+        }
 
     def read(
         self, version: int | None = None, read_optimized: bool = False
@@ -837,31 +923,24 @@ class SnapshotTable:
         ``mor_compact_files`` pins). On a CoW table or a compacted MoR
         table it is a no-op. Never mix the two views in one job that
         expects a consistent snapshot."""
-        m = self.current_manifest() if version is None else self.manifest_at(version)
-        if m is None:
-            return self.spark.createDataFrame([], self.spec.destination_schema())
+        m = self._manifest(version) or {}
         if read_optimized:
-            df = self._read_files(
-                [p for fs in m.get("buckets", {}).values() for p in fs]
+            return self._visible(
+                self._read_files([p for fs in m.get("buckets", {}).values() for p in fs])
             )
-        else:
-            df = self._assembled(m)
-        visible = [f.name for f in self.spec.destination_schema().fields]
-        return df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).select(*visible)
+        return self._visible(self._assembled(m))
 
     def read_keys(self, values: list) -> DataFrame:
         """Point reads by bucket key: visible rows whose ``bucket_key`` is in
         ``values``, reading ONLY the buckets those keys hash into — the
-        O(keys) lookup path, never a table scan. The bucket ids come from
-        ``bucket_expr`` over the keys as a parameterized ``VALUES`` relation
-        cast to the key type: the hash must be the JVM's xxhash64 of that
-        type (re-implementing it driver-side would be a silent-desync
-        trap), and a local relation evaluates on the driver with no Spark
-        job."""
-        m = self.current_manifest()
-        if m is None:
-            return self.spark.createDataFrame([], self.spec.destination_schema())
-        layout = int(m.get("n_buckets", self.n_buckets))
+        O(keys) lookup path, never a table scan, in both merge modes (a
+        selected bucket with pending deltas folds just its own files). The
+        bucket ids come from ``bucket_expr`` over the keys as a
+        parameterized ``VALUES`` relation cast to the key type: the hash
+        must be the JVM's xxhash64 of that type (re-implementing it
+        driver-side would be a silent-desync trap), and a local relation
+        evaluates on the driver with no Spark job."""
+        m = self.current_manifest() or {}
         key_type = next(
             f.dataType
             for f in self.spec.destination_schema().fields
@@ -877,50 +956,37 @@ class SnapshotTable:
             )
             buckets = {
                 str(r["b"])
-                for r in keys.select(bucket_expr("k", layout).alias("b")).collect()
+                for r in keys.select(
+                    bucket_expr("k", self._layout(m)).alias("b")
+                ).collect()
             }
-        deltas: dict[str, list[str]] = m.get("deltas") or {}
-        # bucket-scoped sub-manifest: the fold (if the bucket has pending
-        # deltas) runs over just the selected buckets' files — point lookups
-        # stay O(files in those buckets) in both merge modes
-        sub = {
-            "buckets": {b: m["buckets"].get(b, []) for b in sorted(buckets)},
-            "deltas": {b: deltas[b] for b in sorted(buckets) if b in deltas},
-        }
-        visible = [f.name for f in self.spec.destination_schema().fields]
-        return (
-            self._assembled(sub)
-            .filter(
+        return self._visible(
+            self._assembled(m, sorted(buckets)).filter(
                 F.col(self.bucket_key).isin(values)
-                & ~F.coalesce(F.col(DELETED_COL), F.lit(False))
             )
-            .select(*visible)
         )
 
-    def _zone_pruned_rels(
-        self, m: dict[str, Any], col: str, lo: Any, hi: Any
-    ) -> tuple[list[str], list[str]]:
-        """(files to read, all files) for a range predicate on ``col``.
-        Files without a recorded zone map for the column are conservatively
-        read (correctness never depends on stats existing); ``null_only``
-        files are skipped — a range predicate cannot match NULL."""
-        stats = m.get("file_stats", {})
-        lo_k, hi_k = self._zone_value(lo), self._zone_value(hi)
-        all_rels = [p for files in m["buckets"].values() for p in files]
-        keep: list[str] = []
-        for rel in all_rels:
-            mm = stats.get(rel, {}).get("minmax", {}).get(col)
+    @classmethod
+    def _zone_keep(cls, col: str, lo: Any, hi: Any) -> Keep:
+        """``_select`` predicate of a range read on ``col``: skip a file
+        whose zone map misses ``[lo, hi]``. Files without a recorded zone
+        map for the column are conservatively read (correctness never
+        depends on stats existing); ``null_only`` files are skipped — a
+        range predicate cannot match NULL."""
+        lo_k, hi_k = cls._zone_value(lo), cls._zone_value(hi)
+
+        def keep(st: dict[str, Any]) -> bool:
+            mm = st.get("minmax", {}).get(col)
             if mm is None:
-                keep.append(rel)
-                continue
+                return True
             if mm.get("null_only"):
-                continue
-            if lo_k is not None and mm["max"] < lo_k:
-                continue
-            if hi_k is not None and mm["min"] > hi_k:
-                continue
-            keep.append(rel)
-        return keep, all_rels
+                return False
+            return not (
+                (lo_k is not None and mm["max"] < lo_k)
+                or (hi_k is not None and mm["min"] > hi_k)
+            )
+
+        return keep
 
     def read_range(
         self,
@@ -940,45 +1006,14 @@ class SnapshotTable:
         zorder_skipping_gain predicts it from the data). The residual
         in-file filter still applies, so results are exact regardless of
         how loose the zone maps are."""
-        m = (
-            self.current_manifest()
-            if version is None
-            else self.manifest_at(version)
+        df = self._assembled(
+            self._manifest(version) or {}, keep=self._zone_keep(col, lo, hi)
         )
-        if m is None:
-            return self.spark.createDataFrame(
-                [], self.spec.destination_schema()
-            )
-        deltas: dict[str, list[str]] = m.get("deltas") or {}
-        if not deltas:
-            rels, _ = self._zone_pruned_rels(m, col, lo, hi)
-            df = self._read_files(rels)
-        else:
-            # delta-bearing buckets CANNOT zone-prune their base files: the
-            # fold needs every base row present so a stale in-range delta
-            # row loses to its newer out-of-range base version (prune the
-            # base file and the stale delta would win the fold and leak
-            # into the result). Cold buckets prune as usual; correctness
-            # never depends on the pruning, only the residual filter.
-            cold = {
-                "buckets": {
-                    b: fs for b, fs in m["buckets"].items() if b not in deltas
-                },
-                "file_stats": m.get("file_stats", {}),
-            }
-            cold_rels, _ = self._zone_pruned_rels(cold, col, lo, hi)
-            hot_base = [p for b in deltas for p in m["buckets"].get(b, [])]
-            hot_delta = [p for fs in deltas.values() for p in fs]
-            df = self._fold(hot_base, hot_delta).unionByName(
-                self._read_files(cold_rels)
-            )
-        df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:
             df = df.filter(F.col(col) <= F.lit(hi))
-        visible = [f.name for f in self.spec.destination_schema().fields]
-        return df.select(*visible)
+        return self._visible(df)
 
     def prune_report(
         self,
@@ -991,42 +1026,7 @@ class SnapshotTable:
         (zero file opens) — the observability half of zone-map pruning,
         for layout decisions: a low skip ratio on a hot predicate column
         is the signal to re-``optimize`` with that column in the sort."""
-        m = (
-            self.current_manifest()
-            if version is None
-            else self.manifest_at(version)
-        )
-        if m is None:
-            return {"files_total": 0, "files_read": 0, "ok": True}
-        deltas: dict[str, list[str]] = m.get("deltas") or {}
-        if not deltas:
-            rels, all_rels = self._zone_pruned_rels(m, col, lo, hi)
-        else:
-            # mirror read_range exactly: delta-bearing buckets read their
-            # base + delta files in full (fold correctness), cold buckets
-            # zone-prune — so the report quantifies the REAL skip ratio,
-            # including the pruning the delta debt is costing (a low ratio
-            # on a hot predicate column is also the compact_deltas signal)
-            cold = {
-                "buckets": {
-                    b: fs for b, fs in m["buckets"].items() if b not in deltas
-                },
-                "file_stats": m.get("file_stats", {}),
-            }
-            cold_rels, cold_all = self._zone_pruned_rels(cold, col, lo, hi)
-            hot = [p for b in deltas for p in m["buckets"].get(b, [])] + [
-                p for fs in deltas.values() for p in fs
-            ]
-            rels, all_rels = cold_rels + hot, cold_all + hot
-        stats = m.get("file_stats", {})
-        b = lambda ps: sum(int(stats.get(p, {}).get("bytes", 0)) for p in ps)  # noqa: E731
-        return {
-            "files_total": len(all_rels),
-            "files_read": len(rels),
-            "files_skipped": len(all_rels) - len(rels),
-            "bytes_total": b(all_rels),
-            "bytes_read": b(rels),
-        }
+        return self._prune_report(self._manifest(version), self._zone_keep(col, lo, hi))
 
     # ---- metadata-only count + bloom point lookups -----------------------------
 
@@ -1046,11 +1046,7 @@ class SnapshotTable:
         fall back to counting the folded visible read and say so:
         ``source="fold"``. Callers that need the fast path keep it by
         compaction cadence, not by trusting a stale number."""
-        m = (
-            self.current_manifest()
-            if version is None
-            else self.manifest_at(version)
-        )
+        m = self._manifest(version)
         if m is None:
             return {"live_rows": 0, "files": 0, "source": "manifest"}
         if m.get("deltas"):
@@ -1205,10 +1201,7 @@ class SnapshotTable:
                 }
             entry["bloom"] = blooms
             stats[rel] = entry
-        manifest = dict(m)
-        manifest["file_stats"] = stats
-        manifest["kind"] = "blooms"
-        self._commit(manifest)
+        self._commit({**m, "file_stats": stats, "kind": "blooms"})
         return len(rels)
 
     @staticmethod
@@ -1232,32 +1225,25 @@ class SnapshotTable:
             ]
         )
 
-    def _bloom_pruned_rels(
-        self, m: dict[str, Any], col: str, values: list
-    ) -> tuple[list[str], list[str]]:
-        """(files to read, all files) for ``col IN values`` under the
-        manifest blooms. Files without a bloom for the column are
-        conservatively read — correctness never depends on stats existing,
-        only the residual in-file filter."""
+    @staticmethod
+    def _bloom_keep(col: str, values: list) -> Keep:
+        """``_select`` predicate of ``col IN values`` under the manifest
+        blooms. Files without a bloom for the column are conservatively
+        read — correctness never depends on stats existing, only the
+        residual in-file filter."""
         from relational_data_loader_spark.operators.bloom import (
             probe_words,
             unpack_words,
         )
 
-        stats = m.get("file_stats", {})
-        all_rels = [p for fs in m["buckets"].values() for p in fs]
-        keep: list[str] = []
-        for rel in all_rels:
-            bl = (stats.get(rel, {}).get("bloom") or {}).get(col)
+        def keep(st: dict[str, Any]) -> bool:
+            bl = (st.get("bloom") or {}).get(col)
             if bl is None:
-                keep.append(rel)
-                continue
+                return True
             words = unpack_words(bl["b64"], bl["m"])
-            if any(
-                probe_words(words, v, bl["m"], bl["k"]) for v in values
-            ):
-                keep.append(rel)
-        return keep, all_rels
+            return any(probe_words(words, v, bl["m"], bl["k"]) for v in values)
+
+        return keep
 
     def point_lookup(self, col: str, values: list) -> DataFrame:
         """Visible rows with ``col IN values``, opening ONLY the files
@@ -1271,71 +1257,21 @@ class SnapshotTable:
         rows did these LSNs write" — probes ``_rdl_lsn``); when ``col`` is
         internal it is appended to the visible projection so the caller
         can see what matched. Delta-bearing buckets read base+delta in
-        full and fold first, the same stale-winner rule ``read_range``
-        documents: pruning a base file could flip a fold."""
-        m = self.current_manifest()
-        if m is None:
-            return self.spark.createDataFrame(
-                [], self.spec.destination_schema()
-            )
-        deltas: dict[str, list[str]] = m.get("deltas") or {}
-        if not deltas:
-            rels, _ = self._bloom_pruned_rels(m, col, values)
-            df = self._read_files(rels)
-        else:
-            cold = {
-                "buckets": {
-                    b: fs for b, fs in m["buckets"].items() if b not in deltas
-                },
-                "file_stats": m.get("file_stats", {}),
-            }
-            cold_rels, _ = self._bloom_pruned_rels(cold, col, values)
-            hot_base = [p for b in deltas for p in m["buckets"].get(b, [])]
-            hot_delta = [p for fs in deltas.values() for p in fs]
-            df = self._fold(hot_base, hot_delta).unionByName(
-                self._read_files(cold_rels)
-            )
-        df = df.filter(
-            F.col(col).isin(values)
-            & ~F.coalesce(F.col(DELETED_COL), F.lit(False))
+        full and fold first (``_select``): pruning a base file could flip
+        a fold."""
+        df = self._assembled(
+            self.current_manifest() or {}, keep=self._bloom_keep(col, values)
         )
-        visible = [f.name for f in self.spec.destination_schema().fields]
-        if col not in visible:
-            visible = visible + [col]
-        return df.select(*visible)
+        return self._visible(df.filter(F.col(col).isin(values)), col)
 
     def bloom_prune_report(self, col: str, values: list) -> dict[str, Any]:
         """What ``point_lookup`` would skip, from manifest metadata alone —
         the observability twin of ``prune_report`` for bloom pruning. A
         low skip ratio on a hot probe column means the blooms are stale
         (rebuild after maintenance) or undersized (raise bits_per_key)."""
-        m = self.current_manifest()
-        if m is None:
-            return {"files_total": 0, "files_read": 0, "files_skipped": 0}
-        deltas: dict[str, list[str]] = m.get("deltas") or {}
-        if not deltas:
-            rels, all_rels = self._bloom_pruned_rels(m, col, values)
-        else:
-            cold = {
-                "buckets": {
-                    b: fs for b, fs in m["buckets"].items() if b not in deltas
-                },
-                "file_stats": m.get("file_stats", {}),
-            }
-            cold_rels, cold_all = self._bloom_pruned_rels(cold, col, values)
-            hot = [p for b in deltas for p in m["buckets"].get(b, [])] + [
-                p for fs in deltas.values() for p in fs
-            ]
-            rels, all_rels = cold_rels + hot, cold_all + hot
-        stats = m.get("file_stats", {})
-        b = lambda ps: sum(int(stats.get(p, {}).get("bytes", 0)) for p in ps)  # noqa: E731
-        return {
-            "files_total": len(all_rels),
-            "files_read": len(rels),
-            "files_skipped": len(all_rels) - len(rels),
-            "bytes_total": b(all_rels),
-            "bytes_read": b(rels),
-        }
+        return self._prune_report(
+            self.current_manifest(), self._bloom_keep(col, values)
+        )
 
     # ---- change data feed ------------------------------------------------------
 
@@ -1397,15 +1333,10 @@ class SnapshotTable:
             # bucket-scoped assembly: MoR manifests fold each changed
             # bucket's base ∪ deltas to its LWW state first, so the diff
             # compares the same resolved rows a reader of that version sees
-            deltas = m.get("deltas") or {}
-            sub = {
-                "buckets": {b: m["buckets"].get(b, []) for b in changed},
-                "deltas": {b: deltas[b] for b in changed if b in deltas},
-            }
-            df = self._assembled(sub)
-            flag = F.coalesce(F.col(DELETED_COL), F.lit(False))
+            df = self._assembled(m, changed)
             if not with_tombstones:
-                return df.filter(~flag).select(*visible, F.col(LSN_COL))
+                return self._visible(df, LSN_COL)
+            flag = F.coalesce(F.col(DELETED_COL), F.lit(False))
             return df.select(*visible, F.col(LSN_COL), flag.alias("_del"))
 
         # old side: visible rows only; new side: tombstones kept so a
@@ -1466,10 +1397,7 @@ class SnapshotTable:
 
     def layout_buckets(self) -> int:
         """Bucket count the committed files were actually laid out with."""
-        m = self.current_manifest()
-        if m is None:
-            return self.n_buckets
-        return int(m.get("n_buckets", self.n_buckets))
+        return self._layout(self.current_manifest() or {})
 
     # ---- MERGE ---------------------------------------------------------------
 
@@ -1556,7 +1484,7 @@ class SnapshotTable:
         # never the live spec — a target_buckets edit must not desync bucket
         # lookups from file placement (that would leave stale duplicates);
         # re-bucketing is a full refresh's job (decision.py forces it).
-        layout = int(m.get("n_buckets", self.n_buckets))
+        layout = self._layout(m)
         if not netted:
             batch = self._salted_prenet(batch)
 
@@ -1584,7 +1512,12 @@ class SnapshotTable:
             # then fills the cache as a side effect, so the merge below
             # reads cached blocks instead of recomputing the batch's
             # scan+projection a second time — one batch evaluation per
-            # epoch instead of two. Oversized batches (> stage_threshold)
+            # epoch instead of two. It also keeps a streaming micro-batch's
+            # source read once: unpersisted, the stats pass and the write
+            # each re-read the foreachBatch source, and the query reports
+            # twice the segment's rows as numInputRows (measured: 10000 for
+            # a 5000-row segment; tests/test_streaming.py pins the sum).
+            # Oversized batches (> stage_threshold)
             # still move to scratch parquet below, writing the stage FROM
             # the cache (one pass) and unpersisting immediately, so the
             # cache never holds a replay-scale batch across consumers (the
@@ -1662,21 +1595,15 @@ class SnapshotTable:
                 buckets = m["buckets"]
                 kind, seq_after = "merge_mor", next_seq + 1
             else:
-                target = self._read_files(
-                    [p for b in touched for p in m["buckets"].get(str(b), [])]
-                ).withColumn(SEQ_COL, F.lit(0).cast("long"))
                 # pending MoR deltas for the touched buckets fold into this
                 # rewrite (mode interleave safety): their rows join the
                 # target side carrying their commit seq, so equal-lsn
                 # redeliveries still resolve toward the later epoch, and the
                 # new manifest drops the absorbed delta references.
-                delta_rels_touched = [
-                    p for b in touched for p in deltas.get(str(b), [])
-                ]
-                if delta_rels_touched:
-                    target = target.unionByName(
-                        self._read_delta_files(delta_rels_touched)
-                    )
+                target = self._with_deltas(
+                    [p for b in touched for p in m["buckets"].get(str(b), [])],
+                    [p for b in touched for p in deltas.get(str(b), [])],
+                )
                 # version-guarded LWW against the target (module docstring):
                 # stored rows and batch rows become one envelope stream and
                 # the max-lsn row per PK wins; deletes win as tombstone rows.
@@ -1772,51 +1699,62 @@ class SnapshotTable:
         run is independently committed/resumable because per-bucket folds
         never interact. Returns the number of delta files folded."""
         m = self.current_manifest()
-        if m is None:
-            return 0
-        all_deltas: dict[str, list[str]] = m.get("deltas") or {}
+        all_deltas: dict[str, list[str]] = (m or {}).get("deltas") or {}
         if not all_deltas:
             return 0
         if max_buckets is not None and max_buckets <= 0:
             # an exhausted scheduler budget means NO work this cycle — not
             # a silent one-bucket shuffle
             return 0
-        if max_buckets is not None and max_buckets < len(all_deltas):
-            worst = sorted(
-                all_deltas, key=lambda b: len(all_deltas[b]), reverse=True
-            )[:max_buckets]
-            deltas = {b: all_deltas[b] for b in worst}
-        else:
-            deltas = all_deltas
-        layout = int(m.get("n_buckets", self.n_buckets))
-        base_rels = [p for b in deltas for p in m["buckets"].get(b, [])]
-        delta_rels = [p for fs in deltas.values() for p in fs]
-        unioned = self._read_files(base_rels).withColumn(
-            SEQ_COL, F.lit(0).cast("long")
-        ).unionByName(self._read_delta_files(delta_rels))
+        worst = sorted(
+            all_deltas, key=lambda b: len(all_deltas[b]), reverse=True
+        )[:max_buckets]
+        hot_base, delta_rels, cold, _ = self._select(m, worst)
         folded = self._clustered(
-            unioned,
-            layout,
-            lww=[
-                F.desc(F.coalesce(F.col(LSN_COL), F.lit(-1))),
-                F.desc(F.coalesce(F.col(SEQ_COL), F.lit(0))),
-            ],
+            self._with_deltas(hot_base + cold, delta_rels),
+            self._layout(m),
+            lww=self._fold_order(),
         ).drop(SEQ_COL)
-        new_buckets = self._write_buckets(folded)
-        buckets = {
-            b: fs for b, fs in m["buckets"].items() if b not in deltas
-        }
-        buckets.update(new_buckets)
-        remaining = {b: fs for b, fs in all_deltas.items() if b not in deltas}
-        manifest = dict(m)
-        manifest["buckets"] = buckets
-        if remaining:
-            manifest["deltas"] = remaining
-        else:
-            manifest.pop("deltas", None)
-        manifest["kind"] = "compact_deltas"
-        self._commit(manifest)
+        folding = set(worst)
+        self._rewrite(
+            m, "compact_deltas", folded, folding,
+            deltas={b: fs for b, fs in all_deltas.items() if b not in folding},
+        )
         return len(delta_rels)
+
+    def _compacted_head(self) -> dict[str, Any] | None:
+        """The head manifest after folding any pending merge-on-read deltas
+        into base — the first step of every whole-bucket rewrite (optimize,
+        rebucket, expire_tombstones, a renaming evolve): those read the
+        buckets' BASE file lists, and a rewrite that ignored delta rows
+        would silently drop uncompacted epochs."""
+        if (self.current_manifest() or {}).get("deltas"):
+            self.compact_deltas()
+        return self.current_manifest()
+
+    def _rewrite(
+        self,
+        m: dict[str, Any],
+        kind: str,
+        clustered: DataFrame,
+        rewritten: set[str] | None = None,
+        **fields: Any,
+    ) -> dict[str, Any]:
+        """Commit a maintenance rewrite of head ``m``: write ``_clustered``
+        output, keep the buckets outside ``rewritten`` (default: none) by
+        reference, and commit ``{**m, **fields, buckets, kind}`` — epochs,
+        watermarks and schema carry over untouched. A ``deltas`` map left
+        empty is dropped, as on every commit with no pending deltas."""
+        buckets = {
+            b: fs
+            for b, fs in m["buckets"].items()
+            if rewritten is not None and b not in rewritten
+        }
+        buckets.update(self._write_buckets(clustered))
+        manifest = {**m, **fields, "buckets": buckets, "kind": kind}
+        if not manifest.get("deltas"):
+            manifest.pop("deltas", None)
+        return self._commit(manifest)
 
     # ---- clones ----------------------------------------------------------------
 
@@ -1850,11 +1788,7 @@ class SnapshotTable:
         clone's committed manifest."""
         if mode not in ("shallow", "deep"):
             raise ValueError(f"clone mode must be 'shallow' or 'deep', got {mode!r}")
-        m = (
-            self.current_manifest()
-            if version is None
-            else self.manifest_at(version)
-        )
+        m = self._manifest(version)
         if m is None:
             raise RuntimeError("clone_to: source table has no committed snapshot")
         if os.path.abspath(dest_path) == os.path.abspath(self.path):
@@ -1916,7 +1850,7 @@ class SnapshotTable:
         manifest = {
             "buckets": buckets_new,
             "file_stats": stats_new,
-            "n_buckets": int(m.get("n_buckets", self.n_buckets)),
+            "n_buckets": self._layout(m),
             "applied_epochs": sorted(_normalize_epoch_keys(m["applied_epochs"])),
             "watermark": int(m["watermark"]),
             "baseline_watermark": int(
@@ -2074,15 +2008,10 @@ class SnapshotTable:
         way (chunking splits WITHIN each bucket), so ``read_keys`` keeps
         pruning by bucket — now to smaller files.
         """
-        # pending merge-on-read deltas fold into base first: this verb
-        # rewrites whole buckets from their BASE file lists, and a rewrite
-        # that ignored delta rows would silently drop uncompacted epochs
-        if (self.current_manifest() or {}).get("deltas"):
-            self.compact_deltas()
-        m = self.current_manifest()
+        m = self._compacted_head()
         if m is None:
             return 0
-        layout = int(m.get("n_buckets", self.n_buckets))
+        layout = self._layout(m)
         rels = [p for files in m["buckets"].values() for p in files]
         df = self._read_files(rels)
         if zorder_cols:
@@ -2125,11 +2054,7 @@ class SnapshotTable:
             )
         if zorder_cols:
             clustered = clustered.drop("zcode", "file_id")
-        new_buckets = self._write_buckets(clustered)
-        manifest = dict(m)
-        manifest["buckets"] = new_buckets
-        manifest["kind"] = "optimize"
-        self._commit(manifest)
+        self._rewrite(m, "optimize", clustered)
         return len(rels)
 
     def rebucket(self, n_buckets: int) -> int:
@@ -2151,15 +2076,10 @@ class SnapshotTable:
         automatically. Returns the previous bucket count (0 = no table or
         no-op).
         """
-        # pending merge-on-read deltas fold into base first: this verb
-        # rewrites whole buckets from their BASE file lists, and a rewrite
-        # that ignored delta rows would silently drop uncompacted epochs
-        if (self.current_manifest() or {}).get("deltas"):
-            self.compact_deltas()
-        m = self.current_manifest()
+        m = self._compacted_head()
         if m is None:
             return 0
-        old = int(m.get("n_buckets", self.n_buckets))
+        old = self._layout(m)
         n_buckets = int(n_buckets)
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
@@ -2171,12 +2091,7 @@ class SnapshotTable:
         clustered = self._clustered(df, n_buckets).sortWithinPartitions(
             _BUCKET_COL, *self.spec.primary_keys
         )
-        new_buckets = self._write_buckets(clustered)
-        manifest = dict(m)
-        manifest["buckets"] = new_buckets
-        manifest["n_buckets"] = n_buckets
-        manifest["kind"] = "rebucket"
-        self._commit(manifest)
+        self._rewrite(m, "rebucket", clustered, n_buckets=n_buckets)
         return old
 
     def maintenance_report(
@@ -2223,7 +2138,7 @@ class SnapshotTable:
                 int(stats.get(p, {}).get("bytes", 0)) for p in files
             )
             total_rows += sum(int(stats.get(p, {}).get("rows", 0)) for p in files)
-        n_buckets = int(m.get("n_buckets", self.n_buckets))
+        n_buckets = self._layout(m)
         sizes = list(per_bucket_bytes.values()) or [0]
         mean_b = sum(sizes) / max(len(sizes), 1)
         max_files = max(per_bucket_files.values() or [0])
@@ -2296,11 +2211,7 @@ class SnapshotTable:
         repairs — the fix is time travel to an intact version or replay
         from the change log, both of which need the evidence intact.
         """
-        m = (
-            self.current_manifest()
-            if version is None
-            else self.manifest_at(version)
-        )
+        m = self._manifest(version)
         if m is None:
             return {"status": "no_table", "ok": True}
         stats = m.get("file_stats", {})
@@ -2349,15 +2260,10 @@ class SnapshotTable:
         files are fully processed up to it). Rewrites ONLY the buckets that
         hold expirable tombstones — found by one column-pruned scan of the
         two internal columns."""
-        # pending merge-on-read deltas fold into base first: this verb
-        # rewrites whole buckets from their BASE file lists, and a rewrite
-        # that ignored delta rows would silently drop uncompacted epochs
-        if (self.current_manifest() or {}).get("deltas"):
-            self.compact_deltas()
-        m = self.current_manifest()
+        m = self._compacted_head()
         if m is None:
             return 0
-        layout = int(m.get("n_buckets", self.n_buckets))
+        layout = self._layout(m)
         df = self._read_files(
             [p for files in m["buckets"].values() for p in files]
         )
@@ -2377,15 +2283,10 @@ class SnapshotTable:
         keep_df = self._read_files(
             [p for b in touched for p in m["buckets"].get(str(b), [])]
         ).filter(~expirable)
-        new_buckets = self._write_buckets(self._clustered(keep_df, layout))
-        buckets = {
-            b: files for b, files in m["buckets"].items() if int(b) not in touched
-        }
-        buckets.update(new_buckets)
-        manifest = dict(m)
-        manifest["buckets"] = buckets
-        manifest["kind"] = "expire_tombstones"
-        self._commit(manifest)
+        self._rewrite(
+            m, "expire_tombstones", self._clustered(keep_df, layout),
+            {str(b) for b in touched},
+        )
         return expired
 
     # ---- schema evolution ------------------------------------------------------
@@ -2413,16 +2314,10 @@ class SnapshotTable:
         sink's, not the engine's, and is documented in sinks/iceberg.py.
         """
         if renames:
-            # a rename rewrite reads the BASE file lists with the old
-            # schema; fold pending MoR deltas in first so no epoch is lost
-            if (self.current_manifest() or {}).get("deltas"):
-                self.compact_deltas()
-            m = self.current_manifest()
+            m = self._compacted_head()
             # read the existing files with the schema they were WRITTEN with
             # (the manifest's), not the new spec's — read-by-name would
             # resolve the renamed column to NULL otherwise
-            from pyspark.sql import types as T
-
             old_schema = T.StructType.fromJson(json.loads(m["schema"]))
             rels = [p for files in m["buckets"].values() for p in files]
             if rels:
@@ -2433,7 +2328,6 @@ class SnapshotTable:
                 df = self.spark.createDataFrame([], old_schema)
             for old, new in renames:
                 df = df.withColumnRenamed(old, new)
-            old_spec = self.spec
             self.spec = new_spec
             self.bucket_key = new_spec.primary_keys[0]
             for c in new_spec.columns:
@@ -2447,7 +2341,7 @@ class SnapshotTable:
                     )
             # a rename rewrites rows but keeps the committed bucket layout
             # (hashing is on values, which are unchanged)
-            layout = int(m.get("n_buckets", self.n_buckets))
+            layout = self._layout(m)
             # audit stamps + version/tombstone columns ride through untouched
             # (a rename is not a load; rows keep their epoch and lsn)
             for name, typ in ((LSN_COL, "long"), (DELETED_COL, "boolean")):
@@ -2474,14 +2368,16 @@ class SnapshotTable:
                     "kind": "evolve_rename",
                 }
             )
-            del old_spec
         else:
             m = self.current_manifest()
             self.spec = new_spec
-            manifest = dict(m)
-            manifest["n_buckets"] = int(m.get("n_buckets", self.n_buckets))
-            manifest["spec_checksum"] = new_spec.checksum()
-            manifest["spec_json"] = new_spec.to_json()
-            manifest["schema"] = self._storage_schema().json()
-            manifest["kind"] = "evolve_add"
-            self._commit(manifest)
+            self._commit(
+                {
+                    **m,
+                    "n_buckets": self._layout(m),
+                    "spec_checksum": new_spec.checksum(),
+                    "spec_json": new_spec.to_json(),
+                    "schema": self._storage_schema().json(),
+                    "kind": "evolve_add",
+                }
+            )

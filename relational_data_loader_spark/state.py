@@ -58,26 +58,28 @@ class StateTable:
         wall_ms: int,
         kind: str = "merge",
     ) -> None:
+        # an epoch that touched no partition (an empty merge) has no lineage
+        # to record: no row, rather than a placeholder a reader would take
+        # for a full refresh's partition -1 row
+        if not bucket_stats:
+            return
         now = int(time.time() * 1_000_000)
-        n = max(len(bucket_stats), 1)
-        rows = bucket_stats or [
-            {"partition_id": -1, "max_applied_lsn": -1, "rows_upserted": 0, "rows_deleted": 0}
-        ]
+        n = len(bucket_stats)
         tbl = pa.table(
             {
                 "table_name": pa.array([table_name] * n, pa.string()),
                 "epoch_id": pa.array([epoch_id] * n, pa.int64()),
                 "partition_id": pa.array(
-                    [r["partition_id"] for r in rows], pa.int32()
+                    [r["partition_id"] for r in bucket_stats], pa.int32()
                 ),
                 "max_applied_lsn": pa.array(
-                    [r["max_applied_lsn"] for r in rows], pa.int64()
+                    [r["max_applied_lsn"] for r in bucket_stats], pa.int64()
                 ),
                 "rows_upserted": pa.array(
-                    [r["rows_upserted"] for r in rows], pa.int64()
+                    [r["rows_upserted"] for r in bucket_stats], pa.int64()
                 ),
                 "rows_deleted": pa.array(
-                    [r["rows_deleted"] for r in rows], pa.int64()
+                    [r["rows_deleted"] for r in bucket_stats], pa.int64()
                 ),
                 "wall_ms": pa.array([wall_ms] * n, pa.int64()),
                 "rows_per_sec": pa.array(
@@ -87,7 +89,7 @@ class StateTable:
                             / (max(wall_ms, 1) / 1000.0),
                             2,
                         )
-                        for r in rows
+                        for r in bucket_stats
                     ],
                     pa.float64(),
                 ),

@@ -4,7 +4,7 @@ Full refresh: one row (partition -1, the survivor count). Merges — CoW
 chunks, MoR, a streaming micro-batch, a dead-letter replay — one row per
 touched bucket per epoch, counting the envelopes the epoch carried in that
 bucket, under the path's ``kind``. An epoch the sink skips as already
-applied appends nothing.
+applied appends nothing, and so does an epoch that carried no envelopes.
 """
 
 import pyarrow.compute as pc
@@ -133,3 +133,14 @@ def test_dlq_replay(spark, tmp_path):
         [(3, 3, "I"), (1, 5, "U"), (5, 10, "I")], "id bigint, lsn bigint, op string"
     )
     assert _rows(mgr, "dlq_replay") == _expected(replayed, "id", 4, r.epoch_id)
+
+
+def test_dlq_replay_of_still_failing_rows_appends_nothing(spark, tmp_path):
+    _write_log(spark, tmp_path, LOG)
+    mgr = DataLoadManager(spark, str(tmp_path / "wh"))
+    wide = _spec(tmp_path, val_type="bigint")
+    mgr.run(wide)  # only lsn 9 detours, and its PK cast keeps failing
+    for _ in range(2):
+        assert mgr.replay_dlq(wide).rows_upserted == 0
+    assert _rows(mgr, "dlq_replay") == set()
+    assert set(mgr.state.read().to_pandas()["kind"]) == {"full_refresh"}

@@ -222,6 +222,23 @@ def test_read_range_stale_delta_cannot_leak(spark, tmp_path):
     assert rep["files_read"] == rep["files_total"]
 
 
+def test_prune_report_counts_what_a_mor_range_read_opens(spark, tmp_path):
+    """Pending deltas make their bucket unprunable while cold buckets still
+    zone-prune; the report counts exactly the files the read opens."""
+    t = mk(spark, str(tmp_path), "mor", "t")
+    rows = [(i, "U", f"c{i % 40}", i, "user", f"t{i}", None, TS) for i in range(400)]
+    t.full_refresh_from_envelopes(envelopes(spark, rows), epoch_id=0, watermark=400)
+    t.optimize(sort_cols=["turn_idx"], files_per_bucket=4)
+    t.merge(envelopes(spark, [(500, "U", "c0", 0, "user", "x", None, TS)]), epoch_id=1)
+    assert len(t.current_manifest()["deltas"]) == 1
+    rep = t.prune_report("turn_idx", 0, 10)
+    assert rep["files_skipped"] > 0, rep
+    got = t.read_range("turn_idx", 0, 10)
+    assert len(set(got.inputFiles())) == rep["files_read"]
+    want = t.read().filter((F.col("turn_idx") >= 0) & (F.col("turn_idx") <= 10))
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_cdf_across_delta_commits_matches_cow(spark, tmp_path):
     base = str(tmp_path)
     outs = {}

@@ -101,9 +101,9 @@ def test_point_lookup_equals_filtered_read_and_prunes(spark, warehouse, tmp_path
     rep = tbl.bloom_prune_report("text", probes)
     assert rep["files_skipped"] > 0, rep
     assert rep["files_read"] + rep["files_skipped"] == rep["files_total"]
-    got = sorted(
-        tuple(r) for r in tbl.point_lookup("text", probes).collect()
-    )
+    lookup = tbl.point_lookup("text", probes)
+    assert len(set(lookup.inputFiles())) == rep["files_read"]
+    got = sorted(tuple(r) for r in lookup.collect())
     want = sorted(
         tuple(r) for r in final.filter(F.col("text").isin(probes)).collect()
     )

@@ -75,6 +75,21 @@ def test_stream_kill_and_resume_exactly_once(spark, warehouse, tmp_path, log_tbl
     assert partial <= len(got) + N_EVENTS  # sanity: phase 1 did not corrupt
 
 
+def test_micro_batches_read_each_event_once(spark, warehouse, tmp_path, log_tbl):
+    """The sink's stats pass and its write both consume a micro-batch; the
+    merge persists the batch so the foreachBatch source is scanned once.
+    Unpersisted, each scan counts toward numInputRows and the sum reads
+    twice the log."""
+    logdir = str(tmp_path / "log")
+    write_log(log_tbl, logdir, n_files=4)
+    spec = transcripts_spec(source=f"parquet://{logdir}", target_buckets=8)
+    mgr = DataLoadManager(spark, warehouse)
+    ing = StreamingIngest(mgr, spec, str(tmp_path / "ckpt"), max_files_per_trigger=2)
+    q = ing.start(available_now=True)
+    q.awaitTermination()
+    assert sum(p["numInputRows"] for p in q.recentProgress) == log_tbl.num_rows
+
+
 def test_replayed_epoch_is_noop(spark, warehouse, tmp_path, log_tbl):
     """Simulate foreachBatch at-least-once: re-apply a committed epoch id."""
     logdir = str(tmp_path / "log")

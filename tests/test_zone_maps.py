@@ -63,8 +63,11 @@ def test_range_split_compaction_enables_file_skipping(spark, tmp_path):
     assert after["files_total"] > before["files_total"]
     assert after["files_skipped"] > 0
     assert after["bytes_read"] < after["bytes_total"]
+    # the report counts exactly the files the read opens
+    pruned = t.read_range("turn_idx", lo=0, hi=0)
+    assert len(set(pruned.inputFiles())) == after["files_read"]
     # pruned read is still exact
-    got = spark_sorted_pdf(t.read_range("turn_idx", lo=0, hi=0))
+    got = spark_sorted_pdf(pruned)
     want = spark_sorted_pdf(t.read().filter("turn_idx = 0"))
     assert got.equals(want)
     # and fsck still verifies the new manifest clean
@@ -80,7 +83,7 @@ def test_missing_zone_map_reads_conservatively(spark, tmp_path):
         rel: {k: v for k, v in rec.items() if k != "minmax"}
         for rel, rec in m["file_stats"].items()
     }
-    rels, all_rels = t._zone_pruned_rels(stripped, "turn_idx", 0, 0)
+    _, _, rels, all_rels = t._select(stripped, keep=t._zone_keep("turn_idx", 0, 0))
     assert rels == all_rels  # unknown stats -> must read everything
 
 
@@ -101,8 +104,8 @@ def test_footer_zone_maps_null_only_and_long_strings(tmp_path):
 
 
 def test_zone_pruning_rules():
-    # pure pruning-decision logic, no table needed: _zone_pruned_rels only
-    # touches self._zone_value, which is a staticmethod on the class
+    # pure pruning-decision logic, no table needed: _select is a
+    # staticmethod and _zone_keep only touches the class's _zone_value
     stats = {
         "a.parquet": {"minmax": {"c": {"null_only": True}}},
         "b.parquet": {"minmax": {"c": {"min": 5, "max": 9}}},
@@ -113,12 +116,17 @@ def test_zone_pruning_rules():
         "buckets": {"0": ["a.parquet", "b.parquet"], "1": ["c.parquet", "d.parquet"]},
         "file_stats": stats,
     }
-    prune = SnapshotTable._zone_pruned_rels
-    keep, allr = prune(SnapshotTable, m, "c", 1, 20)
+    def prune(col, lo, hi):
+        _, _, keep, allr = SnapshotTable._select(
+            m, keep=SnapshotTable._zone_keep(col, lo, hi)
+        )
+        return keep, allr
+
+    keep, allr = prune("c", 1, 20)
     assert keep == ["b.parquet", "d.parquet"] and len(allr) == 4
-    keep, _ = prune(SnapshotTable, m, "c", 60, None)
+    keep, _ = prune("c", 60, None)
     assert keep == ["c.parquet", "d.parquet"]
-    keep, _ = prune(SnapshotTable, m, "c", None, None)
+    keep, _ = prune("c", None, None)
     assert keep == ["b.parquet", "c.parquet", "d.parquet"]  # null_only still skipped
 
 
@@ -130,3 +138,15 @@ def test_zone_values_order_preserving(tmp_path):
     assert zv(dt.date(2024, 1, 2)) < zv(dt.date(2024, 2, 1))
     assert zv(3) == 3 and zv(2.5) == 2.5 and zv("ab") == "ab"
     assert zv(True) is None and zv(b"raw") is None and zv("x" * 300) is None
+
+
+def test_reports_on_a_table_with_no_commit(spark, tmp_path):
+    # both prune reports share one shape, zeros included
+    spec = transcripts_spec(source="parquet:///dev/null", target_buckets=4)
+    t = SnapshotTable(spark, str(tmp_path / "t"), spec)
+    zero = dict.fromkeys(
+        ["files_total", "files_read", "files_skipped", "bytes_total", "bytes_read"], 0
+    )
+    assert t.prune_report("turn_idx", lo=0, hi=1) == zero
+    assert t.bloom_prune_report("text", ["x"]) == zero
+    assert t.read_range("turn_idx", lo=0, hi=1).count() == 0
