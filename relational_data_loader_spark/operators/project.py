@@ -13,10 +13,23 @@ none): named, Arrow-vectorized functions from
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from relational_data_loader_spark.session import cached_columns
 from relational_data_loader_spark.spec import IngestSpec
+
+
+def ddl_type(dt: T.DataType) -> str:
+    """``dt`` as a type string for ``Column.cast``/``try_cast``. A string
+    cast is one py4j call; a ``DataType`` cast first resolves the active
+    session and parses the type's JSON on the JVM (tens of calls per
+    column). Timestamps are spelled ``timestamp_ltz`` so the parse does not
+    follow a session's ``spark.sql.timestampType``."""
+    return "timestamp_ltz" if isinstance(dt, T.TimestampType) else dt.simpleString()
 
 
 def project_cast(df: DataFrame, spec: IngestSpec, include_envelope: bool = True) -> DataFrame:
@@ -24,22 +37,41 @@ def project_cast(df: DataFrame, spec: IngestSpec, include_envelope: bool = True)
 
     Keeps the (lsn, op) envelope columns when present and requested; maps
     each spec column ``source -> destination`` with a cast to the declared
-    type and the optional named transform.
+    type and the optional named transform. The columns are built once per
+    spec (``cached_columns``): every epoch of a load projects alike.
     """
     from relational_data_loader_spark.functions.registry import get_transform
 
-    cols: list[Column] = []
+    # the checksum covers the column mapping; the envelope names and the
+    # transforms (by function, so a re-registered name rebuilds) it does not
+    transforms = tuple(
+        (c.destination, get_transform(spec.transforms[c.destination]))
+        for c in spec.columns
+        if c.destination in spec.transforms
+    )
+    envelope, mapped = cached_columns(
+        ("project_cast", spec.checksum(), spec.lsn_column, spec.op_column, transforms),
+        lambda: _projection(spec, dict(transforms)),
+    )
     if include_envelope:
-        for env in (spec.lsn_column, spec.op_column):
-            if env in df.columns:
-                cols.append(F.col(env))
+        present = df.columns
+        return df.select(
+            *[c for name, c in envelope if name in present], *mapped
+        )
+    return df.select(*mapped)
+
+
+def _projection(
+    spec: IngestSpec, transforms: dict[str, Callable[[Column], Column]]
+) -> tuple[list[tuple[str, Column]], list[Column]]:
+    envelope = [(env, F.col(env)) for env in (spec.lsn_column, spec.op_column)]
+    mapped: list[Column] = []
     for c in spec.columns:
-        expr = F.col(c.source).cast(c.spark_type)
-        t = spec.transforms.get(c.destination)
-        if t:
-            expr = get_transform(t)(expr)
-        cols.append(expr.alias(c.destination))
-    return df.select(*cols)
+        expr = F.col(c.source).cast(ddl_type(c.spark_type))
+        if c.destination in transforms:
+            expr = transforms[c.destination](expr)
+        mapped.append(expr.alias(c.destination))
+    return envelope, mapped
 
 
 QUARANTINE_ERRORS_COL = "_rdl_errors"
@@ -67,7 +99,7 @@ def project_cast_quarantine(
     fails = [
         F.when(
             F.col(c.source).isNotNull()
-            & F.col(c.source).try_cast(c.spark_type).isNull(),
+            & F.col(c.source).try_cast(ddl_type(c.spark_type)).isNull(),
             F.lit(c.destination),
         )
         for c in spec.columns
@@ -100,7 +132,7 @@ def flag_lossy_casts(df: DataFrame, spec: IngestSpec) -> DataFrame:
     for c in spec.columns:
         lossy = (
             F.col(c.source).isNotNull()
-            & F.col(c.source).try_cast(c.spark_type).isNull()
+            & F.col(c.source).try_cast(ddl_type(c.spark_type)).isNull()
         )
         if not c.primary_key:
             lossy = lossy & ~is_del

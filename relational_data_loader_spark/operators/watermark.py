@@ -13,15 +13,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from relational_data_loader_spark.session import cached_columns
+
 
 def bucket_expr(key_col: str, n_buckets: int) -> F.Column:
     """Deterministic hash bucket of the partition key (xxhash64, JVM-side).
 
     This single expression defines data placement for the whole engine:
     the snapshot sink lays files out by it, merge prunes by it, and the
-    watermark vector is keyed by it.
+    watermark vector is keyed by it. Built once per (key, bucket count)
+    and reused (``cached_columns``).
     """
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+    return cached_columns(
+        ("bucket_expr", key_col, int(n_buckets)),
+        lambda: F.pmod(F.xxhash64(F.col(key_col)), F.lit(int(n_buckets))).cast("int"),
+    )
 
 
 def partition_watermarks(

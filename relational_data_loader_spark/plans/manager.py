@@ -212,7 +212,9 @@ class DataLoadManager:
         n_bad = int(obs.get["n"])
         if n_bad == 0:
             shutil.rmtree(dest, ignore_errors=True)  # keep the DLQ readable
-            return changes, 0
+            # nothing to filter, but a delete's garbage payload must still
+            # be nulled before the projection casts it
+            return self._null_delete_payloads(spec, changes), 0
         good = flagged.filter(F.size(QUARANTINE_ERRORS_COL) == 0).drop(
             QUARANTINE_ERRORS_COL
         )

@@ -11,8 +11,13 @@ oracle.
 from __future__ import annotations
 
 import os
+import weakref
+from typing import Any, Callable, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 
 def get_spark(
@@ -61,3 +66,31 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+# Column expressions the engine rebuilds on every epoch, kept per
+# SparkContext: see ``cached_columns``.
+_COLUMNS: "weakref.WeakKeyDictionary[SparkContext, dict[tuple, Any]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def cached_columns(key: tuple, build: Callable[[], _T]) -> _T:
+    """``build()``'s Column expressions, built once per ``key`` and reused.
+
+    A Column is an immutable handle to a JVM expression, so an epoch's plan
+    can reuse the handles an earlier epoch built instead of paying the py4j
+    round trips again (building a projection, a window and a bucket hash is
+    hundreds of them; a 5k-event micro-batch pays them on every trigger).
+    ``key`` names everything the expressions depend on. Entries live under
+    the active SparkContext object they were built with, held weakly: a
+    stopped and restarted context (a new JVM) gets a fresh map and never
+    sees a handle of the old one; with no active context nothing is kept.
+    """
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return build()
+    built = _COLUMNS.setdefault(sc, {})
+    if key not in built:
+        built[key] = build()
+    return built[key]

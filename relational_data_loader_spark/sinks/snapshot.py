@@ -79,6 +79,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -86,13 +87,14 @@ from glob import glob
 from typing import Any, Callable
 
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from relational_data_loader_spark.operators.lww import net_changes
 from relational_data_loader_spark.operators.watermark import bucket_expr
+from relational_data_loader_spark.session import cached_columns
 from relational_data_loader_spark.spec import AUDIT_EXEC_ID, AUDIT_LOADED_AT, IngestSpec
 
 _BUCKET_COL = "_bucket"
@@ -108,6 +110,8 @@ SEQ_COL = "_rdl_seq"
 
 # a file-pruning predicate over one file's manifest ``file_stats`` record
 Keep = Callable[[dict[str, Any]], bool]
+# one bucket's lineage of a merge epoch: (bucket, max lsn, upserts, deletes)
+EpochRow = tuple[int, int, int, int]
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -154,6 +158,22 @@ class MergeStats:
     # per-bucket (partition_id, max_applied_lsn, rows_upserted, rows_deleted)
     # rows for the _rdl_state lineage table (FIXTURES.md F4)
     bucket_stats: list[dict] | None = None
+
+
+@dataclass(frozen=True)
+class _EpochColumns:
+    """Column expressions of an epoch apply under one (spec, layout),
+    built once and reused by every epoch (``SnapshotTable._epoch_columns``)."""
+
+    dest: list[Column]     # the destination columns, in spec order
+    version: list[Column]  # _rdl_lsn (the change version) and _rdl_deleted
+    bucket: Column         # _bucket under the layout
+    rank: Column           # row_number per (_bucket, pk...) by lsn desc
+    # what a merge-on-read write observes: histogram_numeric over
+    # bucket*2 + deleted, max(_rdl_lsn), count(*)
+    observed: list[Column]
+    # copy-on-write: the stored rows of the touched buckets as envelopes
+    target: list[Column]
 
 
 class SnapshotTable:
@@ -588,15 +608,16 @@ class SnapshotTable:
             return clustered
         return self._top1(clustered, [_BUCKET_COL, *self.spec.primary_keys], lww)
 
-    @staticmethod
-    def _top1(df: DataFrame, keys: list[str], order: list[Column]) -> DataFrame:
+    @classmethod
+    def _top1(cls, df: DataFrame, keys: list[str], order: list[Column]) -> DataFrame:
         """The first row per ``keys`` under ``order`` (the LWW winner)."""
         w = Window.partitionBy(*keys).orderBy(*order)
-        return (
-            df.withColumn("_rdl_rn", F.row_number().over(w))
-            .filter(F.col("_rdl_rn") == 1)
-            .drop("_rdl_rn")
-        )
+        return cls._first(df, F.row_number().over(w))
+
+    @staticmethod
+    def _first(df: DataFrame, rank: Column) -> DataFrame:
+        """The rows ``rank`` (a ``row_number`` window) puts first."""
+        return df.withColumn("_rdl_rn", rank).filter("_rdl_rn = 1").drop("_rdl_rn")
 
     def _write_buckets(self, clustered: DataFrame) -> dict[str, list[str]]:
         """Write ``_clustered`` output as per-bucket parquet files under a
@@ -616,6 +637,10 @@ class SnapshotTable:
         for f in glob(os.path.join(commit_dir, f"{_BUCKET_COL}=*", "*.parquet")):
             b = os.path.basename(os.path.dirname(f)).split("=", 1)[1]
             buckets.setdefault(b, []).append(os.path.relpath(f, self.path))
+        if not buckets:
+            # an empty write leaves only its _SUCCESS marker: no manifest
+            # will reference the dir, so it goes now rather than at vacuum
+            shutil.rmtree(commit_dir, ignore_errors=True)
         return buckets
 
     def full_refresh_from_envelopes(
@@ -647,12 +672,10 @@ class SnapshotTable:
         ``target_buckets`` and ``spark.sql.shuffle.partitions`` to at least
         the cluster's task slots.
         """
-        from pyspark.sql import Observation
-
         spec = self.spec
-        lsn_col, op_col = spec.lsn_column, spec.op_column
         survivors = self._clustered(
-            self._salted_prenet(envelopes), self.n_buckets, lww=[F.desc(lsn_col)]
+            self._salted_prenet(envelopes), self.n_buckets,
+            lww=[F.desc(spec.lsn_column)],
         )
         # Quarantine mode breaks the baseline premise "this snapshot
         # subsumes every event ≤ watermark": the dead-lettered events are
@@ -663,37 +686,19 @@ class SnapshotTable:
         # make every sub-watermark replay lose unconditionally), and
         # delete winners persist as tombstones (a dropped delete would let
         # a replayed older update resurrect the key).
-        quarantine = spec.on_cast_error == "quarantine"
-        if not quarantine:
-            survivors = survivors.filter(F.col(op_col) != spec.delete_op)
+        cols = self._epoch_columns(self.n_buckets)
+        if spec.on_cast_error == "quarantine":
+            version = cols.version
+        else:
+            survivors = survivors.filter(F.col(spec.op_column) != spec.delete_op)
+            version = [
+                F.lit(int(watermark)).cast("long").alias(LSN_COL),
+                F.lit(False).alias(DELETED_COL),
+            ]
         obs = Observation()
-        stamped = (
-            self._with_audit(
-                survivors.select(
-                    *self._dest_cols(), _BUCKET_COL, lsn_col, op_col
-                ),
-                epoch_id,
-            )
-            .withColumn(
-                LSN_COL,
-                F.col(lsn_col).cast("long")
-                if quarantine
-                else F.lit(int(watermark)).cast("long"),
-            )
-            .withColumn(
-                DELETED_COL,
-                (F.col(op_col) == F.lit(spec.delete_op))
-                if quarantine
-                else F.lit(False),
-            )
-            .drop(lsn_col, op_col)
-            .observe(
-                obs,
-                F.sum(
-                    F.when(~F.col(DELETED_COL), 1).otherwise(0)
-                ).alias("n"),
-            )
-        )
+        stamped = survivors.select(
+            *cols.dest, _BUCKET_COL, *self._audit(epoch_id), *version
+        ).observe(obs, F.sum(F.when(~F.col(DELETED_COL), 1).otherwise(0)).alias("n"))
         buckets = self._write_buckets(stamped)
         self._commit_epoch(
             None, epoch_key(epoch_id, namespace), "full_refresh", buckets, watermark
@@ -759,15 +764,55 @@ class SnapshotTable:
     def _dest_cols(self) -> list[str]:
         return [c.destination for c in self.spec.columns]
 
-    def _with_audit(self, df: DataFrame, epoch_id: int) -> DataFrame:
-        """Per-row audit stamp (reference P3). Epoch-derived, never
+    def _audit(self, epoch_id: int) -> list[Column]:
+        """Per-row audit stamp columns (reference P3). Epoch-derived, never
         current_timestamp(): a replayed epoch must write byte-identical rows
         or exactly-once equality breaks."""
         if not self.spec.audit_columns:
-            return df
-        return df.withColumn(
-            AUDIT_EXEC_ID, F.lit(int(epoch_id)).cast("long")
-        ).withColumn(AUDIT_LOADED_AT, F.timestamp_seconds(F.lit(int(epoch_id))))
+            return []
+        return [
+            F.lit(int(epoch_id)).cast("long").alias(AUDIT_EXEC_ID),
+            F.timestamp_seconds(F.lit(int(epoch_id))).alias(AUDIT_LOADED_AT),
+        ]
+
+    def _epoch_columns(self, layout: int) -> _EpochColumns:
+        """This spec's epoch-apply columns under ``layout``, built once per
+        (spec, layout) in the session (``cached_columns``). The checksum
+        covers the column mapping and audit flag; the envelope names and
+        delete marker it does not, so they join the key."""
+        spec = self.spec
+
+        def build() -> _EpochColumns:
+            lww = Window.partitionBy(_BUCKET_COL, *spec.primary_keys).orderBy(
+                F.desc(F.coalesce(F.col(LSN_COL), F.lit(-1)))
+            )
+            code = F.col(_BUCKET_COL) * 2 + F.col(DELETED_COL).cast("int")
+            return _EpochColumns(
+                dest=[F.col(c) for c in self._dest_cols()],
+                version=[
+                    F.col(spec.lsn_column).cast("long").alias(LSN_COL),
+                    (F.col(spec.op_column) == F.lit(spec.delete_op)).alias(DELETED_COL),
+                ],
+                bucket=bucket_expr(self.bucket_key, layout).alias(_BUCKET_COL),
+                rank=F.row_number().over(lww),
+                observed=[
+                    F.histogram_numeric(code.cast("double"), F.lit(2 * layout)).alias("bins"),
+                    F.max(LSN_COL).alias("max_lsn"),
+                    F.count(F.lit(1)).alias("n"),
+                ],
+                target=[
+                    *[F.col(f.name) for f in spec.destination_schema().fields],
+                    F.coalesce(F.col(LSN_COL), F.lit(-1)).cast("long").alias(LSN_COL),
+                    F.coalesce(F.col(DELETED_COL), F.lit(False)).alias(DELETED_COL),
+                    F.coalesce(F.col(SEQ_COL), F.lit(0)).cast("long").alias("_rdl_src"),
+                ],
+            )
+
+        return cached_columns(
+            ("epoch", spec.checksum(), spec.lsn_column, spec.op_column,
+             spec.delete_op, layout),
+            build,
+        )
 
     def _storage_schema(self) -> T.StructType:
         """On-disk row schema: destination (+audit) + internal version cols."""
@@ -1451,7 +1496,7 @@ class SnapshotTable:
         (``modules/DestinationTableManager.py::upsert_table_from_stage`` W1 +
         delete builder W2), generalized to out-of-order delivery.
 
-        Copy-on-write (default):
+        Copy-on-write (default, ``_merge_cow``):
 
           winners = LWW by (lsn, batch-over-target tie) per PK over
                     touched_target ∪ batch          (ONE bucket-clustered
@@ -1461,14 +1506,19 @@ class SnapshotTable:
           bucket data = winners                      (rewrite touched buckets
                     only; untouched buckets carried by reference)
 
-        Merge-on-read (``spec.merge_mode="mor"``): ONE bucketed write of the
-        batch's per-key winners as delta files — the base table is never
-        read (the module docstring's O(batch)-vs-O(table) argument). The
-        per-epoch net rides the write's exchange (window top-1 per PK within
-        this batch, tombstones kept as rows); cross-epoch and against-base
-        resolution happens at read time (``_fold``) ordered by
+        Merge-on-read (``spec.merge_mode="mor"``, ``_merge_mor``): ONE
+        bucketed write of the batch's per-key winners as delta files — the
+        base table is never read (the module docstring's O(batch)-vs-O(table)
+        argument). The per-epoch net rides the write's exchange (window top-1
+        per PK within this batch, tombstones kept as rows); cross-epoch and
+        against-base resolution happens at read time (``_fold``) ordered by
         (lsn DESC, seq DESC), which reproduces the CoW window's
         batch-beats-target tie rule exactly.
+
+        Epoch stats (touched buckets, per-bucket envelope counts and max
+        lsn, for ``MergeStats`` and ``_rdl_state``): CoW takes them from a
+        pass over the batch before it reads the target, MoR from its write
+        (an observation plus the new files' footers).
         """
         t0 = time.time()
         spec = self.spec
@@ -1487,194 +1537,236 @@ class SnapshotTable:
         layout = self._layout(m)
         if not netted:
             batch = self._salted_prenet(batch)
+        apply = self._merge_mor if spec.merge_mode == "mor" else self._merge_cow
+        rows, committed = apply(m, key, batch, epoch_id, layout)
+        stats = MergeStats(
+            epoch_id,
+            False,
+            len(rows),
+            sum(ups for _, _, ups, _ in rows),
+            sum(dels for _, _, _, dels in rows),
+            int(committed["watermark"]),
+            int((time.time() - t0) * 1000),
+            bucket_stats=[
+                {
+                    "partition_id": b,
+                    "max_applied_lsn": max_lsn,
+                    "rows_upserted": ups,
+                    "rows_deleted": dels,
+                }
+                for b, max_lsn, ups, dels in rows
+            ],
+        )
+        # MoR read-amplification guard: when any bucket's delta pile
+        # crosses the spec threshold, fold it back into base before
+        # returning. Crash between the merge commit above and this
+        # compaction is safe — the epoch is already durable, the debt
+        # just compacts one epoch later.
+        if committed["kind"] == "merge_mor" and spec.mor_compact_files and any(
+            len(fs) >= spec.mor_compact_files
+            for fs in (committed.get("deltas") or {}).values()
+        ):
+            self.compact_deltas()
+        return stats
 
-        # The batch feeds two consumers (stats pass, merge window). Small
-        # batches cache in memory; replay-scale batches STAGE to scratch
-        # parquet instead — the reference's staging table (W3) reborn:
-        # caching tens of millions of rows thrashes the unified memory
-        # manager (storage eviction → full recompute per consumer), measured
-        # as a 6× collapse at 16M-row batches on 32 cores.
-        # ``stage_threshold`` rows ≈ a few GB of cached columns.
-        # Round-3 counter-measurement: skipping the stage for recomputable
-        # file-source batches (re-scan instead of write+read) was tried and
-        # measured SLOWER-or-equal in interleaved same-session pairs
-        # (staged [7.6, 7.3, 16.0]s vs re-scan [13.1, 7.3, 23.8]s, 8M-row
-        # batch) — the staged copy is compact and pre-projected while the
-        # re-scan decodes and range-filters the wider log twice. Keep
-        # staging unconditional.
+    def _envelope(self, epoch_id: int, cols: _EpochColumns) -> list[Column]:
+        """The batch's columns in storage order: destination rows
+        (audit-stamped), the change version and the tombstone flag."""
+        return [*cols.dest, *self._audit(epoch_id), *cols.version]
+
+    def _commit_empty(
+        self, m: dict[str, Any], key: str, epoch_id: int
+    ) -> tuple[list[EpochRow], dict[str, Any]]:
+        """Record an epoch that carried no envelopes: a ``merge_empty``
+        commit (the epoch key is applied; nothing else changes)."""
+        return [], self._commit_epoch(
+            m, key, "merge_empty", m["buckets"], int(m["watermark"]), epoch_id,
+            m.get("deltas") or {}, m.get("next_delta_seq"),
+        )
+
+    def _merge_mor(
+        self, m: dict[str, Any], key: str, batch: DataFrame, epoch_id: int,
+        layout: int,
+    ) -> tuple[list[EpochRow], dict[str, Any]]:
+        """The merge-on-read epoch: ONE write job, and the batch's one
+        consumer. No persist, no stats pass, no staging: the epoch's stats
+        ride the write. The pre-net envelope counts per bucket come from an
+        observation of the rows entering the net (``_observed_counts``), the
+        epoch's max lsn from the same observation, and each bucket's max
+        lsn from the ``_rdl_lsn`` footer max of its new delta files (the
+        netted winners keep every key's max lsn, so the bucket max
+        survives the net). Returns the epoch's rows and the committed
+        manifest."""
+        cols = self._epoch_columns(layout)
+        seq = int(m.get("next_delta_seq", 1))
+        obs = Observation()
+        observed = batch.select(
+            *self._envelope(epoch_id, cols),
+            F.lit(seq).cast("long").alias(SEQ_COL),
+            cols.bucket,
+        ).observe(obs, *cols.observed)
+        written = self._write_buckets(
+            self._first(observed.repartition(_BUCKET_COL), cols.rank)
+        )
+        if not written:
+            # every envelope leaves a winner row (deletes as tombstones), so
+            # no file means no envelope; a plan Spark folded away as
+            # statically empty may also have left no observation to read
+            return self._commit_empty(m, key, epoch_id)
+        seen = obs.get
+        counts = self._observed_counts(seen, written)
+        deltas: dict[str, list[str]] = {
+            b: list(fs) for b, fs in (m.get("deltas") or {}).items()
+        }
+        for b, files in written.items():
+            deltas.setdefault(b, []).extend(files)
+        committed = self._commit_epoch(
+            m, key, "merge_mor", m["buckets"],
+            max(int(m["watermark"]), int(seen["max_lsn"])), epoch_id, deltas, seq + 1,
+        )
+        stats = committed["file_stats"]
+        return [
+            (
+                b,
+                max(int(stats[p]["minmax"][LSN_COL]["max"]) for p in written[str(b)]),
+                ups,
+                dels,
+            )
+            for b, (ups, dels) in sorted(counts.items())
+        ], committed
+
+    @staticmethod
+    def _observed_counts(
+        seen: dict[str, Any], written: dict[str, list[str]]
+    ) -> dict[int, tuple[int, int]]:
+        """Per-bucket (upserts, deletes) envelope counts from a merge-on-read
+        write's observation: ``histogram_numeric`` of bucket*2 + deleted
+        over 2 × layout bins, beside ``count(*)``.
+
+        Exact, because there are never more distinct values than bins: a
+        value that is already a bin centre only raises that bin's count,
+        and bins merge only when there are more of them than allowed, the
+        closest first, so equal centres (distance 0) merge before distinct
+        ones ever could. Merging the partial histograms of several tasks can
+        still leave one value in two bins, so counts that share a centre
+        add, and the merge averages equal centres in floating point, which
+        can leave a centre an ulp off its integer. Guarded all the same: a
+        merge of distinct values with total count W ≤ n = ``count(*)``
+        lands on a multiple of 1/W, so a centre further than 1/(2n) from an
+        integer, a count that is not an integer, counts that do not sum to
+        n, or a bucket set other than the written one raises instead of
+        recording wrong lineage."""
+        n = seen["n"]
+        counts: dict[int, list[int]] = {}
+        for x, y in seen["bins"] or []:
+            code = round(x)
+            if abs(x - code) * 2 * n >= 1 or not float(y).is_integer():
+                raise RuntimeError(f"observed epoch stats are not exact: bin ({x}, {y})")
+            b, deleted = divmod(code, 2)
+            counts.setdefault(b, [0, 0])[deleted] += int(y)
+        total = sum(ups + dels for ups, dels in counts.values())
+        if total != n or {str(b) for b in counts} != set(written):
+            raise RuntimeError(
+                f"observed epoch stats are not exact: the histogram counts "
+                f"{total} envelopes in buckets {sorted(counts)}, the write "
+                f"saw {n} and wrote buckets {sorted(written, key=int)}"
+            )
+        return {b: (ups, dels) for b, (ups, dels) in counts.items()}
+
+    def _merge_cow(
+        self, m: dict[str, Any], key: str, batch: DataFrame, epoch_id: int,
+        layout: int,
+    ) -> tuple[list[EpochRow], dict[str, Any]]:
+        """The copy-on-write epoch: a stats pass over the batch, then the
+        touched buckets' rewrite. Returns the epoch's rows and the committed
+        manifest."""
+        spec = self.spec
+        cols = self._epoch_columns(layout)
+        # The batch feeds two consumers: the stats pass, which must name the
+        # touched buckets before the target can be read, and the merge
+        # window. It is persisted before the pass, so the pass fills the
+        # cache and the merge reads cached blocks instead of recomputing the
+        # batch's scan and projection (and a streaming micro-batch's source
+        # is read once: unpersisted, numInputRows counts both scans).
+        # Replay-scale batches (> ``stage_threshold`` rows, ≈ a few GB of
+        # cached columns) then move to scratch parquet, written from the
+        # cache in one pass and unpersisted at once — the reference's
+        # staging table (W3) reborn: caching tens of millions of rows across
+        # consumers thrashes the unified memory manager (storage eviction →
+        # full recompute per consumer), measured as a 6× collapse at
+        # 16M-row batches on 32 cores. Round-3 counter-measurement:
+        # re-scanning a file-source batch instead of staging it measured
+        # slower-or-equal (staged [7.6, 7.3, 16.0]s vs re-scan [13.1, 7.3,
+        # 23.8]s, 8M-row batch) — the staged copy is compact and
+        # pre-projected. Until the stats pass stands alone, the oversized
+        # batch still sits in the cache for that one pass (ADVICE #4); the
+        # merge-on-read epoch has no pass and no persist.
         stage_threshold = 4_000_000
         stage_dir: str | None = None
-        persisted = False
+        batch = batch.persist()
+        persisted = True
         try:
-            # pass 1 — per-bucket stats (touched buckets, counts, max lsn);
-            # also tells us the batch size, which drives the staging choice.
-            # The batch is persisted BEFORE this pass (r6): the stats job
-            # then fills the cache as a side effect, so the merge below
-            # reads cached blocks instead of recomputing the batch's
-            # scan+projection a second time — one batch evaluation per
-            # epoch instead of two. It also keeps a streaming micro-batch's
-            # source read once: unpersisted, the stats pass and the write
-            # each re-read the foreachBatch source, and the query reports
-            # twice the segment's rows as numInputRows (measured: 10000 for
-            # a 5000-row segment; tests/test_streaming.py pins the sum).
-            # Oversized batches (> stage_threshold)
-            # still move to scratch parquet below, writing the stage FROM
-            # the cache (one pass) and unpersisting immediately, so the
-            # cache never holds a replay-scale batch across consumers (the
-            # round-3 thrash measurement that motivated staging stands).
-            batch = batch.persist()
-            persisted = True
+            is_del = F.col(spec.op_column) == F.lit(spec.delete_op)
             stat_rows = (
-                batch.groupBy(
-                    bucket_expr(self.bucket_key, layout).alias("b")
-                )
+                batch.groupBy(bucket_expr(self.bucket_key, layout).alias("b"))
                 .agg(
                     F.max(spec.lsn_column).alias("max_lsn"),
-                    F.sum(
-                        F.when(F.col(spec.op_column) != spec.delete_op, 1).otherwise(0)
-                    ).alias("ups"),
-                    F.sum(
-                        F.when(F.col(spec.op_column) == spec.delete_op, 1).otherwise(0)
-                    ).alias("dels"),
+                    F.sum(F.when(~is_del, 1).otherwise(0)).alias("ups"),
+                    F.sum(F.when(is_del, 1).otherwise(0)).alias("dels"),
                 )
                 .collect()
             )
-            deltas: dict[str, list[str]] = {
-                b: list(fs) for b, fs in (m.get("deltas") or {}).items()
-            }
             if not stat_rows:
-                self._commit_epoch(
-                    m, key, "merge_empty", m["buckets"], int(m["watermark"]),
-                    epoch_id, deltas, m.get("next_delta_seq"),
-                )
-                return MergeStats(
-                    epoch_id, False, 0, 0, 0, int(m["watermark"]),
-                    int((time.time() - t0) * 1000),
-                )
-
-            touched = sorted(int(r["b"]) for r in stat_rows)
-            ups = int(sum(r["ups"] for r in stat_rows))
-            dels = int(sum(r["dels"] for r in stat_rows))
-            watermark = max(
-                int(m["watermark"]), int(max(r["max_lsn"] for r in stat_rows))
+                return self._commit_empty(m, key, epoch_id)
+            rows = sorted(
+                (int(r["b"]), int(r["max_lsn"]), int(r["ups"]), int(r["dels"]))
+                for r in stat_rows
             )
-
-            if ups + dels > stage_threshold:
-                # stage the batch once (from the cache the stats pass just
-                # filled — one pass); downstream consumers do cheap
-                # column-pruned scans instead of cache reads/recomputes
+            touched = {b for b, *_ in rows}
+            watermark = max(int(m["watermark"]), max(mx for _, mx, _, _ in rows))
+            if sum(ups + dels for _, _, ups, dels in rows) > stage_threshold:
                 stage_dir = os.path.join(self.path, "data", f".stage-{uuid.uuid4().hex}")
                 batch.write.parquet(stage_dir)
                 batch.unpersist()
                 persisted = False
                 batch = self.spark.read.parquet(stage_dir)
 
+            # pending MoR deltas for the touched buckets fold into this
+            # rewrite (mode interleave safety): their rows join the target
+            # side carrying their commit seq, so equal-lsn redeliveries still
+            # resolve toward the later epoch, and the new manifest drops the
+            # absorbed delta references.
+            deltas: dict[str, list[str]] = m.get("deltas") or {}
+            target = self._with_deltas(
+                [p for b in touched for p in m["buckets"].get(str(b), [])],
+                [p for b in touched for p in deltas.get(str(b), [])],
+            )
+            # version-guarded LWW against the target (module docstring):
+            # stored rows and batch rows become one envelope stream and the
+            # max-lsn row per PK wins; deletes win as tombstone rows. No
+            # broadcast anywhere: driver-side build cost would cap scaling
+            # at replay batch sizes. _rdl_src is the equal-lsn tie rank: base
+            # rows 0, delta rows their commit seq, this batch next_seq
+            # (> every stored seq).
             next_seq = int(m.get("next_delta_seq", 1))
-
-            # shared envelope normalization: destination rows + change
-            # version + tombstone flag (audit-stamped)
-            b_env = (
-                self._with_audit(batch.select(*self._dest_cols(),
-                                               F.col(spec.lsn_column),
-                                               F.col(spec.op_column)), epoch_id)
-                .withColumn(LSN_COL, F.col(spec.lsn_column).cast("long"))
-                .withColumn(
-                    DELETED_COL, F.col(spec.op_column) == F.lit(spec.delete_op)
-                )
-                .drop(spec.lsn_column, spec.op_column)
+            t_env = target.select(*cols.target)
+            b_env = batch.select(
+                *self._envelope(epoch_id, cols),
+                F.lit(next_seq).cast("long").alias("_rdl_src"),
             )
-
-            if spec.merge_mode == "mor":
-                netted_deltas = self._clustered(
-                    b_env.withColumn(SEQ_COL, F.lit(next_seq).cast("long")),
-                    layout,
-                    lww=[F.desc(F.coalesce(F.col(LSN_COL), F.lit(-1)))],
-                )
-                for b, files in self._write_buckets(netted_deltas).items():
-                    deltas.setdefault(b, []).extend(files)
-                buckets = m["buckets"]
-                kind, seq_after = "merge_mor", next_seq + 1
-            else:
-                # pending MoR deltas for the touched buckets fold into this
-                # rewrite (mode interleave safety): their rows join the
-                # target side carrying their commit seq, so equal-lsn
-                # redeliveries still resolve toward the later epoch, and the
-                # new manifest drops the absorbed delta references.
-                target = self._with_deltas(
-                    [p for b in touched for p in m["buckets"].get(str(b), [])],
-                    [p for b in touched for p in deltas.get(str(b), [])],
-                )
-                # version-guarded LWW against the target (module docstring):
-                # stored rows and batch rows become one envelope stream and
-                # the max-lsn row per PK wins; deletes win as tombstone rows.
-                # No broadcast anywhere: driver-side build cost would cap
-                # scaling at replay batch sizes. _rdl_src is the equal-lsn
-                # tie rank: base rows 0, delta rows their commit seq, this
-                # batch next_seq (> every stored seq).
-                t_env = (
-                    target.withColumn(
-                        LSN_COL, F.coalesce(F.col(LSN_COL), F.lit(-1)).cast("long")
-                    )
-                    .withColumn(
-                        DELETED_COL, F.coalesce(F.col(DELETED_COL), F.lit(False))
-                    )
-                    .withColumn(
-                        "_rdl_src",
-                        F.coalesce(F.col(SEQ_COL), F.lit(0)).cast("long"),
-                    )
-                    .drop(SEQ_COL)
-                )
-                merged = self._lww_merge_plan(
-                    t_env,
-                    b_env.withColumn("_rdl_src", F.lit(next_seq).cast("long")),
-                    layout,
-                )
-                buckets = {
-                    b: files
-                    for b, files in m["buckets"].items()
-                    if int(b) not in touched
-                }
-                buckets.update(self._write_buckets(merged))
-                deltas = {b: fs for b, fs in deltas.items() if int(b) not in touched}
-                kind = "merge"
-                seq_after = next_seq if "next_delta_seq" in m else None
-            self._commit_epoch(
-                m, key, kind, buckets, watermark, epoch_id, deltas, seq_after
+            buckets = {
+                b: files for b, files in m["buckets"].items() if int(b) not in touched
+            }
+            buckets.update(self._write_buckets(self._lww_merge_plan(t_env, b_env, layout)))
+            return rows, self._commit_epoch(
+                m, key, "merge", buckets, watermark, epoch_id,
+                {b: fs for b, fs in deltas.items() if int(b) not in touched},
+                next_seq if "next_delta_seq" in m else None,
             )
-            stats = MergeStats(
-                epoch_id,
-                False,
-                len(touched),
-                ups,
-                dels,
-                watermark,
-                int((time.time() - t0) * 1000),
-                bucket_stats=[
-                    {
-                        "partition_id": int(r["b"]),
-                        "max_applied_lsn": int(r["max_lsn"]),
-                        "rows_upserted": int(r["ups"]),
-                        "rows_deleted": int(r["dels"]),
-                    }
-                    for r in stat_rows
-                ],
-            )
-            # MoR read-amplification guard: when any bucket's delta pile
-            # crosses the spec threshold, fold it back into base before
-            # returning. Crash between the merge commit above and this
-            # compaction is safe — the epoch is already durable, the debt
-            # just compacts one epoch later.
-            if kind == "merge_mor" and spec.mor_compact_files and any(
-                len(fs) >= spec.mor_compact_files for fs in deltas.values()
-            ):
-                self.compact_deltas()
-            return stats
         finally:
             if persisted:
                 batch.unpersist()
             if stage_dir:
-                import shutil
-
                 shutil.rmtree(stage_dir, ignore_errors=True)
 
     def compact_deltas(self, max_buckets: int | None = None) -> int:

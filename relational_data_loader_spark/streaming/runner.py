@@ -36,6 +36,17 @@ from relational_data_loader_spark.spec import IngestSpec
 
 
 class StreamingIngest:
+    """A resident (or availableNow) change-log tail that applies each
+    micro-batch through ``DataLoadManager.apply_epoch``.
+
+    ``quarantined`` maps each applied micro-batch id to the rows its
+    dead-letter split detoured to ``<warehouse>/<name>_dlq/s<batchId>``
+    (``spec.on_cast_error="quarantine"``; 0 when none did). A stream has no
+    ``RunResult``: this is where a micro-batch reports what it
+    dead-lettered. A checkpoint-replayed micro-batch overwrites its entry
+    with the same count, as it overwrites its dead-letter directory.
+    """
+
     def __init__(
         self,
         manager: DataLoadManager,
@@ -88,6 +99,7 @@ class StreamingIngest:
             # rows, so convert via a declared rows-per-log-segment hint
             max_files_per_trigger = max(1, spec.batch_size // rows_per_file_hint)
         self.max_files_per_trigger = max_files_per_trigger
+        self.quarantined: dict[int, int] = {}
 
     # -- micro-batch apply (also unit-testable without a running stream) ----
 
@@ -122,7 +134,7 @@ class StreamingIngest:
         # stable across a checkpoint-replayed micro-batch — the overwrite
         # is idempotent exactly like the batch path's lsn-keyed dirs
         if spec.on_cast_error == "quarantine":
-            batch_df, _ = self.mgr._quarantine_split(
+            batch_df, self.quarantined[int(epoch_id)] = self.mgr._quarantine_split(
                 spec, batch_df, int(epoch_id), prefix="s"
             )
         # "stream" namespace: Structured Streaming batchIds count 0,1,2,…

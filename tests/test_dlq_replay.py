@@ -182,6 +182,35 @@ def test_streaming_csv_quarantine_and_replay(spark, tmp_path):
     assert _state(mgr, wide) == {1: 9999999999, 2: 21, 3: 31}
 
 
+def test_streaming_quarantine_counts_per_micro_batch(spark, tmp_path):
+    """Each micro-batch records the rows its dead-letter split detoured,
+    keyed by batch id; over the whole log they sum to its poison rows."""
+    from relational_data_loader_spark.streaming.runner import StreamingIngest
+
+    csvdir = str(tmp_path / "csvlog")
+    (
+        spark.createDataFrame(LOG, ["lsn", "op", "id", "val"])
+        .repartition(3)
+        .write.option("header", "true")
+        .option("nullValue", "\\N")
+        .csv(csvdir)
+    )
+    spec = IngestSpec(
+        name="facts",
+        source=f"csv://{csvdir}",
+        columns=_spec(tmp_path).columns,
+        target_buckets=4,
+        on_cast_error="quarantine",
+    )
+    ing = StreamingIngest(
+        DataLoadManager(spark, str(tmp_path / "wh")), spec,
+        str(tmp_path / "ckpt"), max_files_per_trigger=1,
+    )
+    ing.run_until_caught_up()
+    assert len(ing.quarantined) == 3  # one micro-batch per csv file
+    assert sum(ing.quarantined.values()) == 4  # lsn 3, 5, 9, 10
+
+
 def test_streaming_quarantine_rejects_non_csv(spark, tmp_path):
     import pytest as _pytest
 

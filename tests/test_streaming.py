@@ -75,14 +75,18 @@ def test_stream_kill_and_resume_exactly_once(spark, warehouse, tmp_path, log_tbl
     assert partial <= len(got) + N_EVENTS  # sanity: phase 1 did not corrupt
 
 
-def test_micro_batches_read_each_event_once(spark, warehouse, tmp_path, log_tbl):
-    """The sink's stats pass and its write both consume a micro-batch; the
-    merge persists the batch so the foreachBatch source is scanned once.
-    Unpersisted, each scan counts toward numInputRows and the sum reads
-    twice the log."""
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_micro_batches_read_each_event_once(spark, warehouse, tmp_path, log_tbl, mode):
+    """Each scan of the foreachBatch source counts toward numInputRows, so
+    the sum equals the log's rows only if every micro-batch is read once.
+    A copy-on-write merge has two consumers of the batch (its stats pass
+    and its write) and persists it so the source is scanned once; a
+    merge-on-read merge's one consumer is its write, with no persist."""
     logdir = str(tmp_path / "log")
     write_log(log_tbl, logdir, n_files=4)
-    spec = transcripts_spec(source=f"parquet://{logdir}", target_buckets=8)
+    spec = transcripts_spec(
+        source=f"parquet://{logdir}", target_buckets=8, merge_mode=mode
+    )
     mgr = DataLoadManager(spark, warehouse)
     ing = StreamingIngest(mgr, spec, str(tmp_path / "ckpt"), max_files_per_trigger=2)
     q = ing.start(available_now=True)
