@@ -13,6 +13,10 @@ Methodology matches bench.py: same session factory (``get_spark``), same
 ``local[$SPARK_GRAFT_CPUS]`` master, same noop-sink evaluation, one untimed
 warm-up pass of the selected queries (JIT/Arrow init), then the median of
 ``--trials`` timed runs. Prints one JSON line.
+
+Unlike ``bench.py``, the session's cache is cleared (untimed) before every
+warm-up and timed call, so no call is timed against a cache an earlier call
+of the same plan left behind.
 """
 
 from __future__ import annotations
@@ -75,6 +79,7 @@ def main() -> None:
         for name in names:
             fn, _ = QUERIES[name]
             spark.sparkContext.setJobDescription(f"warm:{name}")
+            spark.catalog.clearCache()
             _evaluate(fn(spark, SF_DIR))
 
     if args.trials < 1:
@@ -85,6 +90,7 @@ def main() -> None:
         for name in names:
             fn, _ = QUERIES[name]
             spark.sparkContext.setJobDescription(f"bench:{name}")
+            spark.catalog.clearCache()
             t0 = time.time()
             _evaluate(fn(spark, SF_DIR))
             samples[name].append(time.time() - t0)

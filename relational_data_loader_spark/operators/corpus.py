@@ -18,8 +18,6 @@ would re-weight by duplication factor — a subtle corpus-poisoning bug).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,6 +30,7 @@ from relational_data_loader_spark.operators.contamination import (
     ngram_contamination,
 )
 from relational_data_loader_spark.operators.sampling import stratified_sample
+from relational_data_loader_spark.session import CacheScope
 
 
 def build_corpus(
@@ -46,36 +45,12 @@ def build_corpus(
     rates: dict[str, float] | None = None,
     default_rate: float = 1.0,
     ngram_n: int = 3,
+    *,
+    scope: CacheScope,
 ) -> DataFrame:
-    """``build_corpus_with_handle`` without the unpersist handle — for
-    one-shot sessions where executor storage is reclaimed at exit. A
-    long-lived session building many corpora should use the handle
-    variant and release each build's cache (the near_dup_pairs
-    precedent, VERDICT r3 #6)."""
-    out, _release = build_corpus_with_handle(
-        docs, benchmark, text_col, id_col, lang_col, min_tokens, min_alpha,
-        max_contamination, rates, default_rate, ngram_n,
-    )
-    return out
-
-
-def build_corpus_with_handle(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    min_tokens: int = 5,
-    min_alpha: float = 0.5,
-    max_contamination: float = 0.5,
-    rates: dict[str, float] | None = None,
-    default_rate: float = 1.0,
-    ngram_n: int = 3,
-) -> tuple[DataFrame, "Callable[[], None]"]:
     """One kept row per surviving document, with the audit columns each
     gate decided on: ``(doc_id, lang, n_tokens, alpha_ratio,
-    contaminated_frac)``; plus a ``release()`` unpersisting the pipeline
-    cache.
+    contaminated_frac)``.
 
     Plan shape: dedup is a single window-min over the fingerprint
     partition (one uniform shuffle; no groupBy + join-back), the quality
@@ -91,7 +66,8 @@ def build_corpus_with_handle(
     measured 7 scans of the corpus in the uncached plan. One persist
     bounds it to a single corpus read, holding only the post-dedup,
     post-quality survivors (ids, lang, text) — the smallest frame that
-    cuts the recompute.
+    cuts the recompute. That cache feeds the returned plan and belongs to
+    the caller's ``scope``.
     """
     base = docs.filter(F.length(text_col) > 0).select(
         F.col(id_col).alias("doc_id"),
@@ -99,7 +75,7 @@ def build_corpus_with_handle(
         F.col(text_col).alias("text"),
     )
     fp_win = Window.partitionBy(fingerprint(F.col("text")))
-    quality = (
+    quality = scope.cache(
         base.withColumn("__keep_id", F.min("doc_id").over(fp_win))
         .filter(F.col("doc_id") == F.col("__keep_id"))
         .withColumn("n_tokens", token_count(F.col("text")))
@@ -109,7 +85,6 @@ def build_corpus_with_handle(
             & (F.col("alpha_ratio") >= min_alpha)
         )
         .drop("__keep_id")
-        .persist()
     )
     cont = ngram_contamination(
         quality, benchmark.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
@@ -126,11 +101,6 @@ def build_corpus_with_handle(
     sampled = stratified_sample(
         kept, "lang", rates or {}, default_rate, "doc_id"
     )
-    out = sampled.select(
+    return sampled.select(
         "doc_id", "lang", "n_tokens", "alpha_ratio", "contaminated_frac"
     )
-
-    def release() -> None:
-        quality.unpersist()
-
-    return out, release

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from relational_data_loader_spark.functions.text import fingerprint, normalize
+from relational_data_loader_spark.session import CacheScope
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -154,31 +155,12 @@ def near_dup_pairs(
     id_col: str,
     threshold: float = 0.5,
     max_bucket: int = 1000,
+    *,
+    scope: CacheScope,
 ) -> DataFrame:
     """The full near-dup pipeline as one operator: MinHash → banded LSH
     candidates → exact Jaccard verification computed ONLY for candidate
-    pairs. See ``near_dup_pairs_with_handle`` for the cache-lifecycle API;
-    this convenience wrapper leaves the posting-list cache to the session
-    (fine for one-shot jobs; long-lived sessions should hold the handle).
-    The release handle also rides the returned DataFrame as
-    ``.unpersist_postings`` for discoverability."""
-    pairs, release = near_dup_pairs_with_handle(
-        df, text_col, id_col, threshold=threshold, max_bucket=max_bucket
-    )
-    pairs.unpersist_postings = release
-    return pairs
-
-
-def near_dup_pairs_with_handle(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.5,
-    max_bucket: int = 1000,
-):
-    """``(pairs DataFrame, release handle)`` — the full near-dup pipeline:
-    MinHash → banded LSH candidates → exact Jaccard verification computed
-    ONLY for candidate pairs.
+    pairs.
 
     This is the 100 TB-correct composition: the exact verifier
     (``token_jaccard_pairs``) is quadratic over the corpus if run alone, so
@@ -187,28 +169,21 @@ def near_dup_pairs_with_handle(
     work is Σ_candidates |tokens(a)|, linear in the (LSH-pruned) candidate
     count, never in corpus².
 
-    The posting-list cache DELIBERATELY outlives this call — it feeds four
-    consumers across the returned plan's executions. Call the returned
-    ``release()`` once done with the pairs (idempotent; blocking=False so
-    it never stalls the caller): a long-lived session running many specs
-    would otherwise accumulate one cached posting list per call
-    (VERDICT r3 task #6).
+    The posting-list and signature caches feed the returned plan, so they
+    belong to the caller's ``scope``: close it once the pairs have been
+    evaluated.
     """
     # the token posting list feeds FOUR consumers (signatures, both sides
     # of the intersection join, sizes); without the persist each one re-runs
     # the scan+normalize+explode+distinct — the dominant cost of the whole
     # pipeline — because the identical subtrees are not exchange-reused in
     # the static plan (measured: 8 parquet scans, 0 ReusedExchange).
-    toks = _distinct_tokens(df, text_col, id_col).persist()
+    toks = scope.cache(_distinct_tokens(df, text_col, id_col))
     # sigs too (one row per doc — tiny): the banded self-join reads the
     # melted band long-form THREE times (bucket-size filter + both join
     # sides), and without this cache each read re-runs the signature
     # aggregation over the posting list (r6)
-    sigs = _signatures_from_tokens(toks).persist()
-
-    def release() -> None:
-        toks.unpersist(blocking=False)
-        sigs.unpersist(blocking=False)
+    sigs = scope.cache(_signatures_from_tokens(toks))
     cand = (
         lsh_candidate_pairs(sigs, max_bucket=max_bucket)
         .select("doc_a", "doc_b")
@@ -236,7 +211,7 @@ def near_dup_pairs_with_handle(
             F.round(jac, 4).cast("double").alias("jaccard"),
         )
     )
-    return pairs, release
+    return pairs
 
 
 def incremental_near_dup_pairs(
@@ -247,6 +222,8 @@ def incremental_near_dup_pairs(
     base_sigs: DataFrame | None = None,
     threshold: float = 0.5,
     max_bucket: int = 1000,
+    *,
+    scope: CacheScope,
 ) -> DataFrame:
     """The IVM step of corpus near-dedup: every near-dup pair TOUCHING a
     CDC delta of documents, without recomputing the corpus's pairs.
@@ -271,16 +248,17 @@ def incremental_near_dup_pairs(
     exact-Jaccard verification explodes base text ONLY for docs that
     appear in a candidate pair (semi-join pushdown) — Σ candidate tokens,
     never corpus tokens.
+
+    Its caches feed the returned plan and belong to the caller's ``scope``.
     """
-    delta_toks = _distinct_tokens(delta_docs, text_col, id_col).persist()
+    delta_toks = scope.cache(_distinct_tokens(delta_docs, text_col, id_col))
     delta_sigs = _signatures_from_tokens(delta_toks)
-    recomputed_base_sigs = base_sigs is None
     if base_sigs is None:
         # locally-recomputed base signatures feed the band long-form twice
         # (size filter + join side); cache them for the call so the base
         # corpus explode runs once, not twice (r6). A supplied maintained
         # signature table keeps its caller-owned lifecycle.
-        base_sigs = minhash_signatures(base_docs, text_col, id_col).persist()
+        base_sigs = scope.cache(minhash_signatures(base_docs, text_col, id_col))
     long_delta = _bands_long(delta_sigs)
     long_all = _bands_long(base_sigs).unionByName(long_delta)
     sized = (
@@ -289,7 +267,7 @@ def incremental_near_dup_pairs(
         .filter(F.col("_n") <= max_bucket)
         .select("band", "band_key")
     )
-    cand = (
+    cand = scope.cache(
         long_delta.alias("x")
         .join(long_all.join(sized, ["band", "band_key"]).alias("y"),
               ["band", "band_key"])
@@ -299,7 +277,6 @@ def incremental_near_dup_pairs(
             F.greatest("x.doc_id", "y.doc_id").alias("doc_b"),
         )
         .distinct()
-        .persist()
     )
     # verification tokens: delta's (already exploded) plus ONLY the base
     # docs that made it into a candidate pair
@@ -315,7 +292,7 @@ def incremental_near_dup_pairs(
         text_col,
         id_col,
     )
-    toks = delta_toks.unionByName(base_cand_toks).persist()
+    toks = scope.cache(delta_toks.unionByName(base_cand_toks))
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     inter = (
         cand.join(toks.alias("ta"), F.col("doc_a") == F.col("ta.doc_id"))
@@ -338,15 +315,6 @@ def incremental_near_dup_pairs(
             F.round(jac, 4).cast("double").alias("jaccard"),
         )
     )
-
-    def release() -> None:
-        delta_toks.unpersist(blocking=False)
-        cand.unpersist(blocking=False)
-        toks.unpersist(blocking=False)
-        if recomputed_base_sigs:
-            base_sigs.unpersist(blocking=False)
-
-    pairs.unpersist_postings = release
     return pairs
 
 
@@ -397,6 +365,8 @@ def edit_distance_near_dup(
     trunc_len: int = 2000,
     max_bucket: int = 1000,
     parallelism: int | None = None,
+    *,
+    scope: CacheScope,
 ) -> DataFrame:
     """Character-level near-dup verification: normalized edit similarity
     ``1 − lev(a,b)/max(len_a, len_b)`` over LSH candidate pairs — catches
@@ -426,7 +396,8 @@ def edit_distance_near_dup(
     the wrong signal for CPU-dense stages; the explicit count (which AQE
     never coalesces) pins the compute fan-out.
 
-    Returns ``(doc_a, doc_b, edit_sim)`` at 4dp.
+    Returns ``(doc_a, doc_b, edit_sim)`` at 4dp; the signature cache
+    feeds the returned plan and belongs to the caller's ``scope``.
     """
     import math
 
@@ -438,9 +409,8 @@ def edit_distance_near_dup(
     n_parts = parallelism or df.sparkSession.sparkContext.defaultParallelism
     # signatures cached across the band join's three reads (size filter +
     # both sides): without this every read re-ran the tokenize+explode+
-    # aggregate chain from the raw corpus (r6). One row per doc; freed as
-    # soon as the candidate set is evaluated downstream of the join.
-    sigs = minhash_signatures(df, text_col, id_col).persist()
+    # aggregate chain from the raw corpus (r6). One row per doc.
+    sigs = scope.cache(minhash_signatures(df, text_col, id_col))
     cand = (
         lsh_candidate_pairs(sigs, max_bucket)
         .select("doc_a", "doc_b")
@@ -586,94 +556,93 @@ def dedup_clusters(
     """
     # pairs feeds BOTH union branches: without its own cache the entire
     # upstream pipeline (for near-dup input: LSH + Jaccard verification)
-    # materializes twice — measured 2× the pipeline cost at sf0.1. Cache
-    # it only until the first action has filled the edge cache, then drop.
-    pairs = pairs.persist()
-    src = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    # hash-partition the cached edge set by the join key ONCE (r6): every
-    # propagation round joins edges on src, and a cache that already
-    # carries HashPartitioning(src) feeds each round's join without
-    # re-shuffling the (large) edge side — one exchange at build time
-    # replaces one per round (guide §2.4 "two operations keyed the same
-    # way can share one exchange").
-    edges = (
-        src.union(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    # materializes twice — measured 2× the pipeline cost at sf0.1. Its
+    # scope (``first``) is nested in the edges' and closes once the first
+    # probe has filled the edge cache.
+    with CacheScope() as scope, CacheScope() as first:
+        pairs = first.cache(pairs)
+        src = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        # hash-partition the cached edge set by the join key ONCE (r6):
+        # every propagation round joins edges on src, and a cache that
+        # already carries HashPartitioning(src) feeds each round's join
+        # without re-shuffling the (large) edge side — one exchange at
+        # build time replaces one per round (guide §2.4 "two operations
+        # keyed the same way can share one exchange").
+        edges = scope.cache(
+            src.union(
+                pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+            ).repartition(F.col("src"))
         )
-        .repartition(F.col("src"))
-        .persist()
-    )
-    # eager=False everywhere in this loop (r6): a lazy localCheckpoint is
-    # materialized by the FIRST action that computes it — here the
-    # convergence probe — so each round runs ONE Spark job (probe +
-    # checkpoint fused) instead of two (checkpoint job, then probe job).
-    # Lineage truncation and block storage are unchanged; on diameter-d
-    # graphs this halves the loop's job count (measured ~2x wall on the
-    # sf0.1 dedup_clusters/semantic_dedup entries, which are job-overhead
-    # bound at fixture scale).
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=False)
-    )
-    # convergence probe, dispatched on the label TYPE (ADVICE r4: the sum
-    # probe assumed numeric ids — string ids crashed under ANSI casts or,
-    # worse, NULL-summed into a one-round early exit and silently wrong
-    # clusters for diameter>=2 components):
-    # - numeric ids: labels are MONOTONE (each round takes a min over the
-    #   old label and neighbors, so no label can grow) — sum(label) is
-    #   unchanged iff the round is a fixpoint. One scalar agg over the
-    #   fresh checkpoint, no join-back shuffle.
-    # - non-numeric ids (URLs, content hashes): min-order has no numeric
-    #   embedding, so the probe is an exact changed-label count via
-    #   join-back against the previous round — one extra equi-join per
-    #   round, both sides already node-keyed. The numeric fast path is
-    #   why callers with synthetic int ids never pay it.
-    from pyspark.sql.types import NumericType
-
-    numeric_ids = isinstance(
-        labels.schema["label"].dataType, NumericType
-    )
-    prev_sum = (
-        labels.agg(F.sum("label")).collect()[0][0] if numeric_ids else None
-    )
-    for round_no in range(max_iterations):
-        prop = edges.join(labels, edges.src == labels.node).select(
-            F.col("dst").alias("node"), "label"
-        )
-        new = (
-            labels.union(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
+        # eager=False everywhere in this loop (r6): a lazy localCheckpoint
+        # is materialized by the FIRST action that computes it — here the
+        # convergence probe — so each round runs ONE Spark job (probe +
+        # checkpoint fused) instead of two (checkpoint job, then probe
+        # job). Lineage truncation and block storage are unchanged; on
+        # diameter-d graphs this halves the loop's job count (measured ~2x
+        # wall on the sf0.1 dedup_clusters/semantic_dedup entries, which
+        # are job-overhead bound at fixture scale).
+        labels = (
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("label"))
             .localCheckpoint(eager=False)
         )
-        if numeric_ids:
-            new_sum = new.agg(F.sum("label")).collect()[0][0]
-            converged = new_sum == prev_sum
-            prev_sum = new_sum
-        else:
-            # full count (no limit): this probe MATERIALIZES the lazy
-            # checkpoint, so it must compute every partition — a limit
-            # can short-circuit and leave checkpoint blocks unstored
-            converged = (
-                new.join(
-                    labels.withColumnRenamed("label", "_prev"), "node"
-                )
-                .where(F.col("label") != F.col("_prev"))
-                .count()
-                == 0
+        # convergence probe, dispatched on the label TYPE (ADVICE r4: the
+        # sum probe assumed numeric ids — string ids crashed under ANSI
+        # casts or, worse, NULL-summed into a one-round early exit and
+        # silently wrong clusters for diameter>=2 components):
+        # - numeric ids: labels are MONOTONE (each round takes a min over
+        #   the old label and neighbors, so no label can grow) —
+        #   sum(label) is unchanged iff the round is a fixpoint. One
+        #   scalar agg over the fresh checkpoint, no join-back shuffle.
+        # - non-numeric ids (URLs, content hashes): min-order has no
+        #   numeric embedding, so the probe is an exact changed-label
+        #   count via join-back against the previous round — one extra
+        #   equi-join per round, both sides already node-keyed. The
+        #   numeric fast path is why callers with synthetic int ids never
+        #   pay it.
+        from pyspark.sql.types import NumericType
+
+        numeric_ids = isinstance(
+            labels.schema["label"].dataType, NumericType
+        )
+        prev_sum = (
+            labels.agg(F.sum("label")).collect()[0][0] if numeric_ids else None
+        )
+        for _ in range(max_iterations):
+            prop = edges.join(labels, edges.src == labels.node).select(
+                F.col("dst").alias("node"), "label"
             )
-        if round_no == 0:
+            new = (
+                labels.union(prop)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
+                .localCheckpoint(eager=False)
+            )
+            if numeric_ids:
+                new_sum = new.agg(F.sum("label")).collect()[0][0]
+                converged = new_sum == prev_sum
+                prev_sum = new_sum
+            else:
+                # full count (no limit): this probe MATERIALIZES the lazy
+                # checkpoint, so it must compute every partition — a limit
+                # can short-circuit and leave checkpoint blocks unstored
+                converged = (
+                    new.join(
+                        labels.withColumnRenamed("label", "_prev"), "node"
+                    )
+                    .where(F.col("label") != F.col("_prev"))
+                    .count()
+                    == 0
+                )
             # the lazy checkpoints above are filled by the first probe (the
             # prev_sum probe, or this round's), and with them edges
-            pairs.unpersist()
-        _release_checkpoint(labels)  # superseded round: free its blocks now
-        labels = new
-        if converged:
-            break
-    pairs.unpersist()  # no-op unless the loop never ran
-    edges.unpersist()  # labels are checkpointed: no lineage back to edges
+            first.close()
+            _release_checkpoint(labels)  # superseded round: free its blocks
+            labels = new
+            if converged:
+                break
+    # labels are checkpointed: no lineage back to edges or pairs
     return (
         docs.select(F.col(id_col).alias("doc_id"))
         .join(labels, F.col("doc_id") == F.col("node"), "left")
@@ -686,7 +655,12 @@ def dedup_clusters(
 
 
 def minhash_estimate_audit(
-    df: DataFrame, text_col: str, id_col: str, max_bucket: int = 1000
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    max_bucket: int = 1000,
+    *,
+    scope: CacheScope,
 ) -> DataFrame:
     """Sketch-accuracy audit: for every LSH candidate pair, the MinHash
     Jaccard ESTIMATE (fraction of the 8 signature components agreeing)
@@ -698,20 +672,20 @@ def minhash_estimate_audit(
     exact values are computed for CANDIDATES ONLY (never corpus²), the
     posting list is built once and feeds signatures, both intersection
     sides, and sizes. Unlike the dedup path there is NO threshold — the
-    audit wants the misses (high estimate, low exact) most of all.
+    audit wants the misses (high estimate, low exact) most of all. The
+    caches feed the returned plan and belong to the caller's ``scope``.
     """
-    toks = _distinct_tokens(df, text_col, id_col).persist()
+    toks = scope.cache(_distinct_tokens(df, text_col, id_col))
     # sigs feeds three consumers (band join + both estimate sides) and
     # cand feeds two (estimate join + exact-intersection join); without
     # their own caches each consumer re-runs the signature aggregation /
     # the whole banded self-join — measured as the dominant redundant work
-    # of this audit (r6). Both released with the posting handle.
-    sigs = _signatures_from_tokens(toks).persist()
-    cand = (
+    # of this audit (r6).
+    sigs = scope.cache(_signatures_from_tokens(toks))
+    cand = scope.cache(
         lsh_candidate_pairs(sigs, max_bucket=max_bucket)
         .select("doc_a", "doc_b")
         .distinct()
-        .persist()
     )
     agree = sum(
         F.when(F.col(f"a.h_{s}") == F.col(f"b.h_{s}"), 1).otherwise(0)
@@ -746,7 +720,7 @@ def minhash_estimate_audit(
             ),
         )
     )
-    out = est.join(exact, ["doc_a", "doc_b"], "left").select(
+    return est.join(exact, ["doc_a", "doc_b"], "left").select(
         "doc_a",
         "doc_b",
         F.round("est_jaccard", 4).alias("est_jaccard"),
@@ -756,17 +730,13 @@ def minhash_estimate_audit(
         F.round(F.abs(F.col("est_jaccard") - F.coalesce("_exact", F.lit(0.0))), 4)
         .alias("abs_err"),
     )
-    def _release() -> None:
-        toks.unpersist(blocking=False)
-        sigs.unpersist(blocking=False)
-        cand.unpersist(blocking=False)
-
-    out.unpersist_postings = _release
-    return out
 
 
 def cross_source_overlap(
-    docs: DataFrame, text_col: str, id_col: str, source_col: str
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    source_col: str,
 ) -> DataFrame:
     """Exact-duplicate overlap between sources: for every unordered
     source pair (including a source with itself), how many normalized
@@ -774,31 +744,28 @@ def cross_source_overlap(
     ("is crawl B just mirroring crawl A?") answered from the same
     fingerprints exact_dedup already computes.
 
-    Plan: fingerprints collapse to distinct (fingerprint, source) first
-    — the only corpus-sized shuffle — then a self-join on the
-    fingerprint. That join's output is Σ_fp pairs(sources(fp))², bounded
-    by the SOURCE count per fingerprint (tiny domain), never by copies
-    per fingerprint: a boilerplate page duplicated 10^6 times within one
-    source contributes ONE (fp, source) row, not 10^12 pairs.
+    Plan: one groupBy on the fingerprint — the only corpus-sized shuffle,
+    partial-aggregated map-side — collects each fingerprint's source
+    set; each set's unordered source pairs are then emitted and counted.
+    The pair count is Σ_fp pairs(sources(fp)), bounded by the SOURCE
+    count per fingerprint (tiny domain), never by copies per
+    fingerprint: a boilerplate page duplicated 10^6 times within one
+    source adds ONE set element, not 10^12 pairs. No self-join, so the
+    fingerprinted corpus is read once without a cache.
     """
-    # persisted (r6): the distinct fingerprint set feeds both self-join
-    # sides; the cache hashes the corpus once. Released via handle.
-    fs = (
+    srcs = (
         docs.select(
             fingerprint(F.col(text_col)).alias("fp"),
             F.col(source_col).alias("src"),
         )
-        .distinct()
-        .persist()
+        .where(F.col("fp").isNotNull())
+        .groupBy("fp")
+        .agg(F.collect_set("src").alias("srcs"))
     )
-    out = (
-        fs.alias("a")
-        .join(fs.alias("b"), "fp")
-        .filter(F.col("a.src") <= F.col("b.src"))
-        .groupBy(
-            F.col("a.src").alias("source_a"), F.col("b.src").alias("source_b")
-        )
+    return (
+        srcs.select(F.explode("srcs").alias("source_a"), "srcs")
+        .select("source_a", F.explode("srcs").alias("source_b"))
+        .filter(F.col("source_a") <= F.col("source_b"))
+        .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("shared_fingerprints"))
     )
-    out.unpersist_postings = lambda: fs.unpersist(blocking=False)
-    return out

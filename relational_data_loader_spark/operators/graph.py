@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from relational_data_loader_spark.session import CacheScope
+
 
 def hash_link_graph(
     nodes: DataFrame,
@@ -98,45 +100,46 @@ def pagerank(
     # at scale this is the big frame, and re-shuffling it per iteration
     # would dominate; the per-round ranks frame (|V| rows, 2 columns) is
     # the cheap side.
-    adj = edges.join(deg, "src").persist()
-    ranks = node_ids.select("id", F.lit(1.0 / n_nodes).alias("pr"))
-    for _ in range(iterations):
-        dangling = (
-            ranks.join(deg, ranks["id"] == deg["src"], "left_anti")
-            .agg(F.sum("pr"))
-            .first()[0]
-            or 0.0
-        )
-        contrib = (
-            adj.join(ranks, adj["src"] == ranks["id"])
-            .select("dst", (F.col("pr") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks = (
-            node_ids.join(contrib, node_ids["id"] == contrib["dst"], "left")
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.lit(dangling / n_nodes)
-                    )
-                ).alias("pr"),
+    with CacheScope() as scope:
+        adj = scope.cache(edges.join(deg, "src"))
+        ranks = node_ids.select("id", F.lit(1.0 / n_nodes).alias("pr"))
+        for _ in range(iterations):
+            dangling = (
+                ranks.join(deg, ranks["id"] == deg["src"], "left_anti")
+                .agg(F.sum("pr"))
+                .first()[0]
+                or 0.0
             )
-            # truncate lineage each round (dedup_clusters lesson: without
-            # this the plan — and task serialization — grows linearly in
-            # the round count). eager=False (r6): the NEXT round's
-            # dangling-mass aggregate is the first action over this frame
-            # and its anti-join scans every partition, so it materializes
-            # the checkpoint in the same job — one job per round instead
-            # of two (same fusion as dedup_clusters/tree_paths).
-            .localCheckpoint(eager=False)
-        )
-        ranks = new_ranks
-    adj.unpersist()
+            contrib = (
+                adj.join(ranks, adj["src"] == ranks["id"])
+                .select("dst", (F.col("pr") / F.col("deg")).alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            new_ranks = (
+                node_ids.join(contrib, node_ids["id"] == contrib["dst"], "left")
+                .select(
+                    "id",
+                    (
+                        F.lit((1.0 - damping) / n_nodes)
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("contrib"), F.lit(0.0))
+                            + F.lit(dangling / n_nodes)
+                        )
+                    ).alias("pr"),
+                )
+                # truncate lineage each round (dedup_clusters lesson:
+                # without this the plan — and task serialization — grows
+                # linearly in the round count). eager=False (r6): the NEXT
+                # round's dangling-mass aggregate is the first action over
+                # this frame and its anti-join scans every partition, so it
+                # materializes the checkpoint in the same job — one job per
+                # round instead of two (same fusion as
+                # dedup_clusters/tree_paths).
+                .localCheckpoint(eager=False)
+            )
+            ranks = new_ranks
     return ranks
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from relational_data_loader_spark.functions.text import normalize
+from relational_data_loader_spark.session import CacheScope
 
 
 def posting_index(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -166,9 +167,9 @@ def bm25_topk(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg("dl"), 6).alias("avgdl"),
     )
-    # persisted (r6): tf feeds the document-frequency aggregate AND the
-    # scoring join; without the cache each re-ran the corpus explode.
-    # Size is docs-matching-query x terms — tiny.
+    # NOT cached: tf feeds the document-frequency aggregate AND the
+    # scoring join, but with the cache cleared before every call the
+    # persist made the entry no faster (see CHANGES.md), so both recompute
     tf = (
         based.select(
             "doc_id",
@@ -178,7 +179,6 @@ def bm25_topk(
         .filter(F.col("tok").isin([str(t) for t in query_terms]))
         .groupBy("doc_id", "dl", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     dfs = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     k1p1 = float(k1) + 1.0
@@ -229,12 +229,11 @@ def tfidf_top_terms(
         F.col(id_col).alias("doc_id"),
         _one_to_one(tokens(F.col(text_col)), "_toks"),
     )
-    # persisted (r6): same two-consumer shape as bm25_topk's tf frame
+    # NOT cached, like bm25_topk's tf frame and for the same measured reason
     tf = (
         based.select("doc_id", F.explode("_toks").alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     dfs = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(F.col(id_col)).distinct().agg(
@@ -370,35 +369,35 @@ def refresh_serving_postings(
     # below both consume this lineage (an anti-join over prev_index plus
     # re-derived postings) — without the pin the probe would re-run the
     # whole refresh job a second time (measured as ~2x the refresh cost)
-    rows = (
-        new_index.withColumn("_bucket", _token_bucket(F.col("tok"), n_buckets))
-        .filter(F.col("_bucket").isin(affected))
-        .persist()
-    )
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        rows.repartition("_bucket").write.partitionBy("_bucket").mode(
-            "overwrite"
-        ).parquet(path)
-        # dynamic overwrite only replaces partitions it WRITES: an affected
-        # bucket whose new posting set is EMPTY (its last token lost its
-        # last doc) emits no rows, so its stale directory must be dropped
-        # explicitly. Control-plane: <= n_buckets ids, served from the pin.
-        import shutil
-
-        present = {
-            r["_bucket"] for r in rows.select("_bucket").distinct().collect()
-        }
-        for b in set(affected) - present:
-            shutil.rmtree(
-                os.path.join(path, f"_bucket={b}"), ignore_errors=True
-            )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
+    with CacheScope() as scope:
+        rows = scope.cache(
+            new_index.withColumn("_bucket", _token_bucket(F.col("tok"), n_buckets))
+            .filter(F.col("_bucket").isin(affected))
         )
-        rows.unpersist()
+        prev_mode = spark.conf.get(
+            "spark.sql.sources.partitionOverwriteMode", "static"
+        )
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            rows.repartition("_bucket").write.partitionBy("_bucket").mode(
+                "overwrite"
+            ).parquet(path)
+            # dynamic overwrite only replaces partitions it WRITES: an
+            # affected bucket whose new posting set is EMPTY (its last
+            # token lost its last doc) emits no rows, so its stale
+            # directory must be dropped explicitly. Control-plane:
+            # <= n_buckets ids, served from the pin.
+            import shutil
+
+            present = {
+                r["_bucket"] for r in rows.select("_bucket").distinct().collect()
+            }
+            for b in set(affected) - present:
+                shutil.rmtree(
+                    os.path.join(path, f"_bucket={b}"), ignore_errors=True
+                )
+        finally:
+            spark.conf.set(
+                "spark.sql.sources.partitionOverwriteMode", prev_mode
+            )
     return len(affected)

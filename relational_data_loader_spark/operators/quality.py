@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from relational_data_loader_spark.session import CacheScope
+
 
 def _verdict(name: str, n: Column):
     return F.struct(
@@ -350,7 +352,7 @@ def psi_drift(
 
 
 def json_schema_drift(
-    df: DataFrame, json_col: str, epoch_col: str
+    df: DataFrame, json_col: str, epoch_col: str, *, scope: CacheScope
 ) -> DataFrame:
     """Schema-on-read drift for semi-structured payloads: which JSON keys
     each epoch ADDED or REMOVED relative to the previous epoch — the
@@ -371,18 +373,17 @@ def json_schema_drift(
     key repetition, so the shuffled state is epochs × distinct keys, not
     rows × keys. Drift is two anti-joins of that tiny frame against its
     epoch-shifted self; nothing rescans the data after the one distinct.
+    That one distinct is cached in the caller's ``scope``.
     """
     # persisted (r6): this tiny (epochs × keys) frame feeds FIVE consumers
     # (the epoch list, the shifted copy, and both anti-join sides twice);
     # without the cache each consumer re-ran the corpus-wide JSON
     # key-explode + distinct. The cache is epochs × distinct keys — bytes.
-    keys = (
+    keys = scope.cache(
         df.select(
             F.col(epoch_col).cast("long").alias("epoch"),
             F.explode(F.json_object_keys(F.col(json_col))).alias("key"),
-        )
-        .distinct()
-        .persist()
+        ).distinct()
     )
     epochs = keys.select("epoch").distinct()
     # epochs that HAVE a predecessor in the data (excludes the baseline

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from relational_data_loader_spark.session import CacheScope
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -390,6 +392,8 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     max_bucket: int = 10_000,
+    *,
+    scope: CacheScope,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the dedup twin of the text
     near-dup pipeline (operators/dedup.py near_dup_pairs), over vectors.
@@ -411,11 +415,10 @@ def embedding_near_dup_pairs(
     documented to the caller (count them with bucket stats if needed), not
     a silent one: the default keeps ≤ ~5·10^7 pairs per degenerate bucket.
     """
-    # persisted (r6): the bucket-assignment projection feeds THREE
-    # consumers (size filter + both self-join sides); the cache computes
-    # the n_planes sign-pattern folds once per vector. Released via the
-    # returned frame's ``unpersist_postings`` handle.
-    assigned = df.select(
+    # cached in the caller's scope (r6): the bucket-assignment projection
+    # feeds THREE consumers (size filter + both self-join sides); the
+    # cache computes the n_planes sign-pattern folds once per vector.
+    assigned = scope.cache(df.select(
         F.col(id_col).alias("id"),
         F.col(emb_col).alias("emb"),
         hyperplane_bucket_expr(emb_col, dim, n_planes).alias("bucket"),
@@ -423,7 +426,7 @@ def embedding_near_dup_pairs(
         # pair in the self-join below (identical subtree -> bit-identical
         # sims; r6, guide §2.3/§4.1)
         _norm(F.col(emb_col)).alias("_nrm"),
-    ).persist()
+    ))
     sized = (
         assigned.groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -433,7 +436,7 @@ def embedding_near_dup_pairs(
     # the surviving-bucket list is bounded by 2^n_planes rows — broadcast it
     # so the size filter is map-side and only the self-join shuffles vectors
     b = assigned.join(F.broadcast(sized), "bucket")
-    out = (
+    return (
         b.alias("x")
         .join(b.alias("y"), "bucket")
         .filter(F.col("x.id") < F.col("y.id"))
@@ -450,8 +453,6 @@ def embedding_near_dup_pairs(
         )
         .filter(F.col("sim") >= threshold)
     )
-    out.unpersist_postings = lambda: assigned.unpersist(blocking=False)
-    return out
 
 
 def semantic_dedup_pairs(
@@ -461,6 +462,8 @@ def semantic_dedup_pairs(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     max_cell: int = 100_000,
+    *,
+    scope: CacheScope,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: vectors quantized to
     the IVF coarse-quantizer cells (SemDeDup's k-means clusters), exact
@@ -485,19 +488,18 @@ def semantic_dedup_pairs(
     discipline as ``embedding_near_dup_pairs`` / ``lsh_candidate_pairs``,
     so a dropped cell never emits a half-pruned pair.
     """
-    # persisted (r6): this assignment projection feeds THREE consumers —
-    # the cell-size aggregate and both self-join sides — and each would
-    # otherwise re-run the argmax-cosine quantization per row. Released
-    # via the returned frame's ``unpersist_postings`` handle (same
-    # lifecycle convention as operators/dedup.py).
-    assigned = df.select(
+    # cached in the caller's scope (r6): this assignment projection feeds
+    # THREE consumers — the cell-size aggregate and both self-join sides —
+    # and each would otherwise re-run the argmax-cosine quantization per
+    # row.
+    assigned = scope.cache(df.select(
         F.col(id_col).alias("id"),
         F.col(emb_col).alias("emb"),
         ivf_cell_expr(emb_col, centroids).alias("cell"),
         # norm hoisted out of the Σ|cell|² pair loop — once per vector,
         # not per pair (identical subtree → bit-identical sims; r6)
         _norm(F.col(emb_col)).alias("_nrm"),
-    ).persist()
+    ))
     sized = (
         assigned.groupBy("cell")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -507,7 +509,7 @@ def semantic_dedup_pairs(
     # ≤ len(centroids) surviving cells — broadcast so the size filter is
     # map-side and only the self-join shuffles vectors (on the cell key)
     b = assigned.join(F.broadcast(sized), "cell")
-    out = (
+    return (
         b.alias("x")
         .join(b.alias("y"), "cell")
         .filter(F.col("x.id") < F.col("y.id"))
@@ -524,8 +526,6 @@ def semantic_dedup_pairs(
         )
         .filter(F.col("sim") >= threshold)
     )
-    out.unpersist_postings = lambda: assigned.unpersist(blocking=False)
-    return out
 
 
 def lsh_cosine_topk(

@@ -62,6 +62,7 @@ from relational_data_loader_spark.operators.layout import (
 from relational_data_loader_spark.operators.sketch import cms_frequency_audit
 from relational_data_loader_spark.functions import text as TXT
 from relational_data_loader_spark.functions.registry import get_transform
+from relational_data_loader_spark.session import CacheScope
 from relational_data_loader_spark.spec import AUDIT_EXEC_ID, AUDIT_LOADED_AT
 
 # events-as-change-log convention
@@ -73,6 +74,20 @@ STOPWORDS = ["data", "table", "row", "join", "value", "key", "fast", "slow"]
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _scoped(op: Callable[..., DataFrame], *args, **kwargs) -> DataFrame:
+    """``op(*args, scope=scope, **kwargs)``, evaluated before ``scope``
+    closes.
+
+    The one rule for an entry whose result reads a cache: the result is
+    ``localCheckpoint``-ed eagerly inside the scope, so the entry leaves
+    the session's cache empty and a later call of the same plan cannot
+    read this call's cache. Spark's ContextCleaner reclaims the checkpoint
+    blocks once the returned frame is dropped.
+    """
+    with CacheScope() as scope:
+        return op(*args, scope=scope, **kwargs).localCheckpoint(eager=True)
 
 
 def _dec_sum(col, alias, dp=2):
@@ -518,7 +533,7 @@ def q_near_dup_pairs(spark, sf):
     pairs collide in some band), so candidates grow ~quadratically with
     the cap, unlike a real corpus."""
     docs = _t(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    return near_dup_pairs(docs, "text", "doc_id", threshold=0.5)
+    return _scoped(near_dup_pairs, docs, "text", "doc_id", threshold=0.5)
 
 
 SQL_NEAR_DUP = """
@@ -581,8 +596,9 @@ def q_incremental_near_dup(spark, sf):
     delta = docs.filter(F.col("doc_id") % 7 == 0)
     base = docs.filter(F.col("doc_id") % 7 != 0)
     base_sigs = minhash_signatures(base, "text", "doc_id")
-    return incremental_near_dup_pairs(
-        base, delta, "text", "doc_id", base_sigs=base_sigs, threshold=0.5
+    return _scoped(
+        incremental_near_dup_pairs, base, delta, "text", "doc_id",
+        base_sigs=base_sigs, threshold=0.5,
     )
 
 
@@ -1151,8 +1167,9 @@ def q_embedding_near_dup(spark, sf):
     )
 
     emb = _t(spark, sf, "embeddings")
-    return embedding_near_dup_pairs(
-        emb, dim=_LSH_DIM, threshold=_NDV_THRESHOLD, n_planes=_NDV_PLANES
+    return _scoped(
+        embedding_near_dup_pairs, emb, dim=_LSH_DIM,
+        threshold=_NDV_THRESHOLD, n_planes=_NDV_PLANES,
     )
 
 
@@ -2459,22 +2476,15 @@ def q_dedup_clusters(spark, sf):
     (operators/dedup.py dedup_clusters). The stage that turns pairwise
     similarity into an actionable dedup decision; oracle is a recursive
     transitive-closure CTE over the SAME pair query."""
-    from relational_data_loader_spark.operators.dedup import (
-        near_dup_pairs_with_handle,
-    )
-
     docs = _t(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    pairs, release = near_dup_pairs_with_handle(
-        docs, "text", "doc_id", threshold=0.5
-    )
     # dedup_clusters is EAGER (it iterates to fixpoint and checkpoints the
     # labels), so the posting-list cache is releasable the moment it
     # returns — repeated invocations (bench trials, long sessions) must
     # not accumulate caches: measured 19 s -> 257 s across two uncached
     # back-to-back runs before these releases.
-    out = dedup_clusters(docs, pairs, "doc_id")
-    release()
-    return out
+    with CacheScope() as scope:
+        pairs = near_dup_pairs(docs, "text", "doc_id", threshold=0.5, scope=scope)
+        return dedup_clusters(docs, pairs, "doc_id")
 
 
 SQL_DEDUP_CLUSTERS = f"""
@@ -2520,15 +2530,14 @@ def q_semantic_dedup(spark, sf):
 
     emb = _t(spark, sf, "embeddings")
     centroids = sample_centroids(emb, _IVF_CENTROIDS)
-    pairs = semantic_dedup_pairs(emb, centroids, threshold=_SEMDEDUP_TH)
     # dedup_clusters is EAGER (fixpoint loop over checkpointed labels), so
     # the pair pipeline's assignment cache is releasable the moment it
     # returns — same discipline as q_dedup_clusters (r6)
-    out = dedup_clusters(
-        emb.select("vec_id"), pairs, "vec_id", a_col="id_a", b_col="id_b"
-    )
-    pairs.unpersist_postings()
-    return out
+    with CacheScope() as scope:
+        pairs = semantic_dedup_pairs(emb, centroids, threshold=_SEMDEDUP_TH, scope=scope)
+        return dedup_clusters(
+            emb.select("vec_id"), pairs, "vec_id", a_col="id_a", b_col="id_b"
+        )
 
 
 def _semdedup_sql(dim: int = 64) -> str:
@@ -2656,7 +2665,8 @@ def q_corpus_build(spark, sf):
     docs = _t(spark, sf, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    return build_corpus(
+    return _scoped(
+        build_corpus,
         corpus,
         bench,
         min_tokens=5,
@@ -4607,16 +4617,10 @@ def q_dedup_keep_best(spark, sf):
     template family usually carries the most content). Reuses the
     clustering pipeline; the election is one window over the (tiny)
     cluster assignment."""
-    from relational_data_loader_spark.operators.dedup import (
-        near_dup_pairs_with_handle,
-    )
-
     docs = _t(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    pairs, release = near_dup_pairs_with_handle(
-        docs, "text", "doc_id", threshold=0.5
-    )
-    clusters = dedup_clusters(docs, pairs, "doc_id")
-    release()
+    with CacheScope() as scope:
+        pairs = near_dup_pairs(docs, "text", "doc_id", threshold=0.5, scope=scope)
+        clusters = dedup_clusters(docs, pairs, "doc_id")
     joined = clusters.select("doc_id", "cluster_id").join(
         docs.select("doc_id", "n_chars"), "doc_id"
     )
@@ -5298,7 +5302,7 @@ def q_minhash_estimate_audit(spark, sf):
     )
 
     docs = _t(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    return minhash_estimate_audit(docs, "text", "doc_id")
+    return _scoped(minhash_estimate_audit, docs, "text", "doc_id")
 
 
 SQL_MINHASH_AUDIT = """
@@ -5803,8 +5807,8 @@ def q_edit_distance_near_dup(spark, sf):
     docstring), the oracle the unbounded one — identical output.
     """
     docs = _t(spark, sf, "documents").filter(F.col("doc_id") < 300)
-    return edit_distance_near_dup(
-        docs, "text", "doc_id", threshold=0.8, trunc_len=600
+    return _scoped(
+        edit_distance_near_dup, docs, "text", "doc_id", threshold=0.8, trunc_len=600
     )
 
 
@@ -6649,33 +6653,38 @@ def q_ivm_cascade_rollup(spark, sf):
         "op", F.when(m11 == 0, F.lit("I")).otherwise(F.lit("U"))
     ).unionByName(cust.filter(m11 == 5).withColumn("op", F.lit("D")))
 
-    # the maintained view is MATERIALIZED by definition in an IVM
-    # hierarchy; synthesizing it lazily here made its join re-run for each
-    # of its three consumers (old-row lookup + dim-driven pass inside the
-    # feed, plus the previous rollup) — persist models the stored view
-    # and computes the join once (r6)
-    prev = join_view(fact_old, dim_old, "o_custkey", "c_custkey", attrs).persist()
-    feed = join_view_change_feed(
-        prev,
-        fact_changes,
-        dim_changes,
-        dim_old,
-        ["o_orderkey"],
-        "o_custkey",
-        "c_custkey",
-        attrs,
-    )
-    prev_rollup = group_rollup(prev, F.col("c_mktsegment"), "o_totalprice")
-    return finalize_rollup(
-        apply_delta_rollup(
-            prev_rollup,
-            feed,
-            F.col("c_mktsegment"),
-            "o_totalprice",
-            "o_totalprice_old",
-            old_group=F.col("c_mktsegment_old"),
+    def rollup(*, scope: CacheScope) -> DataFrame:
+        # the maintained view is MATERIALIZED by definition in an IVM
+        # hierarchy; synthesizing it lazily here made its join re-run for
+        # each of its three consumers (old-row lookup + dim-driven pass
+        # inside the feed, plus the previous rollup) — persist models
+        # the stored view and computes the join once (r6)
+        prev = scope.cache(
+            join_view(fact_old, dim_old, "o_custkey", "c_custkey", attrs)
         )
-    )
+        feed = join_view_change_feed(
+            prev,
+            fact_changes,
+            dim_changes,
+            dim_old,
+            ["o_orderkey"],
+            "o_custkey",
+            "c_custkey",
+            attrs,
+        )
+        prev_rollup = group_rollup(prev, F.col("c_mktsegment"), "o_totalprice")
+        return finalize_rollup(
+            apply_delta_rollup(
+                prev_rollup,
+                feed,
+                F.col("c_mktsegment"),
+                "o_totalprice",
+                "o_totalprice_old",
+                old_group=F.col("c_mktsegment_old"),
+            )
+        )
+
+    return _scoped(rollup)
 
 
 SQL_IVM_CASCADE_ROLLUP = """
@@ -7180,13 +7189,13 @@ def q_posting_serving_refresh(spark, sf):
     # IVM anti-join inside apply_delta_postings, and the removed-posting
     # probe inside refresh) — persist it so the synthetic-corpus explode
     # runs once, not three times (r6); released before returning.
-    old_index = posting_index(old_docs, "text", "doc_id").persist()
-    write_serving_postings(old_index, serving, n_buckets=64)
-    new_index = apply_delta_postings(old_index, changes, "text", "doc_id")
-    refresh_serving_postings(
-        spark, new_index, old_index, changes, "text", "doc_id", serving
-    )
-    old_index.unpersist(blocking=False)
+    with CacheScope() as scope:
+        old_index = scope.cache(posting_index(old_docs, "text", "doc_id"))
+        write_serving_postings(old_index, serving, n_buckets=64)
+        new_index = apply_delta_postings(old_index, changes, "text", "doc_id")
+        refresh_serving_postings(
+            spark, new_index, old_index, changes, "text", "doc_id", serving
+        )
     return (
         spark.read.parquet(serving)
         .groupBy("tok")
@@ -8025,7 +8034,7 @@ def q_json_schema_drift(spark, sf):
         F.lit('":true}'),
     )
     src = ev.select(epoch.cast("long").alias("rel_epoch"), j.alias("payload"))
-    return json_schema_drift(src, "payload", "rel_epoch")
+    return _scoped(json_schema_drift, src, "payload", "rel_epoch")
 
 
 SQL_JSON_SCHEMA_DRIFT = """
@@ -8567,22 +8576,20 @@ def q_cdc_dblog_backfill_state(spark, sf):
     # production the snapshot is a chunked SELECT of the live source —
     # i.e. read per chunk, not recomputed per chunk — so the cache is the
     # faithful model, not a shortcut.
-    snap = (
-        log.filter(F.col("lsn") <= cut2)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col("op") != "D"))
-        .drop("_rn")
-        .persist()
-    )
-
-    gen = backfill_chunks(tbl, snap, "conv_id", n_chunks=4)
-    next(gen), next(gen)  # chunks 0-1
-    log.filter(F.col("lsn") <= cut3).write.mode("overwrite").parquet(log_dir)
-    mgr.run(spec)  # live tail (cut2, cut3] lands mid-backfill
-    next(gen), next(gen)  # chunks 2-3 race the just-applied tail
-    log.write.mode("overwrite").parquet(log_dir)
-    mgr.run(spec)  # remaining tail (cut3, mx]
-    snap.unpersist(blocking=False)
+    with CacheScope() as scope:
+        snap = scope.cache(
+            log.filter(F.col("lsn") <= cut2)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter((F.col("_rn") == 1) & (F.col("op") != "D"))
+            .drop("_rn")
+        )
+        gen = backfill_chunks(tbl, snap, "conv_id", n_chunks=4)
+        next(gen), next(gen)  # chunks 0-1
+        log.filter(F.col("lsn") <= cut3).write.mode("overwrite").parquet(log_dir)
+        mgr.run(spec)  # live tail (cut2, cut3] lands mid-backfill
+        next(gen), next(gen)  # chunks 2-3 race the just-applied tail
+        log.write.mode("overwrite").parquet(log_dir)
+        mgr.run(spec)  # remaining tail (cut3, mx]
     return tbl.read()
 
 

@@ -15,7 +15,7 @@ import weakref
 from typing import Any, Callable, TypeVar
 
 from pyspark import SparkContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _T = TypeVar("_T")
 
@@ -94,3 +94,35 @@ def cached_columns(key: tuple, build: Callable[[], _T]) -> _T:
     if key not in built:
         built[key] = build()
     return built[key]
+
+
+class CacheScope:
+    """The one owner of every cache the operators take outside the sinks.
+
+    ``cache(df)`` persists ``df`` and records it; ``close()`` (also run by
+    ``__exit__``) unpersists everything recorded, newest first so no cached
+    plan outlives a cache it reads, and is idempotent. An operator that
+    returns a lazy frame over a cache takes the scope from its caller, who
+    closes it once the frame has been evaluated; an eager operator opens
+    its own with ``with CacheScope() as scope:``. A long-lived session
+    therefore never accumulates cache entries, and no call is served by a
+    cache an earlier call left behind.
+    """
+
+    def __init__(self) -> None:
+        self._frames: list[DataFrame] = []
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self._frames.append(df)
+        return df
+
+    def close(self) -> None:
+        while self._frames:
+            self._frames.pop().unpersist(blocking=False)
+
+    def __enter__(self) -> "CacheScope":
+        return self
+
+    def __exit__(self, *exc: object) -> None:
+        self.close()

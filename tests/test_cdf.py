@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from relational_data_loader_spark.fixtures import generate_change_log
 from relational_data_loader_spark.plans.manager import DataLoadManager
+from relational_data_loader_spark.session import CacheScope
 from relational_data_loader_spark.spec import transcripts_spec
 from tests.util import duck_final_state, write_log
 
@@ -254,20 +255,20 @@ def test_cdf_feeds_incremental_near_dup(spark, cdf_rig):
     delta = feed.filter(F.col("op") != "D").select("doc", "text")
     base = v2.join(changed, "doc", "left_anti")
 
-    inc = incremental_near_dup_pairs(
-        base, delta, "text", "doc",
-        base_sigs=minhash_signatures(base, "text", "doc"),
-        threshold=0.2,
-    )
-    got = sorted((r.doc_a, r.doc_b, r.jaccard) for r in inc.collect())
-    inc.unpersist_postings()
+    with CacheScope() as scope:
+        inc = incremental_near_dup_pairs(
+            base, delta, "text", "doc",
+            base_sigs=minhash_signatures(base, "text", "doc"),
+            threshold=0.2, scope=scope,
+        )
+        got = sorted((r.doc_a, r.doc_b, r.jaccard) for r in inc.collect())
 
     delta_ids = {r["doc"] for r in delta.select("doc").distinct().collect()}
-    full = near_dup_pairs(v2, "text", "doc", threshold=0.2)
-    want = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in full.collect()
-        if r.doc_a in delta_ids or r.doc_b in delta_ids
-    )
-    full.unpersist_postings()
+    with CacheScope() as scope:
+        full = near_dup_pairs(v2, "text", "doc", threshold=0.2, scope=scope)
+        want = sorted(
+            (r.doc_a, r.doc_b, r.jaccard)
+            for r in full.collect()
+            if r.doc_a in delta_ids or r.doc_b in delta_ids
+        )
     assert got == want and len(want) > 0

@@ -14,6 +14,8 @@ from relational_data_loader_spark.operators.similarity import (
     cosine_topk,
     lsh_cosine_topk,
 )
+from relational_data_loader_spark.session import CacheScope
+from tests.util import cache_is_empty
 
 
 @pytest.fixture(scope="module")
@@ -153,9 +155,10 @@ def test_embedding_near_dup_finds_planted_pair(vectors):
         embedding_near_dup_pairs,
     )
 
-    out = embedding_near_dup_pairs(
-        vectors, dim=16, threshold=0.95, n_planes=4
-    ).collect()
+    with CacheScope() as scope:
+        out = embedding_near_dup_pairs(
+            vectors, dim=16, threshold=0.95, n_planes=4, scope=scope
+        ).collect()
     pairs = {(r["id_a"], r["id_b"]) for r in out}
     # the mechanism guarantee: an exact copy shares every hyperplane sign
     assert (0, 2) in pairs
@@ -218,29 +221,30 @@ def test_embedding_near_dup_caps_degenerate_bucket(spark):
     df = spark.createDataFrame(
         hot + cold, "vec_id int, embedding array<float>"
     )
-    capped = embedding_near_dup_pairs(
-        df, dim=16, threshold=0.9, n_planes=4, max_bucket=10
-    ).collect()
+    with CacheScope() as scope:
+        capped = embedding_near_dup_pairs(
+            df, dim=16, threshold=0.9, n_planes=4, max_bucket=10, scope=scope
+        ).collect()
     pairs = {(r["id_a"], r["id_b"]) for r in capped}
     # the 40-vector bucket (40·39/2 = 780 pairs) is dropped wholesale...
     assert not any(a < 100 for a, _ in pairs), pairs
     # ...while the healthy bucket's pair survives, un-half-pruned
     assert pairs == {(100, 101)}
 
-    uncapped = embedding_near_dup_pairs(
-        df, dim=16, threshold=0.9, n_planes=4, max_bucket=10_000
-    ).count()
+    with CacheScope() as scope:
+        uncapped = embedding_near_dup_pairs(
+            df, dim=16, threshold=0.9, n_planes=4, max_bucket=10_000,
+            scope=scope,
+        ).count()
     assert uncapped == 780 + 1
 
 
 def test_near_dup_posting_cache_is_releasable(spark):
-    """VERDICT r3 task #6: the posting-list persist deliberately outlives
-    the call; the returned handle must release it so long-lived sessions
-    don't accumulate cached RDDs across specs."""
-    from relational_data_loader_spark.operators.dedup import (
-        near_dup_pairs,
-        near_dup_pairs_with_handle,
-    )
+    """The posting-list cache outlives the call and belongs to the caller's
+    scope: held while the scope is open, released when it closes (closing
+    twice is harmless), so long-lived sessions don't accumulate cached
+    RDDs across specs."""
+    from relational_data_loader_spark.operators.dedup import near_dup_pairs
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"),
@@ -252,20 +256,18 @@ def test_near_dup_posting_cache_is_releasable(spark):
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
     base = n_cached()
-    pairs, release = near_dup_pairs_with_handle(docs, "text", "doc_id")
-    assert pairs.count() == 1          # materializes → caches live
-    # two cached frames since r6: the posting list AND the signature table
-    # (the banded self-join reads the signature long-form three times)
-    assert n_cached() == base + 2
-    release()
-    assert n_cached() == base
-    release()                          # idempotent
-
-    # the convenience wrapper exposes the same handle on the DataFrame
-    p2 = near_dup_pairs(docs, "text", "doc_id")
-    assert p2.count() == 1
-    assert n_cached() == base + 2
-    p2.unpersist_postings()
+    with CacheScope() as scope:
+        pairs = near_dup_pairs(docs, "text", "doc_id", scope=scope)
+        assert pairs.count() == 1          # materializes → caches live
+        # two cached frames since r6: the posting list AND the signature
+        # table (the banded self-join reads the signature long-form three
+        # times)
+        assert n_cached() == base + 2
+        assert not cache_is_empty(spark)
+        scope.close()
+        assert n_cached() == base
+        assert cache_is_empty(spark)
+    # __exit__ closes again: idempotent
     assert n_cached() == base
 
 
@@ -339,20 +341,21 @@ def test_semantic_dedup_pairs_within_cell_only(spark):
     vecs = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
     cents = sample_centroids(vecs, 2, kmeans_iters=2)
 
-    pairs = semantic_dedup_pairs(vecs, cents, threshold=0.9)
-    cells = {
-        r["vec_id"]: r["cell"]
-        for r in ivf_cell_assignments(vecs, cents).collect()
-    }
-    got = pairs.collect()
-    assert got, "two tight planted clusters must yield within-cell pairs"
-    for r in got:
-        assert cells[r["id_a"]] == cells[r["id_b"]], "cross-cell pair leaked"
-        assert r["id_a"] < r["id_b"] and r["sim"] >= 0.9
+    with CacheScope() as scope:
+        pairs = semantic_dedup_pairs(vecs, cents, threshold=0.9, scope=scope)
+        cells = {
+            r["vec_id"]: r["cell"]
+            for r in ivf_cell_assignments(vecs, cents).collect()
+        }
+        got = pairs.collect()
+        assert got, "two tight planted clusters must yield within-cell pairs"
+        for r in got:
+            assert cells[r["id_a"]] == cells[r["id_b"]], "cross-cell pair leaked"
+            assert r["id_a"] < r["id_b"] and r["sim"] >= 0.9
 
-    verdict = dedup_clusters(
-        vecs.select("vec_id"), pairs, "vec_id", a_col="id_a", b_col="id_b"
-    )
+        verdict = dedup_clusters(
+            vecs.select("vec_id"), pairs, "vec_id", a_col="id_a", b_col="id_b"
+        )
     rows_v = {r["doc_id"]: r for r in verdict.collect()}
     assert len(rows_v) == 40  # one verdict per input vector
     # every cluster's keeper is its min id, and cluster_id == keeper id
@@ -362,5 +365,8 @@ def test_semantic_dedup_pairs_within_cell_only(spark):
 
     # degenerate-cell cap: capping below the cell size suppresses that
     # cell's pairs entirely (symmetric drop — no half-pruned pairs)
-    capped = semantic_dedup_pairs(vecs, cents, threshold=0.9, max_cell=10)
-    assert capped.count() == 0
+    with CacheScope() as scope:
+        capped = semantic_dedup_pairs(
+            vecs, cents, threshold=0.9, max_cell=10, scope=scope
+        )
+        assert capped.count() == 0

@@ -14,6 +14,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from tests.util import cache_is_empty
 
 SF_DIR = os.environ.get("RDL_TEST_SF_DIR", "/root/testdata/sf0.001")
 TABLES = [
@@ -78,10 +79,12 @@ def test_query_matches_oracle(spark, name):
     if name not in sqls:
         df = q(spark, SF_DIR)
         assert df.count() >= 0  # rows-only check, like the driver
-        return
-    spark_pdf = q(spark, SF_DIR).toPandas()
-    oracle_pdf = _duck(sqls[name])
-    _compare(spark_pdf, oracle_pdf, name)
+    else:
+        spark_pdf = q(spark, SF_DIR).toPandas()
+        oracle_pdf = _duck(sqls[name])
+        _compare(spark_pdf, oracle_pdf, name)
+    # a long-lived session runs many entries: none may leave a cache behind
+    assert cache_is_empty(spark), f"{name} left cached DataFrames"
 
 
 def test_entry_smoke(spark):

@@ -5,6 +5,12 @@ present (distinct-union, not intersection).
 """
 
 from relational_data_loader_spark.operators.quality import json_schema_drift
+from relational_data_loader_spark.session import CacheScope
+
+
+def _drift(df):
+    with CacheScope() as scope:
+        return json_schema_drift(df, "j", "ep", scope=scope).collect()
 
 
 def test_drift_semantics(spark):
@@ -20,11 +26,11 @@ def test_drift_semantics(spark):
     df = spark.createDataFrame(rows, "ep long, j string")
     got = {
         (r["epoch"], r["key"], r["status"])
-        for r in json_schema_drift(df, "j", "ep").collect()
+        for r in _drift(df)
     }
     assert got == {(1, "c", "added"), (1, "b", "removed")}
 
 
 def test_single_epoch_emits_nothing(spark):
     df = spark.createDataFrame([(5, '{"x":1}')], "ep long, j string")
-    assert json_schema_drift(df, "j", "ep").count() == 0
+    assert _drift(df) == []

@@ -22,7 +22,7 @@ from relational_data_loader_spark.plans.manager import DataLoadManager
 from relational_data_loader_spark.sinks.snapshot import SnapshotTable
 from relational_data_loader_spark.spec import transcripts_spec
 from tests.test_epoch_state import _expected, _rows
-from tests.util import write_log
+from tests.util import cache_is_empty, write_log
 
 
 def _envelopes(spark, n, lsn0, n_partitions=4):
@@ -74,8 +74,6 @@ def _jobs_and_py4j_commands(spark, fn):
 
 
 def test_second_mor_merge_is_one_write_with_a_constant_plan_build(spark, tmp_path):
-    # the session is shared: start from a cache no other test left entries in
-    spark.catalog.clearCache()
     table = _mor_table(spark, str(tmp_path / "t"))
     table.merge(_envelopes(spark, 3000, 2000), 2)  # first merge builds the columns
     stats, jobs, commands = _jobs_and_py4j_commands(
@@ -86,7 +84,7 @@ def test_second_mor_merge_is_one_write_with_a_constant_plan_build(spark, tmp_pat
     # the write's shuffle stage and the write itself: no stats pass
     assert jobs == 2
     # nothing persisted, nothing left behind
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert cache_is_empty(spark)
     assert commands < 400, commands
 
 

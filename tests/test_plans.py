@@ -11,6 +11,7 @@ from relational_data_loader_spark.queries import (
     q_cdc_projection_cast,
     q_revenue_by_nation,
 )
+from relational_data_loader_spark.session import CacheScope
 
 SF = "/root/testdata/sf0.001"
 
@@ -236,10 +237,19 @@ def test_rolling_stats_single_window_exchange(spark):
 
 def test_corpus_build_broadcasts_benchmark_ngrams(spark):
     """The benchmark n-gram set joins by broadcast (eval suites are tiny
-    next to the corpus); no cartesian anywhere in the composed plan."""
-    from relational_data_loader_spark.queries import q_corpus_build
+    next to the corpus); no cartesian anywhere in the composed plan. The
+    catalog entry returns its result checkpointed, so the plan is taken
+    from the operator on the entry's inputs."""
+    from relational_data_loader_spark.operators.corpus import build_corpus
 
-    plan = _plan(q_corpus_build(spark, SF))
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    with CacheScope() as scope:
+        plan = _plan(build_corpus(
+            docs.filter(F.col("doc_id") % 97 != 0),
+            docs.filter(F.col("doc_id") % 97 == 0),
+            min_tokens=5, min_alpha=0.3, max_contamination=0.5,
+            rates={"en": 0.5}, scope=scope,
+        ))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan
 
@@ -283,10 +293,25 @@ def test_incremental_near_dup_no_cartesian_semi_pushdown(spark):
     nested-loop/cartesian anywhere (the band join is an equi-join on
     md5-uniform keys), and the base-corpus explode must sit behind a
     LEFT-SEMI join on candidate ids — the property that bounds
-    verification cost by candidates, not corpus."""
-    from relational_data_loader_spark.queries import q_incremental_near_dup
+    verification cost by candidates, not corpus. The catalog entry
+    returns its result checkpointed, so the plan is taken from the
+    operator on the entry's inputs."""
+    from relational_data_loader_spark.operators.dedup import (
+        incremental_near_dup_pairs,
+        minhash_signatures,
+    )
 
-    plan = _plan(q_incremental_near_dup(spark, SF))
+    docs = spark.read.parquet(f"{SF}/documents.parquet").filter(
+        F.col("doc_id") < 500
+    )
+    delta = docs.filter(F.col("doc_id") % 7 == 0)
+    base = docs.filter(F.col("doc_id") % 7 != 0)
+    with CacheScope() as scope:
+        plan = _plan(incremental_near_dup_pairs(
+            base, delta, "text", "doc_id",
+            base_sigs=minhash_signatures(base, "text", "doc_id"),
+            threshold=0.5, scope=scope,
+        ))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "LeftSemi" in plan, plan

@@ -10,6 +10,7 @@ from relational_data_loader_spark.operators.project import (
     QUARANTINE_ERRORS_COL,
     project_cast_quarantine,
 )
+from relational_data_loader_spark.session import CacheScope
 from relational_data_loader_spark.spec import ColumnSpec, IngestSpec
 
 
@@ -82,11 +83,12 @@ def test_build_corpus_each_gate(spark):
     bench = spark.createDataFrame(
         [(100, "leak one two three four five six")], "doc_id: bigint, text: string"
     )
-    out = build_corpus(
-        docs, bench, min_tokens=5, min_alpha=0.5, max_contamination=0.5,
-        rates={}, default_rate=1.0,
-    )
-    rows = {r["doc_id"]: r for r in out.collect()}
+    with CacheScope() as scope:
+        out = build_corpus(
+            docs, bench, min_tokens=5, min_alpha=0.5, max_contamination=0.5,
+            rates={}, default_rate=1.0, scope=scope,
+        )
+        rows = {r["doc_id"]: r for r in out.collect()}
     assert set(rows) == {1, 5}
     assert rows[1]["contaminated_frac"] == 0.0
     assert rows[1]["n_tokens"] == 6
@@ -98,18 +100,17 @@ def test_build_corpus_sampling_is_content_deterministic(spark):
         "doc_id: bigint, lang: string, text: string",
     )
     bench = spark.createDataFrame([], "doc_id: bigint, text: string")
-    out = build_corpus(docs, bench, min_alpha=0.3, rates={"en": 0.5})
-    a = {r["doc_id"] for r in out.collect()}
-    b = {r["doc_id"] for r in out.collect()}
+    with CacheScope() as scope:
+        out = build_corpus(
+            docs, bench, min_alpha=0.3, rates={"en": 0.5}, scope=scope
+        )
+        a = {r["doc_id"] for r in out.collect()}
+        b = {r["doc_id"] for r in out.collect()}
     assert a == b  # hash-of-key sampling: stable across runs
     assert 40 < len(a) < 160  # ~half survive the en rate
 
 
-def test_build_corpus_handle_releases_cache(spark):
-    from relational_data_loader_spark.operators.corpus import (
-        build_corpus_with_handle,
-    )
-
+def test_build_corpus_scope_releases_cache(spark):
     docs = spark.createDataFrame(
         [(i, "en", f"word{i} alpha beta gamma delta epsilon") for i in range(20)],
         "doc_id: bigint, lang: string, text: string",
@@ -117,8 +118,11 @@ def test_build_corpus_handle_releases_cache(spark):
     bench = spark.createDataFrame([], "doc_id: bigint, text: string")
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
-    out, release = build_corpus_with_handle(docs, bench, min_alpha=0.3)
-    out.count()
-    assert jsc.getPersistentRDDs().size() > before
-    release()
+    with CacheScope() as scope:
+        out = build_corpus(docs, bench, min_alpha=0.3, scope=scope)
+        out.count()
+        assert jsc.getPersistentRDDs().size() > before
+        scope.close()
+        assert jsc.getPersistentRDDs().size() == before
+    # __exit__ closes again: idempotent
     assert jsc.getPersistentRDDs().size() == before

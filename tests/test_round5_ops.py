@@ -8,6 +8,7 @@ from relational_data_loader_spark.operators.similarity import (
     kmeans_refine_centroids,
     sample_centroids,
 )
+from relational_data_loader_spark.session import CacheScope
 
 SF = "/root/testdata/sf0.001"
 
@@ -247,21 +248,21 @@ def test_incremental_near_dup_equals_full_filtered(spark):
     delta = docs.filter(F.col("doc_id") % 5 == 0)
     base = docs.filter(F.col("doc_id") % 5 != 0)
 
-    incr = incremental_near_dup_pairs(
-        base, delta, "text", "doc_id",
-        base_sigs=minhash_signatures(base, "text", "doc_id"),
-        threshold=0.3,
-    )
-    got = {(r.doc_a, r.doc_b): r.jaccard for r in incr.collect()}
-    incr.unpersist_postings()
+    with CacheScope() as scope:
+        incr = incremental_near_dup_pairs(
+            base, delta, "text", "doc_id",
+            base_sigs=minhash_signatures(base, "text", "doc_id"),
+            threshold=0.3, scope=scope,
+        )
+        got = {(r.doc_a, r.doc_b): r.jaccard for r in incr.collect()}
 
-    full = near_dup_pairs(docs, "text", "doc_id", threshold=0.3)
-    want = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in full.collect()
-        if r.doc_a % 5 == 0 or r.doc_b % 5 == 0
-    }
-    full.unpersist_postings()
+    with CacheScope() as scope:
+        full = near_dup_pairs(docs, "text", "doc_id", threshold=0.3, scope=scope)
+        want = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in full.collect()
+            if r.doc_a % 5 == 0 or r.doc_b % 5 == 0
+        }
     assert got == want and len(want) > 0
 
 
@@ -278,13 +279,13 @@ def test_incremental_near_dup_base_explode_is_candidate_bounded(spark):
     delta = spark.createDataFrame(
         [(10_000, "qzx wvu tsr qpo nml kji")], ["doc_id", "text"]
     )
-    out = incremental_near_dup_pairs(
-        base, delta, "text", "doc_id",
-        base_sigs=minhash_signatures(base, "text", "doc_id"),
-        threshold=0.1,
-    )
-    assert out.count() == 0
-    out.unpersist_postings()
+    with CacheScope() as scope:
+        out = incremental_near_dup_pairs(
+            base, delta, "text", "doc_id",
+            base_sigs=minhash_signatures(base, "text", "doc_id"),
+            threshold=0.1, scope=scope,
+        )
+        assert out.count() == 0
 
 
 def test_ivf_cell_ivm_equals_rebuild_with_deletes(spark):

@@ -17,6 +17,7 @@ from relational_data_loader_spark.operators.temporal import (
     calendar_gapfill,
     scd2_temporal_join,
 )
+from relational_data_loader_spark.session import CacheScope
 
 
 def _ts(d):
@@ -250,8 +251,9 @@ def test_minhash_audit_identical_docs_perfect_estimate(spark):
          (3, "totally different words here")],
         ["doc_id", "text"],
     )
-    rows = {(r["doc_a"], r["doc_b"]): r
-            for r in minhash_estimate_audit(docs, "text", "doc_id").collect()}
+    with CacheScope() as scope:
+        audit = minhash_estimate_audit(docs, "text", "doc_id", scope=scope)
+        rows = {(r["doc_a"], r["doc_b"]): r for r in audit.collect()}
     r12 = rows[(1, 2)]
     # identical token sets: every component agrees, exact jaccard 1.0
     assert r12["est_jaccard"] == 1.0 and r12["exact_jaccard"] == 1.0

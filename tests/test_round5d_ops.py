@@ -18,6 +18,7 @@ from relational_data_loader_spark.operators.vocab import (
     bpe_merge_candidates,
     vocab_coverage,
 )
+from relational_data_loader_spark.session import CacheScope
 
 
 # --------------------------------------------------------------------------
@@ -26,6 +27,13 @@ from relational_data_loader_spark.operators.vocab import (
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def _edit_pairs(docs, threshold):
+    with CacheScope() as scope:
+        return edit_distance_near_dup(
+            docs, "text", "doc_id", threshold=threshold, scope=scope
+        ).collect()
 
 
 def test_edit_distance_identical_and_small_edit(spark):
@@ -41,9 +49,7 @@ def test_edit_distance_identical_and_small_edit(spark):
     )
     pairs = {
         (r["doc_a"], r["doc_b"]): r["edit_sim"]
-        for r in edit_distance_near_dup(
-            docs, "text", "doc_id", threshold=0.8
-        ).collect()
+        for r in _edit_pairs(docs, threshold=0.8)
     }
     assert pairs[(1, 2)] == 1.0
     assert 0.9 <= pairs[(1, 3)] < 1.0
@@ -63,7 +69,7 @@ def test_edit_distance_catches_what_jaccard_misses(spark):
     docs = _docs(spark, [(1, a), (2, b)])
     jac = token_jaccard_pairs(docs, "text", "doc_id", threshold=0.0).collect()
     assert len(jac) == 1 and jac[0]["jaccard"] == 0.6
-    ed = edit_distance_near_dup(docs, "text", "doc_id", threshold=0.8).collect()
+    ed = _edit_pairs(docs, threshold=0.8)
     assert len(ed) == 1 and ed[0]["edit_sim"] >= 0.95
 
 
@@ -72,13 +78,9 @@ def test_edit_distance_banded_pruning_is_exact(spark):
     # set vs an unbounded computation — only prune below-threshold pairs
     rows = [(i, f"document body shared prefix words {i % 3} tail") for i in range(12)]
     docs = _docs(spark, rows)
-    banded = edit_distance_near_dup(docs, "text", "doc_id", threshold=0.8)
-    unbounded = edit_distance_near_dup(
-        docs, "text", "doc_id", threshold=0.0
-    ).filter(F.col("edit_sim") >= 0.8)
-    assert sorted(map(tuple, banded.collect())) == sorted(
-        map(tuple, unbounded.collect())
-    )
+    banded = _edit_pairs(docs, threshold=0.8)
+    unbounded = [r for r in _edit_pairs(docs, threshold=0.0) if r["edit_sim"] >= 0.8]
+    assert sorted(map(tuple, banded)) == sorted(map(tuple, unbounded))
 
 
 # --------------------------------------------------------------------------

@@ -15,6 +15,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 
+def cache_is_empty(session) -> bool:
+    """No DataFrame of the session's shared state is cached."""
+    return session._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def write_log(tbl: pa.Table, path: str, n_files: int = 4, lsn_upto: int | None = None,
               lsn_from: int | None = None) -> None:
     """Write (a slice of) a change-log table as lsn-ordered parquet files."""
