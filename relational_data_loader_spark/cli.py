@@ -41,23 +41,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     )
     p.add_argument("--checkpoint", default=None, help="streaming checkpoint root")
     p.add_argument(
-        "--stateful-dedup",
-        action="store_true",
-        help="with --stream: cross-batch per-PK monotone-LSN filter "
-        "(streaming/state_filter.py) — drops re-delivered/stale events "
-        "before the merge; state is one long per live PK",
-    )
-    p.add_argument(
-        "--state-ttl-minutes",
-        type=int,
-        default=None,
-        metavar="M",
-        help="with --stateful-dedup: evict a key's dedup state after M "
-        "idle minutes, bounding the state store to keys active within the "
-        "TTL (evicted keys fall back to the sink's version guard). "
-        "Resident streams only — incompatible with --once",
-    )
-    p.add_argument(
         "--expire-tombstones-below",
         type=int,
         default=None,
@@ -241,27 +224,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
-
-    if args.state_ttl_minutes is not None and not args.stateful_dedup:
-        # the TTL bounds the DEDUP state; without the filter it would be
-        # silently inert — the operator would believe state is bounded
-        # while no dedup state exists at all
-        print(
-            "[rdl-spark] --state-ttl-minutes requires --stateful-dedup "
-            "(it bounds the dedup filter's state)",
-            file=sys.stderr,
-        )
-        return 2
-    if args.state_ttl_minutes is not None and args.once:
-        # the runner would raise the same contract; fail before a Spark
-        # session is paid for (see StreamingIngest.start's guard)
-        print(
-            "[rdl-spark] --state-ttl-minutes needs a resident stream: "
-            "processing-time timeouts never let an --once (availableNow) "
-            "trigger terminate",
-            file=sys.stderr,
-        )
-        return 2
 
     from relational_data_loader_spark.plans.manager import DataLoadManager
     from relational_data_loader_spark.session import get_spark
@@ -609,10 +571,7 @@ def main(argv: list[str] | None = None) -> int:
             if force:
                 mgr.run(spec, force_full=True)
             queries.append(
-                StreamingIngest(
-                    mgr, spec, ckpt, stateful_dedup=args.stateful_dedup,
-                    state_ttl_minutes=args.state_ttl_minutes,
-                ).start(available_now=args.once)
+                StreamingIngest(mgr, spec, ckpt).start(available_now=args.once)
             )
             print(f"[rdl-spark] streaming {spec.name} (checkpoint={ckpt})")
         else:

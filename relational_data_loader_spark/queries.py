@@ -3141,11 +3141,11 @@ def q_cdc_mor_compaction_state(spark, sf):
 def q_cdc_streaming_state(spark, sf):
     """Engine STREAMING replay → visible final table: the same derived
     change log tailed as a Structured Streaming file source and applied
-    through the foreachBatch MERGE path (streaming/runner.py) with the
-    opt-in cross-batch stateful dedup enabled, drained to caught-up. Must
-    hash-equal the BATCH replay's LWW oracle — the batch/stream
-    equivalence the north rule demands, previously pinned only in pytest,
-    now on the driver's hard signal."""
+    through the foreachBatch MERGE path (streaming/runner.py), drained to
+    caught-up. No stateful operator runs: the sink's version-guarded merge
+    is the only dedup. Must hash-equal the BATCH replay's LWW oracle — the
+    batch/stream equivalence the north rule demands, on the driver's hard
+    signal."""
     import shutil
 
     from relational_data_loader_spark.plans.manager import DataLoadManager
@@ -3158,22 +3158,7 @@ def q_cdc_streaming_state(spark, sf):
     _derived_changelog(spark, sf).write.mode("overwrite").parquet(log_dir)
     mgr = DataLoadManager(spark, os.path.join(base, "wh"))
     spec = transcripts_spec(source=f"parquet://{log_dir}", target_buckets=8)
-    ing = StreamingIngest(
-        mgr, spec, os.path.join(base, "ckpt"), stateful_dedup=True
-    )
-    # state-store sizing (r6): the stateful dedup commits one delta file +
-    # fsync PER shuffle partition PER micro-batch, and at this fixture's
-    # volume the fsyncs ARE the query — recentProgress read
-    # stateCommitMs ≈ 8-9.5 s summed over 32 stores vs ~100 k input rows.
-    # 8 partitions cuts the commit count 4× (same knob, same rationale and
-    # restore discipline as q_stream_interval_join; production volume
-    # turns it UP, not down). Partitioning cannot change the LWW result.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        ing.run_until_caught_up()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    StreamingIngest(mgr, spec, os.path.join(base, "ckpt")).run_until_caught_up()
     return mgr.table(spec).read()
 
 

@@ -17,6 +17,8 @@ Exactly-once story (north_star):
 - together: at-least-once delivery × idempotent commit = exactly-once apply.
   The two pieces of state (checkpoint dir, target manifest) must be kept or
   deleted together — same contract as Delta/Iceberg + checkpoint.
+- no stateful operator: a redelivered segment rides the merge, whose
+  version guard makes each stale row a no-op.
 
 Late events at/below the full-refresh BASELINE (a refresh raced the stream)
 are dropped by an explicit filter; events above it may arrive in any order
@@ -33,6 +35,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from relational_data_loader_spark.plans.manager import DataLoadManager
 from relational_data_loader_spark.spec import IngestSpec
+
+# rows one change-log file is assumed to hold, to turn spec.batch_size (rows)
+# into the file source's maxFilesPerTrigger (files)
+ROWS_PER_LOG_FILE = 250_000
 
 
 class StreamingIngest:
@@ -53,9 +59,6 @@ class StreamingIngest:
         spec: IngestSpec,
         checkpoint_dir: str,
         max_files_per_trigger: int | None = None,
-        rows_per_file_hint: int = 250_000,
-        stateful_dedup: bool = False,
-        state_ttl_minutes: int | None = None,
     ):
         if spec.envelope != "full":
             # the stream path tolerates PERMUTED micro-batch segments (file
@@ -86,18 +89,11 @@ class StreamingIngest:
         self.mgr = manager
         self.spec = spec
         self.checkpoint_dir = checkpoint_dir
-        # opt-in cross-batch per-PK monotone-LSN filter (state_filter.py):
-        # kills re-delivered/stale events before the merge shuffle. State is
-        # one long per live PK — size the state store accordingly.
-        self.stateful_dedup = stateful_dedup
-        # bounds the dedup state to keys active within the TTL; evicted
-        # keys fall back to the sink's version guard (state_filter.py)
-        self.state_ttl_minutes = state_ttl_minutes
         if max_files_per_trigger is None:
             # derive micro-batch size from the spec's batch_size (the
             # reference C2 knob): the file source is bounded in files, not
-            # rows, so convert via a declared rows-per-log-segment hint
-            max_files_per_trigger = max(1, spec.batch_size // rows_per_file_hint)
+            # rows, so convert via the assumed rows per log file
+            max_files_per_trigger = max(1, spec.batch_size // ROWS_PER_LOG_FILE)
         self.max_files_per_trigger = max_files_per_trigger
         self.quarantined: dict[int, int] = {}
 
@@ -183,19 +179,6 @@ class StreamingIngest:
                         raise CompatibilityError(
                             self.spec.name, self.spec.compat_level, violations
                         )
-        if available_now and self.state_ttl_minutes is not None:
-            # measured, not theoretical: processing-time timers make the
-            # stateful operator report pending work every trigger, so an
-            # availableNow run schedules empty drain micro-batches FOREVER
-            # (observed 160+ zero-data batches with all timers already
-            # cleared). TTL eviction is a resident-stream feature; a
-            # poll-style drain should run without it (state carried in the
-            # checkpoint is bounded by what the resident runs evicted).
-            raise ValueError(
-                "state_ttl_minutes requires a resident stream "
-                "(start(available_now=False)): processing-time timeouts "
-                "prevent availableNow triggers from ever terminating"
-            )
         scheme, _, path = self.spec.source.partition("://")
         if scheme == "kafka":
             # Debezium topic tail (sources/kafka.py, jar-gated);
@@ -246,23 +229,11 @@ class StreamingIngest:
                     f"debezium:// or kafka://, got {scheme!r} "
                     "(database sources poll via batch runs — see docstring)"
                 )
-        if self.stateful_dedup:
-            from relational_data_loader_spark.streaming.state_filter import (
-                monotone_lsn_filter,
-            )
-
-            stream = monotone_lsn_filter(
-                stream, self.spec, ttl_minutes=self.state_ttl_minutes
-            )
         writer = (
             stream.writeStream.foreachBatch(self.apply_batch)
             .option("checkpointLocation", self.checkpoint_dir)
             .queryName(f"rdl-ingest-{self.spec.name}")
         )
-        if self.stateful_dedup:
-            # the stateful operator emits in Update mode; the query-level
-            # output mode must match (foreachBatch accepts update)
-            writer = writer.outputMode("update")
         if available_now:
             writer = writer.trigger(availableNow=True)
         return writer.start()

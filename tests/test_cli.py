@@ -107,36 +107,6 @@ def test_arg_wiring():
     assert a.force_full_refresh == "a,b" and a.log_level == "INFO"
 
 
-def test_stream_stateful_dedup_flag(setup, capsys, tmp_path):
-    """--stateful-dedup wires the cross-batch LSN filter into the stream;
-    the drained final state is unchanged (the filter only removes events
-    the merge guard would no-op)."""
-    log, logdir, specdir, wh, spec = setup
-    write_log(log, logdir, n_files=6)
-    ckpt = str(tmp_path / "ckpt_sd")
-    assert main(
-        ["--warehouse", wh, "--specs", specdir, "--stream", "--once",
-         "--stateful-dedup", "--checkpoint", ckpt]
-    ) == 0
-
-    from relational_data_loader_spark.plans.manager import DataLoadManager
-    from relational_data_loader_spark.session import get_spark
-
-    mgr = DataLoadManager(get_spark("rdl-tests"), wh)
-    got = spark_sorted_pdf(mgr.table(spec).read())
-    assert_tables_equal(got, duck_final_state(f"{logdir}/*.parquet"))
-    # the stateful operator left its state store in the checkpoint
-    assert os.path.isdir(os.path.join(ckpt, "transcripts", "state"))
-
-
-def test_arg_wiring_stateful_dedup():
-    a = parse_args(["--warehouse", "/wh", "--specs", "/s", "--stream",
-                    "--stateful-dedup"])
-    assert a.stateful_dedup is True
-    a2 = parse_args(["--warehouse", "/wh", "--specs", "/s"])
-    assert a2.stateful_dedup is False
-
-
 def test_maintenance_mode(setup, capsys, tmp_path):
     """--expire-tombstones-below / --vacuum run the janitorial pass per spec
     and exit without loading."""

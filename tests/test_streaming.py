@@ -1,9 +1,12 @@
 """Streaming ingest families: end-to-end tail, kill/resume exactly-once,
-idempotent epoch replay, late-event drop (SURVEY.md §5.2 engine families)."""
+idempotent epoch replay, late-event drop, redelivered and stale segments
+(SURVEY.md §5.2 engine families)."""
 
+import os
 import time
 
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 
 from relational_data_loader_spark.fixtures import generate_change_log
@@ -192,3 +195,81 @@ def test_late_events_below_watermark_dropped(spark, warehouse, tmp_path, log_tbl
     got = spark_sorted_pdf(mgr.table(spec).read())
     want = duck_final_state(f"{logdir}/*.parquet")
     assert_tables_equal(got, want)
+
+
+def _write_segments(tbl, logdir, cuts):
+    """One parquet file per ``[lo, hi)`` lsn slice of the log, in ``cuts``
+    order; strictly increasing mtimes make the file source deliver them in
+    that order."""
+    os.makedirs(logdir, exist_ok=True)
+    segs = []
+    for i, (lo, hi) in enumerate(cuts):
+        seg = tbl.filter(
+            pc.and_(pc.greater_equal(tbl["lsn"], lo), pc.less(tbl["lsn"], hi))
+        ).sort_by("lsn")
+        path = os.path.join(logdir, f"seg-{i:03d}.parquet")
+        pq.write_table(seg, path)
+        os.utime(path, (1_700_000_000 + i,) * 2)
+        segs.append(seg)
+    return segs
+
+
+def _renamed_pk_spec(source):
+    from relational_data_loader_spark.spec import ColumnSpec, IngestSpec
+
+    cols = [
+        ColumnSpec("conv_id", "conversation_id", "string", primary_key=True,
+                   nullable=False),
+        ColumnSpec("turn_idx", "turn_number", "int", primary_key=True,
+                   nullable=False),
+        ColumnSpec("role", "speaker", "string"),
+        ColumnSpec("text", "text", "string"),
+        ColumnSpec("tool", "tool", "string"),
+        ColumnSpec("ts", "ts", "datetime"),
+    ]
+    return IngestSpec(name="renamed", source=source, columns=cols, target_buckets=4)
+
+
+@pytest.mark.parametrize(
+    "seed, n_events, n_convs, cuts, renamed",
+    [
+        # a later segment redelivers the first one whole, plus the rest
+        (19, 1200, 25, lambda n: [(0, n // 2), (0, n + 1)], False),
+        # a later segment holds only events the first already superseded
+        (23, 800, 15, lambda n: [(0, n + 1), (n // 4, n // 2)], False),
+        # the redelivered prefix again, under a spec that renames its PKs
+        (41, 400, 10, lambda n: [(0, n // 2), (0, n + 1)], True),
+    ],
+    ids=["redelivered_prefix", "stale_only_batch", "renamed_pk"],
+)
+def test_redelivered_and_stale_segments_match_oracle(
+    spark, warehouse, tmp_path, seed, n_events, n_convs, cuts, renamed
+):
+    """At-least-once delivery: segments that repeat or lag behind what the
+    table already holds, stale deletes included, each applied as its own
+    micro-batch, leave the LWW final state of the log."""
+    tbl = generate_change_log(n_events=n_events, n_convs=n_convs, seed=seed)
+    logdir = str(tmp_path / "log")
+    segs = _write_segments(tbl, logdir, cuts(tbl.num_rows))
+    assert "D" in segs[-1]["op"].to_pylist()
+
+    source = f"parquet://{logdir}"
+    spec = (
+        _renamed_pk_spec(source) if renamed
+        else transcripts_spec(source=source, target_buckets=4)
+    )
+    mgr = DataLoadManager(spark, warehouse)
+    ing = StreamingIngest(mgr, spec, str(tmp_path / "ckpt"), max_files_per_trigger=1)
+    q = ing.start(available_now=True)
+    q.awaitTermination()
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [
+        s.num_rows for s in segs
+    ]
+
+    got = mgr.table(spec).read()
+    if renamed:
+        got = got.selectExpr(
+            "conversation_id AS conv_id", "turn_number AS turn_idx",
+            "speaker AS role", "text", "tool", "ts",
+        )
+    assert_tables_equal(spark_sorted_pdf(got), duck_final_state(f"{logdir}/*.parquet"))
