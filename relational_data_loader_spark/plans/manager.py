@@ -28,7 +28,7 @@ from relational_data_loader_spark.sources.readers import (
     change_tracking_info,
     read_change_log,
 )
-from relational_data_loader_spark.spec import IngestSpec
+from relational_data_loader_spark.spec import IngestSpec, gate_compat
 from relational_data_loader_spark.state import StateTable
 
 
@@ -416,24 +416,7 @@ class DataLoadManager:
         stored_json = table.stored_spec_json() if exists else None
         stored_spec = IngestSpec.from_json(stored_json) if stored_json else None
         stored_ck = table.stored_checksum() if exists else None
-        if (
-            stored_spec is not None
-            and spec.compat_level != "none"
-            and stored_ck != spec.checksum()
-        ):
-            # governance gate BEFORE any load work: a forbidden evolution
-            # must leave state/watermark/epochs untouched so a corrected
-            # spec reruns cleanly (the registry reject-at-registration
-            # analog; spec.py check_compat documents the level semantics)
-            violations = spec.check_compat(stored_spec)
-            if violations:
-                from relational_data_loader_spark.spec import (
-                    CompatibilityError,
-                )
-
-                raise CompatibilityError(
-                    spec.name, spec.compat_level, violations
-                )
+        gate_compat(spec, stored_spec)
         decision = decide(
             spec,
             target_exists=exists,

@@ -575,8 +575,7 @@ class IcebergTable:
         # the batch feeds two consumers (stats row below + the MERGE source);
         # persist so the netting shuffle runs once. Chunk sizes are bounded by
         # spec.batch_size (default 5M rows ≈ a few hundred MB clusterwide),
-        # which fits executor storage — the snapshot sink's parquet staging
-        # exists because ITS fallback runs single-node (sinks/snapshot.py).
+        # which fits executor storage.
         batch = batch.persist()
         try:
             lsn, op = spec.lsn_column, spec.op_column

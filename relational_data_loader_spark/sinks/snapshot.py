@@ -1518,7 +1518,10 @@ class SnapshotTable:
         Epoch stats (touched buckets, per-bucket envelope counts and max
         lsn, for ``MergeStats`` and ``_rdl_state``): CoW takes them from a
         pass over the batch before it reads the target, MoR from its write
-        (an observation plus the new files' footers).
+        (an observation plus the new files' footers). Neither caches the
+        batch: the CoW pass and write each read it, and a caller whose
+        batch cannot be read twice for free caches it first (the streaming
+        micro-batch, ``StreamingIngest.apply_batch``).
         """
         t0 = time.time()
         spec = self.spec
@@ -1589,14 +1592,13 @@ class SnapshotTable:
         layout: int,
     ) -> tuple[list[EpochRow], dict[str, Any]]:
         """The merge-on-read epoch: ONE write job, and the batch's one
-        consumer. No persist, no stats pass, no staging: the epoch's stats
-        ride the write. The pre-net envelope counts per bucket come from an
-        observation of the rows entering the net (``_observed_counts``), the
-        epoch's max lsn from the same observation, and each bucket's max
-        lsn from the ``_rdl_lsn`` footer max of its new delta files (the
-        netted winners keep every key's max lsn, so the bucket max
-        survives the net). Returns the epoch's rows and the committed
-        manifest."""
+        consumer. No stats pass: the epoch's stats ride the write. The
+        pre-net envelope counts per bucket come from an observation of the
+        rows entering the net (``_observed_counts``), the epoch's max lsn
+        from the same observation, and each bucket's max lsn from the
+        ``_rdl_lsn`` footer max of its new delta files (the netted winners
+        keep every key's max lsn, so the bucket max survives the net).
+        Returns the epoch's rows and the committed manifest."""
         cols = self._epoch_columns(layout)
         seq = int(m.get("next_delta_seq", 1))
         obs = Observation()
@@ -1678,96 +1680,65 @@ class SnapshotTable:
         layout: int,
     ) -> tuple[list[EpochRow], dict[str, Any]]:
         """The copy-on-write epoch: a stats pass over the batch, then the
-        touched buckets' rewrite. Returns the epoch's rows and the committed
-        manifest."""
+        touched buckets' rewrite. The pass and the merge window each read
+        the batch; nothing is cached here. A file-sourced chunk is cheap to
+        scan twice, and the one input that is not, a streaming
+        micro-batch, arrives cached by its caller
+        (``StreamingIngest.apply_batch``). Returns the epoch's rows and the
+        committed manifest."""
         spec = self.spec
         cols = self._epoch_columns(layout)
-        # The batch feeds two consumers: the stats pass, which must name the
-        # touched buckets before the target can be read, and the merge
-        # window. It is persisted before the pass, so the pass fills the
-        # cache and the merge reads cached blocks instead of recomputing the
-        # batch's scan and projection (and a streaming micro-batch's source
-        # is read once: unpersisted, numInputRows counts both scans).
-        # Replay-scale batches (> ``stage_threshold`` rows, ≈ a few GB of
-        # cached columns) then move to scratch parquet, written from the
-        # cache in one pass and unpersisted at once — the reference's
-        # staging table (W3) reborn: caching tens of millions of rows across
-        # consumers thrashes the unified memory manager (storage eviction →
-        # full recompute per consumer), measured as a 6× collapse at
-        # 16M-row batches on 32 cores. Round-3 counter-measurement:
-        # re-scanning a file-source batch instead of staging it measured
-        # slower-or-equal (staged [7.6, 7.3, 16.0]s vs re-scan [13.1, 7.3,
-        # 23.8]s, 8M-row batch) — the staged copy is compact and
-        # pre-projected. Until the stats pass stands alone, the oversized
-        # batch still sits in the cache for that one pass (ADVICE #4); the
-        # merge-on-read epoch has no pass and no persist.
-        stage_threshold = 4_000_000
-        stage_dir: str | None = None
-        batch = batch.persist()
-        persisted = True
-        try:
-            is_del = F.col(spec.op_column) == F.lit(spec.delete_op)
-            stat_rows = (
-                batch.groupBy(bucket_expr(self.bucket_key, layout).alias("b"))
-                .agg(
-                    F.max(spec.lsn_column).alias("max_lsn"),
-                    F.sum(F.when(~is_del, 1).otherwise(0)).alias("ups"),
-                    F.sum(F.when(is_del, 1).otherwise(0)).alias("dels"),
-                )
-                .collect()
+        is_del = F.col(spec.op_column) == F.lit(spec.delete_op)
+        stat_rows = (
+            batch.groupBy(bucket_expr(self.bucket_key, layout).alias("b"))
+            .agg(
+                F.max(spec.lsn_column).alias("max_lsn"),
+                F.sum(F.when(~is_del, 1).otherwise(0)).alias("ups"),
+                F.sum(F.when(is_del, 1).otherwise(0)).alias("dels"),
             )
-            if not stat_rows:
-                return self._commit_empty(m, key, epoch_id)
-            rows = sorted(
-                (int(r["b"]), int(r["max_lsn"]), int(r["ups"]), int(r["dels"]))
-                for r in stat_rows
-            )
-            touched = {b for b, *_ in rows}
-            watermark = max(int(m["watermark"]), max(mx for _, mx, _, _ in rows))
-            if sum(ups + dels for _, _, ups, dels in rows) > stage_threshold:
-                stage_dir = os.path.join(self.path, "data", f".stage-{uuid.uuid4().hex}")
-                batch.write.parquet(stage_dir)
-                batch.unpersist()
-                persisted = False
-                batch = self.spark.read.parquet(stage_dir)
+            .collect()
+        )
+        if not stat_rows:
+            return self._commit_empty(m, key, epoch_id)
+        rows = sorted(
+            (int(r["b"]), int(r["max_lsn"]), int(r["ups"]), int(r["dels"]))
+            for r in stat_rows
+        )
+        touched = {b for b, *_ in rows}
+        watermark = max(int(m["watermark"]), max(mx for _, mx, _, _ in rows))
 
-            # pending MoR deltas for the touched buckets fold into this
-            # rewrite (mode interleave safety): their rows join the target
-            # side carrying their commit seq, so equal-lsn redeliveries still
-            # resolve toward the later epoch, and the new manifest drops the
-            # absorbed delta references.
-            deltas: dict[str, list[str]] = m.get("deltas") or {}
-            target = self._with_deltas(
-                [p for b in touched for p in m["buckets"].get(str(b), [])],
-                [p for b in touched for p in deltas.get(str(b), [])],
-            )
-            # version-guarded LWW against the target (module docstring):
-            # stored rows and batch rows become one envelope stream and the
-            # max-lsn row per PK wins; deletes win as tombstone rows. No
-            # broadcast anywhere: driver-side build cost would cap scaling
-            # at replay batch sizes. _rdl_src is the equal-lsn tie rank: base
-            # rows 0, delta rows their commit seq, this batch next_seq
-            # (> every stored seq).
-            next_seq = int(m.get("next_delta_seq", 1))
-            t_env = target.select(*cols.target)
-            b_env = batch.select(
-                *self._envelope(epoch_id, cols),
-                F.lit(next_seq).cast("long").alias("_rdl_src"),
-            )
-            buckets = {
-                b: files for b, files in m["buckets"].items() if int(b) not in touched
-            }
-            buckets.update(self._write_buckets(self._lww_merge_plan(t_env, b_env, layout)))
-            return rows, self._commit_epoch(
-                m, key, "merge", buckets, watermark, epoch_id,
-                {b: fs for b, fs in deltas.items() if int(b) not in touched},
-                next_seq if "next_delta_seq" in m else None,
-            )
-        finally:
-            if persisted:
-                batch.unpersist()
-            if stage_dir:
-                shutil.rmtree(stage_dir, ignore_errors=True)
+        # pending MoR deltas for the touched buckets fold into this
+        # rewrite (mode interleave safety): their rows join the target
+        # side carrying their commit seq, so equal-lsn redeliveries still
+        # resolve toward the later epoch, and the new manifest drops the
+        # absorbed delta references.
+        deltas: dict[str, list[str]] = m.get("deltas") or {}
+        target = self._with_deltas(
+            [p for b in touched for p in m["buckets"].get(str(b), [])],
+            [p for b in touched for p in deltas.get(str(b), [])],
+        )
+        # version-guarded LWW against the target (module docstring):
+        # stored rows and batch rows become one envelope stream and the
+        # max-lsn row per PK wins; deletes win as tombstone rows. No
+        # broadcast anywhere: driver-side build cost would cap scaling
+        # at replay batch sizes. _rdl_src is the equal-lsn tie rank: base
+        # rows 0, delta rows their commit seq, this batch next_seq
+        # (> every stored seq).
+        next_seq = int(m.get("next_delta_seq", 1))
+        t_env = target.select(*cols.target)
+        b_env = batch.select(
+            *self._envelope(epoch_id, cols),
+            F.lit(next_seq).cast("long").alias("_rdl_src"),
+        )
+        buckets = {
+            b: files for b, files in m["buckets"].items() if int(b) not in touched
+        }
+        buckets.update(self._write_buckets(self._lww_merge_plan(t_env, b_env, layout)))
+        return rows, self._commit_epoch(
+            m, key, "merge", buckets, watermark, epoch_id,
+            {b: fs for b, fs in deltas.items() if int(b) not in touched},
+            next_seq if "next_delta_seq" in m else None,
+        )
 
     def compact_deltas(self, max_buckets: int | None = None) -> int:
         """Fold pending MoR delta files back into their buckets' base files

@@ -503,7 +503,7 @@ def is_type_widening(old_type: str, new_type: str) -> bool:
 class CompatibilityError(ValueError):
     """A spec evolution violates the table's declared ``compat_level``.
 
-    Raised by DataLoadManager.run BEFORE any load work — the table state,
+    Raised by ``gate_compat`` BEFORE any load work — the table state,
     watermark and epochs are untouched, so fixing the spec (or lowering
     the level, a deliberate governance act) and rerunning applies cleanly.
     The registry analog: a producer's schema registration rejected by the
@@ -517,6 +517,19 @@ class CompatibilityError(ValueError):
             f"spec {spec_name!r} violates compat_level={level!r}: "
             + "; ".join(violations)
         )
+
+
+def gate_compat(spec: IngestSpec, stored: IngestSpec | None) -> None:
+    """The one compatibility gate, run before any load work by
+    ``DataLoadManager.run`` and ``StreamingIngest.start``: raise
+    ``CompatibilityError`` when the evolution from the table's ``stored``
+    spec (None before the first load) to the live ``spec`` violates
+    ``spec.compat_level``."""
+    if stored is None or stored.checksum() == spec.checksum():
+        return
+    violations = spec.check_compat(stored)
+    if violations:
+        raise CompatibilityError(spec.name, spec.compat_level, violations)
 
 
 @dataclass

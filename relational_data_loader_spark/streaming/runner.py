@@ -16,7 +16,9 @@ Exactly-once story (north_star):
   data commit, so a replayed epoch is a detected no-op (merge → skipped);
 - together: at-least-once delivery × idempotent commit = exactly-once apply.
   The two pieces of state (checkpoint dir, target manifest) must be kept or
-  deleted together — same contract as Delta/Iceberg + checkpoint.
+  deleted together — same contract as Delta/Iceberg + checkpoint. ``start``
+  refuses a fresh checkpoint on a table an earlier stream fed: its batch
+  ids would restart at 0 and collide with the applied ``stream:<id>`` keys.
 - no stateful operator: a redelivered segment rides the merge, whose
   version guard makes each stale row a no-op.
 
@@ -28,13 +30,16 @@ sink's version-guarded merge — see sinks/snapshot.py "out-of-order safety".
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from relational_data_loader_spark.plans.manager import DataLoadManager
-from relational_data_loader_spark.spec import IngestSpec
+from relational_data_loader_spark.session import CacheScope
+from relational_data_loader_spark.spec import IngestSpec, gate_compat
 
 # rows one change-log file is assumed to hold, to turn spec.batch_size (rows)
 # into the file source's maxFilesPerTrigger (files)
@@ -101,6 +106,7 @@ class StreamingIngest:
 
     def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         spec = self.spec
+        epoch_id = int(epoch_id)
         table = self.mgr.table(spec)
         if not table.exists():
             # bootstrap an empty snapshot so merge has a base (the reference
@@ -115,32 +121,45 @@ class StreamingIngest:
                 watermark=-1,
                 namespace="stream",
             )
-        # drop only events the full-refresh BASELINE already covers — a
-        # baseline snapshot subsumes its whole lsn range. Events above it are
-        # NEVER dropped here: the file source orders micro-batches by file
-        # mtime, not lsn, so around a kill/resume a later-lsn segment can
-        # arrive first; the sink's version-guarded merge (sinks/snapshot.py)
-        # applies permuted segments correctly in any order. (Round-2 fix: a
-        # global max-watermark drop here silently lost permuted segments.)
-        batch_df = batch_df.filter(
-            F.col(spec.lsn_column) > F.lit(table.baseline_watermark())
-        )
-        # dead-letter split per micro-batch ("s<batchId>" DLQ dirs): the
-        # foreachBatch epoch_id is Structured Streaming's batchId, which is
-        # stable across a checkpoint-replayed micro-batch — the overwrite
-        # is idempotent exactly like the batch path's lsn-keyed dirs
-        if spec.on_cast_error == "quarantine":
-            batch_df, self.quarantined[int(epoch_id)] = self.mgr._quarantine_split(
-                spec, batch_df, int(epoch_id), prefix="s"
+        with CacheScope() as scope:
+            # the ingest path's one cache: a foreachBatch micro-batch cannot
+            # be read twice for free (each scan re-reads the source and
+            # counts toward numInputRows), so it is cached when it has two
+            # consumers — a copy-on-write merge (stats pass + write) or the
+            # dead-letter split (poison write + clean path). A merge-on-read
+            # merge reads it once, in its write, and takes no cache.
+            if spec.on_cast_error == "quarantine" or (
+                spec.merge_mode == "cow" and not spec.sink.startswith("iceberg://")
+            ):
+                batch_df = scope.cache(batch_df)
+            # drop only events the full-refresh BASELINE already covers — a
+            # baseline snapshot subsumes its whole lsn range. Events above it
+            # are NEVER dropped here: the file source orders micro-batches by
+            # file mtime, not lsn, so around a kill/resume a later-lsn
+            # segment can arrive first; the sink's version-guarded merge
+            # (sinks/snapshot.py) applies permuted segments correctly in any
+            # order. (Round-2 fix: a global max-watermark drop here silently
+            # lost permuted segments.)
+            batch_df = batch_df.filter(
+                F.col(spec.lsn_column) > F.lit(table.baseline_watermark())
             )
-        # "stream" namespace: Structured Streaming batchIds count 0,1,2,…
-        # while batch-manager epochs are log positions — an un-namespaced
-        # shared set would let a long-lived stream's batchId hit a committed
-        # batch LSN and silently drop that micro-batch
-        self.mgr.apply_epoch(
-            table, spec, self.mgr.project(spec, batch_df), int(epoch_id),
-            "stream", "stream_merge",
-        )
+            # dead-letter split per micro-batch ("s<batchId>" DLQ dirs): the
+            # foreachBatch epoch_id is Structured Streaming's batchId, which
+            # is stable across a checkpoint-replayed micro-batch — the
+            # overwrite is idempotent exactly like the batch path's
+            # lsn-keyed dirs
+            if spec.on_cast_error == "quarantine":
+                batch_df, self.quarantined[epoch_id] = self.mgr._quarantine_split(
+                    spec, batch_df, epoch_id, prefix="s"
+                )
+            # "stream" namespace: Structured Streaming batchIds count 0,1,2,…
+            # while batch-manager epochs are log positions — an un-namespaced
+            # shared set would let a long-lived stream's batchId hit a
+            # committed batch LSN and silently drop that micro-batch
+            self.mgr.apply_epoch(
+                table, spec, self.mgr.project(spec, batch_df), epoch_id,
+                "stream", "stream_merge",
+            )
 
     # -- stream lifecycle ------------------------------------------------------
 
@@ -162,23 +181,20 @@ class StreamingIngest:
         # registry gate at producer startup: a resident stream applies the
         # SAME spec for its whole life, so a forbidden evolution is caught
         # once here, before the first micro-batch, with the table untouched
-        # (spec.py check_compat; the batch path gates in manager.run)
-        if self.spec.compat_level != "none":
+        # (the batch path gates in manager.run). Level "none" gates nothing,
+        # and a checkpoint that planned a batch is not fresh, so a resumed
+        # stream under "none" reads no manifest here.
+        offsets = os.path.join(self.checkpoint_dir, "offsets")
+        fresh = not os.path.isdir(offsets) or all(
+            f.startswith(".") for f in os.listdir(offsets)
+        )
+        if self.spec.compat_level != "none" or fresh:
             table = self.mgr.table(self.spec)
-            stored_json = table.stored_spec_json() if table.exists() else None
-            if stored_json is not None:
-                from relational_data_loader_spark.spec import (
-                    CompatibilityError,
-                    IngestSpec,
-                )
-
-                old = IngestSpec.from_json(stored_json)
-                if old.checksum() != self.spec.checksum():
-                    violations = self.spec.check_compat(old)
-                    if violations:
-                        raise CompatibilityError(
-                            self.spec.name, self.spec.compat_level, violations
-                        )
+            if table.exists():
+                stored = table.stored_spec_json()
+                gate_compat(self.spec, IngestSpec.from_json(stored) if stored else None)
+                if fresh:
+                    self._refuse_fresh_checkpoint(table)
         scheme, _, path = self.spec.source.partition("://")
         if scheme == "kafka":
             # Debezium topic tail (sources/kafka.py, jar-gated);
@@ -237,6 +253,30 @@ class StreamingIngest:
         if available_now:
             writer = writer.trigger(availableNow=True)
         return writer.start()
+
+    def _refuse_fresh_checkpoint(self, table) -> None:
+        """Refuse a fresh checkpoint (one that never planned a micro-batch:
+        nothing in ``offsets/``) on a table an earlier stream fed. Its batch ids restart at 0, so every id the
+        table already applied as ``stream:<id>`` would be skipped as a
+        replay and its rows silently lost. The bootstrap key ``stream:-1``
+        does not count, and neither does a checkpoint that planned a batch
+        (``offsets/``) without committing it: Spark replays that batch with
+        the same id, which the sink must skip."""
+        fed = [
+            k for k in table.applied_epochs()
+            if k.startswith("stream:") and int(k[len("stream:"):]) >= 0
+        ]
+        if fed:
+            raise ValueError(
+                f"spec {self.spec.name!r}: checkpoint {self.checkpoint_dir!r} "
+                f"has no micro-batch, but the table already applied {len(fed)} "
+                "stream micro-batches from another checkpoint; their batch "
+                "ids would repeat and be skipped as replays. Resume the old "
+                "checkpoint, or recover with a forced full refresh before "
+                "this stream starts (CLI --force-full-refresh, or "
+                "DataLoadManager.run(spec, force_full=True)): it resets the "
+                "applied stream batches"
+            )
 
     def run_until_caught_up(self) -> None:
         """Process everything currently in the log, then stop (poll-style run)."""

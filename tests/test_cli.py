@@ -89,6 +89,32 @@ def test_stream_once_drains_and_exits(setup, capsys, tmp_path):
     assert os.path.isdir(os.path.join(ckpt, "transcripts"))
 
 
+def test_stream_fresh_checkpoint_refused_until_forced_refresh(setup, capsys, tmp_path):
+    """A stream started with a new --checkpoint on a table an earlier stream
+    fed is refused (its batch ids would repeat applied ones and be skipped);
+    --force-full-refresh with the new checkpoint recovers the whole log."""
+    from relational_data_loader_spark.plans.manager import DataLoadManager
+    from relational_data_loader_spark.session import get_spark
+
+    log, logdir, specdir, wh, spec = setup
+    cut = pc.max(log["lsn"]).as_py() // 2
+    write_log(log, logdir, lsn_upto=cut)
+    stream = ["--warehouse", wh, "--specs", specdir, "--stream", "--once"]
+    assert main(stream + ["--checkpoint", str(tmp_path / "ckpt1")]) == 0
+    write_log(log, logdir, lsn_from=cut)
+    table = DataLoadManager(get_spark("rdl-tests"), wh).table(spec)
+    version = table.current_manifest()["version"]
+
+    fresh = stream + ["--checkpoint", str(tmp_path / "ckpt2")]
+    with pytest.raises(ValueError, match="force-full-refresh"):
+        main(fresh)
+    assert table.current_manifest()["version"] == version
+    assert main(fresh + ["--force-full-refresh", spec.name]) == 0
+    capsys.readouterr()
+    got = spark_sorted_pdf(table.read())
+    assert_tables_equal(got, duck_final_state(f"{logdir}/*.parquet"))
+
+
 def test_no_specs_is_an_error(tmp_path, capsys):
     empty = tmp_path / "none"
     empty.mkdir()

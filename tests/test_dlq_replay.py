@@ -8,6 +8,8 @@ rows that still fail stay retained.
 
 import os
 
+import pytest
+
 from relational_data_loader_spark.plans.manager import DataLoadManager
 from relational_data_loader_spark.spec import ColumnSpec, IngestSpec
 
@@ -182,9 +184,9 @@ def test_streaming_csv_quarantine_and_replay(spark, tmp_path):
     assert _state(mgr, wide) == {1: 9999999999, 2: 21, 3: 31}
 
 
-def test_streaming_quarantine_counts_per_micro_batch(spark, tmp_path):
-    """Each micro-batch records the rows its dead-letter split detoured,
-    keyed by batch id; over the whole log they sum to its poison rows."""
+def _quarantine_stream(spark, tmp_path, merge_mode="cow"):
+    """Stream ``LOG`` from 3 csv files, one micro-batch per file, under the
+    quarantine spec; returns the ingest and its finished query."""
     from relational_data_loader_spark.streaming.runner import StreamingIngest
 
     csvdir = str(tmp_path / "csvlog")
@@ -201,14 +203,32 @@ def test_streaming_quarantine_counts_per_micro_batch(spark, tmp_path):
         columns=_spec(tmp_path).columns,
         target_buckets=4,
         on_cast_error="quarantine",
+        merge_mode=merge_mode,
     )
     ing = StreamingIngest(
         DataLoadManager(spark, str(tmp_path / "wh")), spec,
         str(tmp_path / "ckpt"), max_files_per_trigger=1,
     )
-    ing.run_until_caught_up()
+    q = ing.start(available_now=True)
+    q.awaitTermination()
+    return ing, q
+
+
+def test_streaming_quarantine_counts_per_micro_batch(spark, tmp_path):
+    """Each micro-batch records the rows its dead-letter split detoured,
+    keyed by batch id; over the whole log they sum to its poison rows."""
+    ing, _ = _quarantine_stream(spark, tmp_path)
     assert len(ing.quarantined) == 3  # one micro-batch per csv file
     assert sum(ing.quarantined.values()) == 4  # lsn 3, 5, 9, 10
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_streaming_quarantine_reads_each_micro_batch_once(spark, tmp_path, mode):
+    """The dead-letter split has two consumers of a micro-batch (the poison
+    write and the clean path), so the stream caches it: summed over the
+    triggers, numInputRows counts every log row once."""
+    _, q = _quarantine_stream(spark, tmp_path, mode)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(LOG)
 
 
 def test_streaming_quarantine_rejects_non_csv(spark, tmp_path):

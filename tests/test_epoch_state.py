@@ -13,10 +13,11 @@ from pyspark.sql import functions as F
 from relational_data_loader_spark.fixtures import generate_change_log
 from relational_data_loader_spark.operators.watermark import bucket_expr
 from relational_data_loader_spark.plans.manager import DataLoadManager
+from relational_data_loader_spark.sinks.snapshot import SnapshotTable
 from relational_data_loader_spark.spec import transcripts_spec
 from relational_data_loader_spark.streaming.runner import StreamingIngest
 from tests.test_dlq_replay import LOG, _spec, _write_log
-from tests.util import duck_final_state, write_log
+from tests.util import cache_is_empty, duck_final_state, write_log
 
 N_BUCKETS = 8
 
@@ -81,6 +82,31 @@ def test_full_refresh_then_chunked_cow_merges(spark, warehouse, tmp_path):
     n_before = mgr.state.read().num_rows
     assert mgr.run(spec).skipped
     assert mgr.state.read().num_rows == n_before
+
+
+def test_cow_merge_caches_nothing(spark, warehouse, tmp_path, monkeypatch):
+    """A copy-on-write poll's stats pass and write each read the chunk from
+    its files: the session's cache is empty while the merge writes."""
+    tbl, logdir, max_lsn = _log(tmp_path, n_events=1500)
+    cut = max_lsn // 2
+    write_log(tbl, logdir, lsn_upto=cut)
+    spec = transcripts_spec(source=f"parquet://{logdir}", target_buckets=N_BUCKETS)
+    mgr = DataLoadManager(spark, warehouse)
+    mgr.run(spec)
+    write_log(tbl, logdir, lsn_from=cut)
+
+    empty_at_write = []
+    write = SnapshotTable._write_buckets
+
+    def recording(self, clustered):
+        empty_at_write.append(cache_is_empty(spark))
+        return write(self, clustered)
+
+    monkeypatch.setattr(SnapshotTable, "_write_buckets", recording)
+    r2 = mgr.run(spec)
+    assert r2.decision.kind == "incremental" and not r2.skipped
+    assert empty_at_write == [True]
+    assert mgr.table(spec).current_manifest()["kind"] == "merge"
 
 
 def test_mor_merge(spark, warehouse, tmp_path):

@@ -83,8 +83,9 @@ def test_micro_batches_read_each_event_once(spark, warehouse, tmp_path, log_tbl,
     """Each scan of the foreachBatch source counts toward numInputRows, so
     the sum equals the log's rows only if every micro-batch is read once.
     A copy-on-write merge has two consumers of the batch (its stats pass
-    and its write) and persists it so the source is scanned once; a
-    merge-on-read merge's one consumer is its write, with no persist."""
+    and its write), so ``apply_batch`` caches the micro-batch and the
+    source is scanned once; a merge-on-read merge's one consumer is its
+    write, and the micro-batch is not cached."""
     logdir = str(tmp_path / "log")
     write_log(log_tbl, logdir, n_files=4)
     spec = transcripts_spec(
@@ -273,3 +274,30 @@ def test_redelivered_and_stale_segments_match_oracle(
             "speaker AS role", "text", "tool", "ts",
         )
     assert_tables_equal(spark_sorted_pdf(got), duck_final_state(f"{logdir}/*.parquet"))
+
+
+def test_planned_but_uncommitted_first_batch_resumes(spark, warehouse, tmp_path, log_tbl):
+    """A crash after the sink committed batch 0 but before Spark logged its
+    commit leaves a checkpoint with an offset and no commit. Spark replays
+    batch 0 under the same id, which the sink skips: that checkpoint is
+    not fresh and must resume."""
+    logdir = str(tmp_path / "log")
+    write_log(log_tbl, logdir, n_files=2)
+    spec = transcripts_spec(source=f"parquet://{logdir}", target_buckets=8)
+    mgr = DataLoadManager(spark, warehouse)
+    ckpt = str(tmp_path / "ckpt")
+    StreamingIngest(mgr, spec, ckpt, max_files_per_trigger=2).run_until_caught_up()
+    assert "stream:0" in mgr.table(spec).applied_epochs()
+    version = mgr.table(spec).current_manifest()["version"]
+    commits = os.path.join(ckpt, "commits")
+    for f in os.listdir(commits):
+        os.remove(os.path.join(commits, f))
+
+    q = StreamingIngest(mgr, spec, ckpt, max_files_per_trigger=2).start()
+    q.awaitTermination()
+    # batch 0 ran again, and the sink skipped it as applied
+    assert [p["batchId"] for p in q.recentProgress] == [0]
+    assert mgr.table(spec).current_manifest()["version"] == version
+    assert_tables_equal(
+        spark_sorted_pdf(mgr.table(spec).read()), duck_final_state(f"{logdir}/*.parquet")
+    )
