@@ -570,9 +570,19 @@ def main(argv: list[str] | None = None) -> int:
             )
             if force:
                 mgr.run(spec, force_full=True)
-            queries.append(
-                StreamingIngest(mgr, spec, ckpt).start(available_now=args.once)
-            )
+            try:
+                queries.append(
+                    StreamingIngest(mgr, spec, ckpt).start(available_now=args.once)
+                )
+            except ValueError as e:
+                # refused at startup (a forbidden spec change, a fresh
+                # checkpoint on a table another stream fed): the table is
+                # untouched — report like a rejected epoch and start the
+                # other specs' streams
+                print(json.dumps({"spec": spec.name, "refused": True, "error": str(e)}))
+                rejected = True
+                failed.add(spec.name)
+                continue
             print(f"[rdl-spark] streaming {spec.name} (checkpoint={ckpt})")
         else:
             from relational_data_loader_spark.operators.quality import (

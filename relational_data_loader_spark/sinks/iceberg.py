@@ -373,12 +373,13 @@ class IcebergTable:
         )
 
     def _snapshot_meta(self) -> list[tuple[str | None, int | None, int | None]]:
-        """(epoch_key, watermark, baseline) per committed snapshot, cached."""
+        """(epoch_key, watermark, baseline) per committed snapshot, in commit
+        order, cached."""
         if self._meta_cache is None:
             rows = self.spark.sql(
                 f"SELECT summary['{_STAMP_KEY}'] AS stamp, "
                 f"summary['{_BASELINE_KEY}'] AS baseline "
-                f"FROM {self.identifier}.snapshots"
+                f"FROM {self.identifier}.snapshots ORDER BY committed_at"
             ).collect()
             meta = []
             for r in rows:
@@ -394,8 +395,19 @@ class IcebergTable:
             self._meta_cache.append((key, wm, baseline))
 
     def applied_epochs(self) -> set[str]:
-        """Namespaced epoch keys of every committed snapshot (replay guard)."""
-        return {key for key, _, _ in self._snapshot_meta() if key is not None}
+        """Namespaced epoch keys committed since the last full refresh
+        (replay guard). CREATE OR REPLACE keeps the replaced table's
+        snapshots listed, so the keys before the latest baseline-stamped
+        snapshot are dropped here, as the snapshot sink's refresh drops
+        them from its manifest: a stream restarted on a fresh checkpoint
+        after a forced refresh reuses batch ids from 0 and must not have
+        them skipped. Forgetting a key is always safe (a re-applied epoch
+        is a no-op under the sequence guard, ``expire_snapshots``)."""
+        meta = self._snapshot_meta()
+        start = max(
+            (i for i, (_, _, b) in enumerate(meta) if b is not None), default=0
+        )
+        return {key for key, _, _ in meta[start:] if key is not None}
 
     def watermark(self) -> int:
         return max(
@@ -427,6 +439,13 @@ class IcebergTable:
             ).collect()
             self._props_cache = {r["key"]: r["value"] for r in rows}
         return self._props_cache
+
+    def merge_reads_batch_twice(self) -> bool:
+        """``merge`` persists its netted batch for its two consumers (the
+        stats row and the MERGE source), so its caller never has to cache
+        the batch it passes in (``SnapshotTable.merge_reads_batch_twice``
+        twin)."""
+        return False
 
     def stored_checksum(self) -> str | None:
         return self._table_properties().get(_PROP_CHECKSUM)

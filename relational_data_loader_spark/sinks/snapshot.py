@@ -1430,6 +1430,13 @@ class SnapshotTable:
         m = self.current_manifest()
         return _normalize_epoch_keys(m.get("applied_epochs", [])) if m else set()
 
+    def merge_reads_batch_twice(self) -> bool:
+        """Whether ``merge`` reads its batch twice: the copy-on-write
+        epoch's stats pass and its write do (``_merge_cow``), the
+        merge-on-read epoch's one write does not. A caller whose batch
+        cannot be re-read for free caches it when this holds."""
+        return self.spec.merge_mode != "mor"
+
     def stored_checksum(self) -> str | None:
         """Checksum of the spec the table was committed with (sink-generic
         surface — the Iceberg twin serves it from table properties)."""
@@ -1682,10 +1689,11 @@ class SnapshotTable:
         """The copy-on-write epoch: a stats pass over the batch, then the
         touched buckets' rewrite. The pass and the merge window each read
         the batch; nothing is cached here. A file-sourced chunk is cheap to
-        scan twice, and the one input that is not, a streaming
-        micro-batch, arrives cached by its caller
-        (``StreamingIngest.apply_batch``). Returns the epoch's rows and the
-        committed manifest."""
+        scan twice, and a streaming micro-batch, which is not, arrives
+        cached by its caller (``StreamingIngest.apply_batch``). A chunk of a
+        live source (``jdbc://``) is queried twice: should the write reach a
+        bucket the pass did not, the epoch raises before it commits.
+        Returns the epoch's rows and the committed manifest."""
         spec = self.spec
         cols = self._epoch_columns(layout)
         is_del = F.col(spec.op_column) == F.lit(spec.delete_op)
@@ -1733,7 +1741,20 @@ class SnapshotTable:
         buckets = {
             b: files for b, files in m["buckets"].items() if int(b) not in touched
         }
-        buckets.update(self._write_buckets(self._lww_merge_plan(t_env, b_env, layout)))
+        written = self._write_buckets(self._lww_merge_plan(t_env, b_env, layout))
+        stray = sorted(int(b) for b in written if int(b) not in touched)
+        if stray:
+            # the write read rows in buckets the stats pass did not see: the
+            # batch's source changed between its two reads (a live jdbc://
+            # table). Those buckets' stored rows were never read, so the
+            # commit would replace them with the batch rows alone; nothing is
+            # committed and the files written become orphans for vacuum.
+            raise RuntimeError(
+                f"target {spec.name!r}, epoch {key}: the batch changed between "
+                f"its stats pass and its write (buckets {stray} appeared); "
+                "nothing was committed, rerun the epoch"
+            )
+        buckets.update(written)
         return rows, self._commit_epoch(
             m, key, "merge", buckets, watermark, epoch_id,
             {b: fs for b, fs in deltas.items() if int(b) not in touched},

@@ -30,8 +30,6 @@ sink's version-guarded merge — see sinks/snapshot.py "out-of-order safety".
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -125,12 +123,10 @@ class StreamingIngest:
             # the ingest path's one cache: a foreachBatch micro-batch cannot
             # be read twice for free (each scan re-reads the source and
             # counts toward numInputRows), so it is cached when it has two
-            # consumers — a copy-on-write merge (stats pass + write) or the
-            # dead-letter split (poison write + clean path). A merge-on-read
-            # merge reads it once, in its write, and takes no cache.
-            if spec.on_cast_error == "quarantine" or (
-                spec.merge_mode == "cow" and not spec.sink.startswith("iceberg://")
-            ):
+            # consumers — the dead-letter split (poison write + clean path)
+            # or a sink merge that reads its batch twice (the sink says so:
+            # the snapshot sink's copy-on-write stats pass + write)
+            if spec.on_cast_error == "quarantine" or table.merge_reads_batch_twice():
                 batch_df = scope.cache(batch_df)
             # drop only events the full-refresh BASELINE already covers — a
             # baseline snapshot subsumes its whole lsn range. Events above it
@@ -184,10 +180,7 @@ class StreamingIngest:
         # (the batch path gates in manager.run). Level "none" gates nothing,
         # and a checkpoint that planned a batch is not fresh, so a resumed
         # stream under "none" reads no manifest here.
-        offsets = os.path.join(self.checkpoint_dir, "offsets")
-        fresh = not os.path.isdir(offsets) or all(
-            f.startswith(".") for f in os.listdir(offsets)
-        )
+        fresh = not self._checkpoint_planned_a_batch()
         if self.spec.compat_level != "none" or fresh:
             table = self.mgr.table(self.spec)
             if table.exists():
@@ -254,14 +247,31 @@ class StreamingIngest:
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
+    def _checkpoint_planned_a_batch(self) -> bool:
+        """Whether ``<checkpoint>/offsets/`` holds a planned micro-batch.
+        Listed through the checkpoint's Hadoop FileSystem, as Spark itself
+        resolves ``checkpointLocation``, so an ``s3a://``, ``hdfs://`` or
+        ``file:`` checkpoint is read where Spark wrote it (a dot file, such
+        as a ``.crc`` sidecar, is not a batch)."""
+        spark = self.mgr.spark
+        path = spark._jvm.org.apache.hadoop.fs.Path(self.checkpoint_dir, "offsets")
+        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not fs.exists(path):
+            return False
+        return any(
+            not st.getPath().getName().startswith(".") for st in fs.listStatus(path)
+        )
+
     def _refuse_fresh_checkpoint(self, table) -> None:
         """Refuse a fresh checkpoint (one that never planned a micro-batch:
-        nothing in ``offsets/``) on a table an earlier stream fed. Its batch ids restart at 0, so every id the
-        table already applied as ``stream:<id>`` would be skipped as a
-        replay and its rows silently lost. The bootstrap key ``stream:-1``
-        does not count, and neither does a checkpoint that planned a batch
-        (``offsets/``) without committing it: Spark replays that batch with
-        the same id, which the sink must skip."""
+        nothing in ``offsets/``) on a table an earlier stream fed. Its batch
+        ids restart at 0, so every id the table already applied as
+        ``stream:<id>`` would be skipped as a replay and its rows silently
+        lost. The bootstrap key ``stream:-1`` does not count, and neither
+        does a checkpoint that planned a batch (``offsets/``) without
+        committing it: Spark replays that batch with the same id, which the
+        sink must skip. A full refresh clears the applied keys on both
+        sinks, which is why it is the named recovery."""
         fed = [
             k for k in table.applied_epochs()
             if k.startswith("stream:") and int(k[len("stream:"):]) >= 0

@@ -91,7 +91,8 @@ def test_stream_once_drains_and_exits(setup, capsys, tmp_path):
 
 def test_stream_fresh_checkpoint_refused_until_forced_refresh(setup, capsys, tmp_path):
     """A stream started with a new --checkpoint on a table an earlier stream
-    fed is refused (its batch ids would repeat applied ones and be skipped);
+    fed is refused (its batch ids would repeat applied ones and be skipped):
+    a JSON line and rc 3, and the other specs' streams still start.
     --force-full-refresh with the new checkpoint recovers the whole log."""
     from relational_data_loader_spark.plans.manager import DataLoadManager
     from relational_data_loader_spark.session import get_spark
@@ -102,17 +103,30 @@ def test_stream_fresh_checkpoint_refused_until_forced_refresh(setup, capsys, tmp
     stream = ["--warehouse", wh, "--specs", specdir, "--stream", "--once"]
     assert main(stream + ["--checkpoint", str(tmp_path / "ckpt1")]) == 0
     write_log(log, logdir, lsn_from=cut)
-    table = DataLoadManager(get_spark("rdl-tests"), wh).table(spec)
+    mgr = DataLoadManager(get_spark("rdl-tests"), wh)
+    table = mgr.table(spec)
     version = table.current_manifest()["version"]
+    # a spec no stream fed yet: it must start although the other is refused
+    other = transcripts_spec(
+        source=f"parquet://{logdir}", target_buckets=8, name="transcripts_b"
+    )
+    (tmp_path / "specs" / "transcripts_b.json").write_text(other.to_json())
+    capsys.readouterr()
 
     fresh = stream + ["--checkpoint", str(tmp_path / "ckpt2")]
-    with pytest.raises(ValueError, match="force-full-refresh"):
-        main(fresh)
+    assert main(fresh) == 3
+    out = capsys.readouterr().out
+    (refused,) = [json.loads(l) for l in out.splitlines() if l.startswith("{")]
+    assert refused["spec"] == "transcripts" and refused["refused"] is True
+    assert "force-full-refresh" in refused["error"]
+    assert "streaming transcripts_b" in out
     assert table.current_manifest()["version"] == version
+    want = duck_final_state(f"{logdir}/*.parquet")
+    assert_tables_equal(spark_sorted_pdf(mgr.table(other).read()), want)
+
     assert main(fresh + ["--force-full-refresh", spec.name]) == 0
     capsys.readouterr()
-    got = spark_sorted_pdf(table.read())
-    assert_tables_equal(got, duck_final_state(f"{logdir}/*.parquet"))
+    assert_tables_equal(spark_sorted_pdf(table.read()), want)
 
 
 def test_no_specs_is_an_error(tmp_path, capsys):

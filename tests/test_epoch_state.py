@@ -109,6 +109,35 @@ def test_cow_merge_caches_nothing(spark, warehouse, tmp_path, monkeypatch):
     assert mgr.table(spec).current_manifest()["kind"] == "merge"
 
 
+def test_cow_merge_refuses_a_bucket_its_stats_pass_missed(
+    spark, warehouse, tmp_path, monkeypatch
+):
+    """The CoW pass and write each read the chunk. Should the write reach a
+    bucket the pass did not (a live source changed in between), that
+    bucket's stored rows were never read, so the epoch raises and commits
+    nothing."""
+    import pytest
+
+    tbl, logdir, max_lsn = _log(tmp_path, n_events=1500)
+    cut = max_lsn // 2
+    write_log(tbl, logdir, lsn_upto=cut)
+    spec = transcripts_spec(source=f"parquet://{logdir}", target_buckets=N_BUCKETS)
+    mgr = DataLoadManager(spark, warehouse)
+    mgr.run(spec)
+    write_log(tbl, logdir, lsn_from=cut)
+    version = mgr.table(spec).current_manifest()["version"]
+
+    write = SnapshotTable._write_buckets
+
+    def with_stray_bucket(self, clustered):
+        return {**write(self, clustered), str(N_BUCKETS): []}
+
+    monkeypatch.setattr(SnapshotTable, "_write_buckets", with_stray_bucket)
+    with pytest.raises(RuntimeError, match="changed between its stats pass"):
+        mgr.run(spec)
+    assert mgr.table(spec).current_manifest()["version"] == version
+
+
 def test_mor_merge(spark, warehouse, tmp_path):
     tbl, logdir, max_lsn = _log(tmp_path, n_events=1500)
     cut = max_lsn // 2

@@ -523,3 +523,21 @@ def test_zorder_and_rollback_sql():
     )
     # rollback invalidates the replay-guard cache (stamps changed)
     assert t._meta_cache is None
+
+
+def test_full_refresh_resets_the_replay_guard():
+    """RTAS keeps the replaced table's snapshots listed; the guard counts
+    only the keys from the latest baseline on, so a stream restarted on a
+    fresh checkpoint after a forced refresh reapplies batch ids from 0."""
+    t = _table(snapshots=[
+        (_encode_stamp("stream:-1", -1), "-1"),
+        (_encode_stamp("stream:0", 40), None),
+        (_encode_stamp("stream:1", 80), None),
+    ])
+    assert t.applied_epochs() == {"stream:-1", "stream:0", "stream:1"}
+    t.full_refresh(_FakeDF(), epoch_id=100, watermark=100)
+    assert t.applied_epochs() == {"batch:100"}
+    t._meta_cache = None  # a fresh reader sees the same guard
+    assert t.applied_epochs() == {"batch:100"}
+    assert t.merge(_FakeDF(mx=120), epoch_id=0, namespace="stream", netted=True).skipped is False
+    assert t.applied_epochs() == {"batch:100", "stream:0"}

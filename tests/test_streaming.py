@@ -301,3 +301,27 @@ def test_planned_but_uncommitted_first_batch_resumes(spark, warehouse, tmp_path,
     assert_tables_equal(
         spark_sorted_pdf(mgr.table(spec).read()), duck_final_state(f"{logdir}/*.parquet")
     )
+
+
+def test_file_uri_checkpoint_resumes_and_a_fresh_one_is_refused(
+    spark, warehouse, tmp_path, log_tbl
+):
+    """Spark takes any Hadoop URI as ``checkpointLocation``, and ``start``
+    reads the checkpoint through the same FileSystem: a stream on a
+    ``file:`` checkpoint resumes, and a new ``file:`` checkpoint on the
+    table it fed is refused."""
+    logdir = str(tmp_path / "log")
+    cut = pc.max(log_tbl["lsn"]).as_py() // 2
+    write_log(log_tbl, logdir, lsn_upto=cut)
+    spec = transcripts_spec(source=f"parquet://{logdir}", target_buckets=8)
+    mgr = DataLoadManager(spark, warehouse)
+    ckpt = f"file://{tmp_path}/ckpt"
+    StreamingIngest(mgr, spec, ckpt, max_files_per_trigger=2).run_until_caught_up()
+    write_log(log_tbl, logdir, lsn_from=cut)
+
+    StreamingIngest(mgr, spec, ckpt, max_files_per_trigger=2).run_until_caught_up()
+    assert_tables_equal(
+        spark_sorted_pdf(mgr.table(spec).read()), duck_final_state(f"{logdir}/*.parquet")
+    )
+    with pytest.raises(ValueError, match="force-full-refresh"):
+        StreamingIngest(mgr, spec, f"file://{tmp_path}/ckpt2").start()
